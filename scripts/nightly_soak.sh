@@ -13,7 +13,7 @@
 #           (bench_out.json) is copied to SOAK_NIGHTLY_r<round>.json,
 #           the committed artifact-of-record convention.
 # Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-#      SPARK_GRAFT_CPUS (default 8).
+#      SPARK_GRAFT_CPUS (default: the machine's core count).
 set -e
 cd "$(dirname "$0")/.."
 ROUND="${1:-}"
@@ -21,7 +21,6 @@ SPARK_GRAFT_SOAK_ONLY=1 \
 SPARK_GRAFT_SOAK_CYCLES=7 \
 SPARK_GRAFT_SOAK_CRASH_DRILLS=2 \
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
   scripts/run_class.sh graft.Bench
 if [ -n "$ROUND" ]; then
   cp bench_out.json "SOAK_NIGHTLY_r${ROUND}.json"

@@ -24,7 +24,8 @@ object Explain {
     val canon = canonFirst || args.lift(1).contains("--canon")
     val rest = args.drop(if (canonFirst) 1 else if (canon) 2 else 1).toSeq
     val names = if (rest.nonEmpty) rest else Bench.headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

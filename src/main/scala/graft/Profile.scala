@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 /** Per-job/stage wall-time profiler for one registered query — the
   * measurement companion to graft.Explain (which shows plan SHAPE, not
   * where the seconds go). Usage:
-  *   SPARK_GRAFT_CPUS=32 scripts/run_class.sh graft.Profile <sfDir> <query> [reps]
+  *   scripts/run_class.sh graft.Profile <sfDir> <query> [reps]
   * Runs the query `reps` times through the noop sink (first rep warms
   * codegen/page cache like the bench), then prints, for the LAST rep,
   * every Spark job with its wall ms and every stage with wall ms, task
@@ -18,7 +18,8 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val name = args.lift(1).getOrElse("q01_pricing_summary")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -16,7 +16,8 @@ object Sql {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Sql <sfDir> <sql | @file> …")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1407,24 +1407,16 @@ class CatalogSpec extends GraftSuite {
     sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
   }
 
-  test("conc4Verdict: contention qualifies bound-only failures, nothing else") {
-    // clean → true (contended or not: a clean run needs no acquittal)
-    assert(Bench.conc4Verdict(true, 0, Seq.empty, false) ==
-      (("true", "null")))
-    assert(Bench.conc4Verdict(true, 0, Seq.empty, true) ==
-      (("true", "null")))
-    // MVCC/error failures are NEVER excused by a busy machine
-    assert(Bench.conc4Verdict(false, 0, Seq.empty, true) ==
-      (("false", "\"inconsistent_snapshot\"")))
-    assert(Bench.conc4Verdict(true, 2, Seq.empty, true) ==
-      (("false", "\"errors\"")))
-    // bound-only violations: contended → null/contended (the serial
-    // denominators were measured under load — the machine is indicted,
-    // machine-readably); uncontended → an honest false/p95_bound
+  test("conc4Verdict: hard failures outrank bound trips; a trip reads false") {
+    // clean → true
+    assert(Bench.conc4Verdict(true, 0, Seq.empty) == (("true", "null")))
+    // MVCC/error failures outrank everything, bound trips included
     val viol = Seq("a_high_cardinality:2.8x>2.5x")
-    assert(Bench.conc4Verdict(true, 0, viol, true) ==
-      (("null", "\"contended\"")))
-    assert(Bench.conc4Verdict(true, 0, viol, false) ==
+    assert(Bench.conc4Verdict(false, 0, viol) ==
+      (("false", "\"inconsistent_snapshot\"")))
+    assert(Bench.conc4Verdict(true, 2, viol) == (("false", "\"errors\"")))
+    // a bound trip is an honest false with the leg's own bound name
+    assert(Bench.conc4Verdict(true, 0, viol) ==
       (("false", "\"p95_bound\"")))
     // confirm re-leg intersection: only queries violating in BOTH
     // observations survive (ratio text differs run to run — the query
@@ -1434,22 +1426,16 @@ class CatalogSpec extends GraftSuite {
       Seq("a_high_cardinality:4.8x>4.0x", "o_topk:3.1x>2.5x")) ==
       Seq("a_high_cardinality:4.8x>4.0x"))
     assert(Bench.confirmedViolations(Seq("q01:3x>2.5x"), Seq.empty).isEmpty)
-    // round 13: the verdict family is uniform across legs — the same
-    // state machine emits the 2-user leg's p50_bound and the scaling
-    // leg's ratio_bound; contention qualification and hard-failure
-    // precedence are identical
-    assert(Bench.conc4Verdict(true, 0, viol, false, "p50_bound") ==
+    // the verdict family is uniform across legs: the 2-user leg's
+    // p50_bound and the scaling leg's ratio_bound
+    assert(Bench.conc4Verdict(true, 0, viol, "p50_bound") ==
       (("false", "\"p50_bound\"")))
-    assert(Bench.conc4Verdict(true, 0, viol, true, "p50_bound") ==
-      (("null", "\"contended\"")))
     val scalViol = Seq("x_dedup_chunks:9.2x>4.0x")
-    assert(Bench.conc4Verdict(true, 0, scalViol, false, "ratio_bound") ==
+    assert(Bench.conc4Verdict(true, 0, scalViol, "ratio_bound") ==
       (("false", "\"ratio_bound\"")))
-    assert(Bench.conc4Verdict(true, 0, scalViol, true, "ratio_bound") ==
-      (("null", "\"contended\"")))
-    // a scaling query that THREW is an engine failure no matter the
-    // machine state — errors outrank bound violations
-    assert(Bench.conc4Verdict(true, 1, scalViol, true, "ratio_bound") ==
+    // a scaling query that THREW is an engine failure — errors outrank
+    // bound violations
+    assert(Bench.conc4Verdict(true, 1, scalViol, "ratio_bound") ==
       (("false", "\"errors\"")))
   }
 
@@ -1467,179 +1453,10 @@ class CatalogSpec extends GraftSuite {
     assert(tiny.skipped.isEmpty, "has() must not record")
     assert(!tiny.allows("scaling", 480))
     assert(tiny.skipped == Seq("scaling"))
-    // 0 = unlimited (drills manage their own time)
+    // 0 = unlimited (a caller that manages its own time)
     val off = new Bench.WallBudget(0)
     assert(off.allows("all_sweep", 1e9))
     assert(off.skipped.isEmpty)
-  }
-
-  test("runContended: per-query instability needs windowed corroboration") {
-    import Bench.runContended
-    // direct machine evidence convicts alone, corroborated or not
-    assert(runContended(5.1, 0.9, 32, 0, true, false))
-    assert(runContended(0.1, 0.34, 32, 0, true, false))
-    // the r13-driver shape (round-14 directive #2): fastest windows
-    // ever, steal 0.78%, par_eff 0.89, every windowed sensor clean —
-    // two sub-second queries spreading on GC variance may no longer
-    // flip the whole artifact to contended
-    assert(!runContended(0.78, 0.89, 32, 2, true, false))
-    // the same instability WITH a windowed sensor corroborating — the
-    // genuinely co-loaded round-10 shape stays flagged
-    assert(runContended(0.78, 0.89, 32, 2, true, true))
-    // non-pristine run (probe decay / steal>1): a single unstable
-    // timing plus corroboration convicts; without corroboration not
-    assert(runContended(1.5, 0.8, 32, 1, false, true))
-    assert(!runContended(1.5, 0.8, 32, 1, false, false))
-    // pristine singleton instability stays a per-query annotation
-    // (round-10 rule), even corroborated
-    assert(!runContended(0.1, 0.9, 32, 1, true, true))
-    // nothing unstable, probes clean — never contended
-    assert(!runContended(0.1, 0.9, 32, 0, true, true))
-    // single-cpu runs never read par_eff
-    assert(!runContended(0.1, 0.1, 1, 0, true, false))
-  }
-
-  test("keepRetryWindow: probe health breaks an unstable-count tie") {
-    import Bench.keepRetryWindow
-    assert(keepRetryWindow(true, 3, 3, 500, 100)) // clean retry wins
-    assert(keepRetryWindow(false, 2, 1, 100, 500)) // fewer unstable wins
-    assert(!keepRetryWindow(false, 1, 2, 100, 500)) // more unstable loses
-    // ADVICE r13: a probe-decay-only retry leaves both unstable lists
-    // empty — the healthier exit probe decides (first decayed 40%,
-    // retry 16%: keep retry)
-    assert(keepRetryWindow(false, 0, 0, 300, 420))
-    assert(!keepRetryWindow(false, 0, 0, 420, 300))
-    assert(!keepRetryWindow(false, 0, 0, 300, 300)) // full tie: first
-  }
-
-  test("serial-inflation references follow the kept-window state") {
-    import Bench.{serialRefWalls, serialsInflated}
-    val headline = Map("q01" -> 0.2, "q06" -> 0.1, "j" -> 0.4)
-    val trailing = Map("q01" -> 0.5, "q06" -> 0.45)
-    // kept window clean → this run's headline walls are the reference
-    // (ADVICE r14: even when the retry FIRED, a clean kept window's
-    // walls are trustworthy and must not be discarded for medians)
-    assert(serialRefWalls(false, headline, trailing) == headline)
-    // kept window dirty → trailing same-plan bench medians override
-    // where available; headline fallback for queries with no history
-    // ("j"); nFactor 1.0 default leaves the medians unscaled
-    val refs = serialRefWalls(true, headline, trailing)
-    assert(refs == Map("q01" -> 0.5, "q06" -> 0.45, "j" -> 0.4))
-    // medians are re-expressed in THIS machine's seconds (ADVICE r14:
-    // a slow machine — nFactor 0.64 like r14's — runs honest serials
-    // ~1.5× the faster prior rounds' medians; the raw medians would
-    // spuriously fire the sensor). wall ∝ 1/speed → divide by factor.
-    val scaled = serialRefWalls(true, headline, trailing, 0.5)
-    assert(scaled("q01") == 1.0 && scaled("q06") == 0.9)
-    assert(scaled("j") == 0.4, "headline fallback is never rescaled")
-    // degenerate factor (≤0, probes all failed) leaves medians as-is
-    assert(serialRefWalls(true, headline, trailing, -1.0) == refs)
-    // two serials at ~2x a DIRTY headline would convict under headline
-    // references...
-    val serials = Map("q01" -> 0.42, "q06" -> 0.4)
-    assert(serialsInflated(serials, headline))
-    // ...but read clean against trailing medians from quiet rounds —
-    // the quiet loosening round-14 directive #3 closes (the sensor no
-    // longer inherits the dirty window's inflated trigger point)
-    assert(!serialsInflated(serials, refs))
-    // the absolute guard: sub-150 ms jitter never trips on ratio alone
-    assert(!serialsInflated(Map("a" -> 0.11, "b" -> 0.12),
-      Map("a" -> 0.05, "b" -> 0.05)))
-    // one inflated serial is GC, two are a burst
-    assert(!serialsInflated(Map("q01" -> 1.0), Map("q01" -> 0.2)))
-  }
-
-  test("stealBetween: per-leg co-load sensor math") {
-    import Bench.stealBetween
-    // 50 steal jiffies out of 1000 elapsed -> 5%
-    assert(math.abs(stealBetween((100L, 10000L), (150L, 11000L)) - 5.0)
-      < 1e-9)
-    assert(stealBetween((100L, 10000L), (100L, 11000L)) == 0.0)
-    // unreadable /proc/stat (both samples zero) -> 0, never NaN
-    assert(stealBetween((0L, 0L), (0L, 0L)) == 0.0)
-    // a REGRESSING steal counter (VM migration / counter reset) while
-    // total jiffies advance floors at 0 — never a negative percentage
-    // in the artifact (ADVICE r14)
-    assert(stealBetween((100L, 10000L), (40L, 11000L)) == 0.0)
-  }
-
-  test("normFactor: geomean of valid clamped ratios, 1.0 when none") {
-    import Bench.normFactor
-    assert(normFactor(Seq.empty) == 1.0)
-    assert(normFactor(Seq(-1.0, Double.NaN)) == 1.0) // probes failed
-    assert(math.abs(normFactor(Seq(2.0, 0.5)) - 1.0) < 1e-9)
-    assert(math.abs(normFactor(Seq(0.8)) - 0.8) < 1e-9)
-    // the clamp: one wildly-off probe cannot dominate the factor
-    assert(math.abs(normFactor(Seq(10.0)) - 2.0) < 1e-9)
-    assert(math.abs(normFactor(Seq(0.01)) - 0.5) < 1e-9)
-    // faster machine → factor > 1 → normalized wall reads HIGHER in
-    // yardstick-machine seconds (wall ∝ 1/speed)
-    assert(normFactor(Seq(1.2, 1.1)) > 1.0)
-  }
-
-  test("medianOf / spreadPct: median-of-3 probe basis and its spread") {
-    import Bench.{medianOf, spreadPct}
-    assert(medianOf(Seq(3.0, 1.0, 2.0)) == 2.0)
-    // invalid samples (failed probes) are dropped before the median
-    assert(medianOf(Seq(-1.0, 5.0, Double.NaN)) == 5.0)
-    assert(medianOf(Seq.empty) == -1.0)
-    assert(medianOf(Seq(-1.0, -1.0)) == -1.0)
-    // even count takes the lower-middle (consistent with the bench's
-    // p50 convention)
-    assert(medianOf(Seq(1.0, 2.0, 3.0, 4.0)) == 2.0)
-    // spread: (max-min)/median as a percent, one decimal
-    assert(spreadPct(Seq(95.0, 100.0, 105.0)) == 10.0)
-    assert(spreadPct(Seq(100.0, 100.0, 100.0)) == 0.0)
-    // fewer than 2 valid samples → no spread to report
-    assert(spreadPct(Seq(100.0)) == -1.0)
-    assert(spreadPct(Seq(-1.0, 100.0)) == -1.0)
-  }
-
-  test("wallFactor: wall-basis machine factor from plan-matched pairs") {
-    import Bench.{wallFactor, wallRatios}
-    // pairing: only queries in both maps with positive medians ratio
-    val ratios = wallRatios(
-      Map("a" -> 1.0, "b" -> 2.6, "c" -> 0.5, "nohist" -> 9.9),
-      Map("a" -> 1.0, "b" -> 2.0, "c" -> 1.0, "zero" -> 0.0))
-    assert(ratios.sorted == Seq(0.5, 1.0, 1.3))
-    // below minPairs → no factor (fresh history, history-off drills)
-    assert(wallFactor(Seq(1.0, 1.0)) == ((-1.0, -1.0, 2)))
-    // the r14 shape: walls ran median 1.275× the trailing medians →
-    // machine factor ≈ 0.784 (what the probe basis misread as 0.64)
-    val pool = Seq(0.98, 1.1, 1.2, 1.275, 1.3, 1.6, 2.09)
-    val (f, med, n) = wallFactor(pool)
-    assert(n == 7 && med == 1.275)
-    assert(math.abs(f - 1.0 / 1.275) < 1e-9)
-    // invalid ratios are dropped, not folded in
-    val (f2, _, n2) = wallFactor(pool ++ Seq(-1.0, Double.NaN))
-    assert(n2 == 7 && f2 == f)
-  }
-
-  test("factorsDisagree: >15% probe-vs-walls split raises the flag") {
-    import Bench.factorsDisagree
-    // the r14 readings: probes 0.6378 vs walls 0.784 → 18.7% apart
-    assert(factorsDisagree(0.6378, 0.784))
-    assert(!factorsDisagree(0.78, 0.784))
-    assert(!factorsDisagree(0.9, 1.0)) // 10% — inside the band
-    assert(factorsDisagree(1.2, 1.0))
-    // either factor invalid → no verdict, never a spurious flag
-    assert(!factorsDisagree(-1.0, 0.784))
-    assert(!factorsDisagree(0.784, -1.0))
-  }
-
-  test("shouldSettleReleg: only window-withheld bound trips re-leg") {
-    import Bench.shouldSettleReleg
-    // the r14 builder shape: confirmed violations + dirty leg window
-    // (6.34% steal) — the verdict would be withheld, so settle+re-leg
-    assert(shouldSettleReleg(true, 0, Seq("q01:3.1x>2.64x"), true))
-    // quiet window + violations = honest false — never retried away
-    assert(!shouldSettleReleg(true, 0, Seq("q01:3.1x>2.64x"), false))
-    // no violations → nothing to resolve, dirty window or not
-    assert(!shouldSettleReleg(true, 0, Seq.empty, true))
-    // hard failures stand on their own (torn snapshots / errors are
-    // never machine-attributable)
-    assert(!shouldSettleReleg(false, 0, Seq("q01:3.1x>2.64x"), true))
-    assert(!shouldSettleReleg(true, 1, Seq("q01:3.1x>2.64x"), true))
   }
 
   test("stableDistinctGroups leaves grouping-set Expands untouched") {
