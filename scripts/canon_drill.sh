@@ -1,67 +1,50 @@
 #!/bin/bash
-# Two-session full-registry canon-dump drill (round-14 directive #4):
-# the README's "two full-session canon dumps byte-identical" claim
-# becomes a reproducible committed artifact. Runs graft.Verify TWICE in
-# fresh JVMs with SPARK_GRAFT_CANON_DUMP (each dumps, per query, the
-# exact canonicalized plan string QueryStats.planHash hashes — the
-# full-session context the r13 RewriteDistinctAggregates flip only
-# reproduced in), diffs the two dumps per query, and re-runs
-# graft.CanonProbe (ExprId-burn harness) on the two formerly-flipping
-# queries as recorded evidence of the r13 root-cause fix. Writes
-# CANON_DRILL_r{round}.json; exits non-zero on any diff or probe flip.
+# Two-session plan-fingerprint drill: runs `graft.Explain --canon` over
+# the whole registry in two fresh JVMs, diffs the per-query blocks (the
+# exact text QueryStats.planHash hashes, headed by the hash), and writes
+# CANON_DRILL_<tag>.json with the query count, the differing queries and
+# the number of distinct hashes. Exits non-zero on any diff.
 #
-# Usage: scripts/canon_drill.sh [round] [sfDir]   (default sf0.001 —
-# the canon string depends on plan shape, not corpus size, and the
-# full registry at sf0.001 keeps the drill ~minutes)
+# Usage: scripts/canon_drill.sh [tag] [sfDir]   (default sf0.001 — the
+# fingerprint depends on plan shape, not corpus size)
 set -e
 cd "$(dirname "$0")/.."
-ROUND="${1:-14}"
+TAG="${1:-local}"
 SF="${2:-/root/testdata/sf0.001}"
-OUT="CANON_DRILL_r${ROUND}.json"
-WORK="$(mktemp -d /tmp/canon_drill.XXXXXX)"
+OUT="CANON_DRILL_${TAG}.json"
+WORK="$(mktemp -d "${TMPDIR:-/tmp}/canon_drill.XXXXXX")"
 trap 'rm -rf "$WORK"' EXIT
 
-run_session() {  # $1 = session tag
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  SPARK_GRAFT_HISTORY_DIR="" \
-  SPARK_GRAFT_CANON_DUMP="$WORK/$1" \
-  scripts/run_class.sh graft.Verify "$SF" "$WORK/verify_$1" \
-    >"$WORK/$1.out" 2>&1
-}
+for s in a b; do
+  echo "[canon-drill] session $s (fresh JVM, full registry)" >&2
+  scripts/run_class.sh graft.Explain "$SF" --canon >"$WORK/$s.out" \
+    2>"$WORK/$s.err" || { tail -20 "$WORK/$s.err" >&2; exit 1; }
+done
 
-echo "[canon-drill] session A (full-registry Verify + canon dump)" >&2
-run_session a
-echo "[canon-drill] session B (fresh JVM, same registry)" >&2
-run_session b
-
-echo "[canon-drill] CanonProbe on the r13 formerly-flipping queries" >&2
-scripts/run_class.sh graft.CanonProbe "$SF" 20 \
-  f_pseudo_columns d_query_stats >"$WORK/probe.out" 2>"$WORK/probe.err"
-
-python3 - "$OUT" "$ROUND" "$SF" "$WORK" <<'EOF'
-import glob, json, os, re, sys
-out, rnd, sf, work = sys.argv[1:]
-a = {os.path.basename(p)[:-6]: open(p).read()
-     for p in glob.glob(f"{work}/a/*.canon")}
-b = {os.path.basename(p)[:-6]: open(p).read()
-     for p in glob.glob(f"{work}/b/*.canon")}
+python3 - "$OUT" "$SF" "$WORK" <<'EOF'
+import json, re, sys
+out, sf, work = sys.argv[1:]
+HEAD = re.compile(r"^===== (\S+) \(fingerprint input; hash=(\w+)\) =====$",
+                  re.M)
+def blocks(path):
+    text = open(path).read()
+    heads = list(HEAD.finditer(text))
+    ends = [h.start() for h in heads[1:]] + [len(text)]
+    return {h.group(1): (h.group(2), text[h.end():e])
+            for h, e in zip(heads, ends)}
+a, b = blocks(f"{work}/a.out"), blocks(f"{work}/b.out")
 common = sorted(set(a) & set(b))
-only_a, only_b = sorted(set(a) - set(b)), sorted(set(b) - set(a))
+only = sorted(set(a) ^ set(b))
 diffs = sorted(q for q in common if a[q] != b[q])
-probe = dict(re.findall(r"CANONPROBE (\S+) flips=(\S+)",
-                        open(f"{work}/probe.out").read()))
-probe_clean = probe and all(v.startswith("0/") for v in probe.values())
-ok = (len(common) > 0 and not diffs and not only_a and not only_b
-      and probe_clean)
-json.dump({"drill": "two_session_canon_dump",
-           "round": int(rnd), "sf": sf, "sessions": 2,
+distinct = len({a[q][0] for q in common})
+ok = bool(common) and not diffs and not only
+json.dump({"drill": "two_session_fingerprint", "sf": sf, "sessions": 2,
            "queries": len(common), "identical": len(common) - len(diffs),
-           "diffs": diffs, "only_in_one_session": only_a + only_b,
-           "canonprobe_exprid_burn": probe,
-           "canonprobe_clean": probe_clean, "ok": ok},
+           "diffs": diffs, "only_in_one_session": only,
+           "distinct_hashes": distinct, "ok": ok},
           open(out, "w"), indent=1)
 print(("PASS " if ok else "FAIL ")
       + f"{out}: {len(common)} queries, {len(diffs)} diffs, "
-      + f"probe {probe}")
+      + f"{distinct} distinct hashes")
 sys.exit(0 if ok else 1)
 EOF

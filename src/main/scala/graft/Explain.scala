@@ -5,11 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Plan-inspection main: prints the formatted plan (and post-AQE executed
   * plan) for the named queries. Usage:
   *   scripts/run_class.sh graft.Explain <sfDir> q01_pricing_summary …
-  *   scripts/run_class.sh graft.Explain <sfDir> --canon <names…>
-  * `--canon` prints the CANONICALIZED optimized plan — the exact string
-  * `QueryStats.planHash` fingerprints — without executing: the
-  * diagnostic for "why did this query's plan_hash move between runs"
-  * (diff two sessions' dumps to find the unstable token).
+  *   scripts/run_class.sh graft.Explain <sfDir> --canon [names…]
+  * `--canon` prints, without executing, the exact text
+  * `QueryStats.planHash` fingerprints (`QueryStats.stableString`) for
+  * the named queries, or for the whole registry when none are named:
+  * the diagnostic for "why did this query's plan_hash move between
+  * runs" (diff two sessions' dumps; `scripts/canon_drill.sh`).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -23,7 +24,10 @@ object Explain {
       else args.headOption.getOrElse("/root/testdata/sf0.1")
     val canon = canonFirst || args.lift(1).contains("--canon")
     val rest = args.drop(if (canonFirst) 1 else if (canon) 2 else 1).toSeq
-    val names = if (rest.nonEmpty) rest else Bench.headline
+    val names =
+      if (rest.nonEmpty) rest
+      else if (canon) SparkEntry.queries.keys.toSeq
+      else Bench.headline
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
@@ -36,15 +40,11 @@ object Explain {
     Tables.tune(spark)
     if (canon) {
       names.foreach { name =>
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        // print the stableString, not the raw canonicalized form: the
-        // hash is reproducible from the printed text, and diffing two
-        // sessions' dumps surfaces ONLY hash-relevant differences
-        // (identity tokens and commutative order are already folded).
-        // One canonicalization pass per query: the header hash is
-        // computed from the same captured string that is printed.
-        val stable = plans.QueryStats.stableString(df)
-        println(s"\n===== $name (stable canonical; hash=${
+        // drop persist()s left by the previous query, as Verify does
+        spark.catalog.clearCache()
+        val stable = plans.QueryStats.stableString(
+          SparkEntry.queries(name)(spark, sfDir))
+        println(s"\n===== $name (fingerprint input; hash=${
           plans.QueryStats.hashOf(stable)}) =====")
         println(stable)
       }

@@ -53,6 +53,12 @@ object Tables {
     // events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
     // rejects; read as long and convert (see table()).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // every unpersist of a localCheckpoint barrier's RDD logs an
+    // expected "was locally checkpointed … cannot be recomputed after
+    // unpersisting" WARN: hundreds of lines of noise per run
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
     plans.GraftExtensions.registerAll(spark)
   }
 

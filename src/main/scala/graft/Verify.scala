@@ -47,31 +47,10 @@ object Verify {
         }
         val t0 = System.nanoTime()
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // fingerprint AFTER execution — the same moment the verify
-        // history records it (the full-session flip under
-        // investigation reproduces only in this context, so the
-        // canon dump must capture exactly this string)
-        val stable =
-          try Some(plans.QueryStats.stableString(df))
-          catch { case _: Throwable => None }
-        stable.foreach { s =>
-          histEntries += plans.QueryStats.Entry(name,
-            (System.nanoTime() - t0) / 1e6, -1L,
-            System.currentTimeMillis(), plans.QueryStats.hashOf(s))
-          // SPARK_GRAFT_CANON_DUMP=<dir>: also dump the canonical
-          // string per query — the full-session diagnostic for the
-          // two-query fingerprint residual (diff two sessions' dumps,
-          // or a full-session dump against Explain --canon's fresh one)
-          sys.env.get("SPARK_GRAFT_CANON_DUMP").filter(_.nonEmpty)
-            .foreach { cd =>
-              try {
-                Files.createDirectories(Paths.get(cd))
-                Files.writeString(Paths.get(cd, s"$name.canon"), s)
-              } catch { case e: Throwable =>
-                System.err.println(s"[verify] canon dump $name: $e")
-              }
-            }
-        }
+        val wallMs = (System.nanoTime() - t0) / 1e6
+        try histEntries += plans.QueryStats.Entry(name, wallMs, -1L,
+          System.currentTimeMillis(), plans.QueryStats.planHash(df))
+        catch { case _: Throwable => }
       }
       catch { case e: Throwable =>
         failed += name

@@ -1368,8 +1368,8 @@ object DdlDmlQueries {
     * answers the operator questions the table exists for: how many
     * runs, how many rows, did the plan stay stable, were the
     * measurements sane. Row counts and plan-stability are exact
-    * (semanticHash is deterministic for a fixed query over a fixed
-    * schema), so the oracle pins them from the source tables; walls
+    * (QueryStats.planHash is deterministic for a fixed query over a
+    * fixed schema), so the oracle pins them from the source tables; walls
     * and timestamps are nondeterministic and collapse to sanity
     * booleans. */
   val queryStats: QueryDef = QueryDef(
@@ -1420,8 +1420,8 @@ object DdlDmlQueries {
     * back via tblTestStats.sql to compare runs). Builds a deterministic
     * four-run history for three queries — one stable, one whose latest
     * wall blows past 3× its trailing same-plan median, one whose plan
-    * changed under it — using REAL plan hashes (semanticHash of real
-    * plans over the source tables; their equality/inequality is the
+    * changed under it — using REAL plan hashes (QueryStats.planHash of
+    * real plans over the source tables; their equality/inequality is the
     * deterministic signal) and crafted walls/timestamps (walls are the
     * INPUT here; the detection logic is what's under test), then
     * asserts QueryStats.regressions flags exactly the two bad rows.

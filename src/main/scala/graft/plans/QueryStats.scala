@@ -37,306 +37,74 @@ object QueryStats {
     StructField("plan_hash", StringType),
     StructField("run_id", StringType)))
 
-  /** Semantic fingerprint of a DataFrame's optimized logical plan —
-    * stable across executions AND SESSIONS of the same query
-    * structure, changed by anything that alters the plan shape (a new
-    * filter, a join reorder, a schema change underneath). Hashes the
-    * CANONICALIZED plan's string form (expression ids normalized to
-    * position) with MurmurHash3 — NOT Catalyst's semanticHash():
-    * that hashes the canonicalized tree's hashCode chain, which
-    * reaches identity-based hashCodes (the relation's FileIndex), so
-    * two JVMs fingerprint the identical plan differently — measured
-    * directly on Spark 4.1.2, and exactly the failure a CROSS-RUN
-    * history cannot have (every fresh session would read as plan
-    * churn). The string form is JVM-independent; its deterministic
-    * field truncation and location elision are acceptable coarseness
-    * for a per-query "did my plan move" signal.
-    *
-    * The string is additionally SANITIZED of the two JVM-session
-    * identity tokens that survive canonicalization (measured in round
-    * 12 on the verify-basis history: 26 queries flagged permanent
-    * plan_change because of them): a custom typed Aggregate's function
-    * object prints its default `Class@identityHash` toString into the
-    * aggregate expression (`graft.functions.GroupConcat@1509bd56` —
-    * different every session), and JIT-assigned lambda class names
-    * (`...$$Lambda$4054/0x...@...`) carry a per-session index/address.
-    * Both rewrite to fixed tokens before hashing.
-    *
-    * A second instability class is ORDER, not tokens (measured by
-    * diffing two sessions' `Explain --canon` dumps): Catalyst's
-    * canonicalization orders commutative operands — And/Or/Add/
-    * Multiply chains (`MultiCommutativeOp`), EqualTo operand order,
-    * and the GreaterThan↔LessThan orientation — by expression
-    * hashCode, and an AttributeReference's hashCode reaches ExprId's
-    * PER-JVM UUID, so the identical plan prints `EXP(x) + 1.0` in one
-    * session and `1.0 + EXP(x)` in the next. `stableOrder` re-derives
-    * a deterministic order bottom-up from the operands' own string
-    * forms (children normalized before parents compare) and rewrites
-    * every Greater* comparison to its Less* mirror, so both sessions
-    * converge on one rendering. Pinned by the two-JVM CatalogSpec
-    * test (a_group_concat — the identity-token offender) and by the
-    * full-registry two-session sweep that measured the classes. */
-  /** Rewrite the two measured session-identity token classes to fixed
-    * strings. The identityHash rewrite is anchored to a QUALIFIED name
-    * (must contain '.' or '$' before the '@') followed by 6–8 lowercase
-    * hex digits — the shape `Object.toString` actually prints
-    * (`Integer.toHexString` of a uniformly-distributed 32-bit identity
-    * hash is 6+ digits with probability 1 − 2⁻¹²):
-    * `graft.functions.GroupConcat@1509bd56` and `...$$Lambda@7a2b91`
-    * match; a data literal like `user@ab12` or a dotted one like
-    * `a.b@cafe` does not (ADVICE r12: the unlength-bounded form also
-    * rewrote short-hex-suffix DATA literals, so `a.b@cafe` vs
-    * `a.b@beef` hashed identically and a real plan_change was
-    * silenced). Residual, documented: a genuine ≥6-hex data literal
-    * still folds (silenced advisory), and a <6-digit identity hash
-    * (p ≈ 0.024% per token) still flips — both advisory-only, and the
-    * length anchor makes each strictly rarer than the class it
-    * replaces. */
-  private def sanitizeTokens(s: String): String = s
-    .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x[0-9a-fA-F]+", "\\$\\$Lambda")
-    .replaceAll("([\\w.$]*[.$][\\w$]+)@[0-9a-f]{6,8}\\b", "$1@id")
+  /** Plan fingerprint: MurmurHash3 of `stableString`. Stable across
+    * executions, sessions and JVMs of the same query; changed by
+    * anything that alters the query (a new filter, a different
+    * literal, a schema change underneath) or the operator tree the
+    * optimizer chose for it (a join reorder, a predicate pushed to the
+    * other side of a join). Catalyst's own `semanticHash()` is no use
+    * here: it reaches identity-based hashCodes (the relation's
+    * FileIndex), so two JVMs fingerprint the identical plan
+    * differently, and a cross-run history would read every fresh
+    * session as plan churn. */
+  def planHash(df: DataFrame): String = hashOf(stableString(df))
 
-  private def stableOrder(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions._
-    plan.transformUpWithSubqueries { case p =>
-      p.transformExpressionsUp {
-        case GreaterThan(l, r) => LessThan(r, l)
-        case GreaterThanOrEqual(l, r) => LessThanOrEqual(r, l)
-        case e @ (_: And | _: Or | _: Add | _: Multiply | _: BitwiseAnd |
-            _: BitwiseOr | _: BitwiseXor | _: EqualTo | _: EqualNullSafe |
-            _: MultiCommutativeOp) =>
-          // sort by the SANITIZED string: two operands distinguished
-          // only by identity tokens would otherwise sort by the hex
-          // digits and flip order across sessions — reintroducing
-          // through the sort exactly the instability the token rewrite
-          // exists to remove
-          val sorted = e.children.sortBy(c => sanitizeTokens(c.toString))
-          if (sorted == e.children) e else e.withNewChildren(sorted)
-      }
-    }
-  }
-
-  /** The THIRD measured instability class (root-caused in round 13 —
-    * the "full-session fingerprint flip" SCALE.md carried as a
-    * residual since round 12): Spark's RewriteDistinctAggregates
-    * assigns its gid GROUP NUMBERS (and the Expand output column each
-    * distinct group occupies) by iterating a Map keyed by expression
-    * sets whose hashCodes reach ExprId — a per-session counter. A
-    * query with ≥2 distinct-aggregate groups (`d_query_stats`,
-    * `f_pseudo_columns` — both countDistinct over two columns)
-    * therefore fingerprints differently depending on the ExprId RANGE
-    * it was constructed in: fresh session vs late in a 318-query
-    * session. Reproduced at will by `graft.CanonProbe` (burn a block
-    * of ExprIds between constructions → 17–23 flips in 40 on the two
-    * queries; zero on the rest of the registry).
-    *
-    * Normalization, applied to the OPTIMIZED plan before
-    * canonicalization: for every Expand whose rows carry a sequential
-    * integer gid column (the distinct-rewrite shape: literal at one
-    * position == row index for every row), (a) sort the rows by a
-    * session-independent content key (the row rendered with `#exprId`
-    * digits stripped and the gid masked), (b) renumber the gid
-    * literals to the rows' sorted positions, (c) permute the
-    * DISTINCT-GROUP output columns into first-use-after-sort order
-    * (column order is what leaks into every upstream reference —
-    * canonicalization renumbers references positionally against the
-    * child's output, so upstream follows coherently), and (d) remap
-    * the gid literals in upstream `gid = k` comparisons (aggregate
-    * FILTER clauses) through the same permutation. The result is a
-    * deterministic function of session-independent content, so every
-    * session converges on one rendering; it is hash-input only, never
-    * executed.
-    *
-    * Two scoping notes (ADVICE r13): (1) grouping-sets/rollup/CUBE
-    * Expands are EXCLUDED by the gid attribute's name
-    * (`spark_grouping_id`) — their gid values are semantically
-    * meaningful bitmasks assigned from the user's query (already
-    * session-stable), and a CUBE whose bitmasks happen to coincide
-    * with 0..n-1 would otherwise be renumbered, erasing meaning from
-    * the hash input; the distinct-rewrite's gid attribute is named
-    * plain `gid`. (2) residual: the content-key row sort is stable
-    * under ties, so two projection rows with IDENTICAL non-null cell
-    * renderings keep their original (session-dependent) relative
-    * order — their rendered content is identical either way, but an
-    * upstream `gid = k` FILTER remap could differ across sessions for
-    * such twins. Truly identical distinct-agg groups don't occur in
-    * practice (the rewrite deduplicates by expression set), and this
-    * is advisory-only hash input — accepted. */
-  private[graft] def stableDistinctGroups(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical.{Expand, LogicalPlan}
-    // session-independent render: strip exprId digits (names survive),
-    // mask the gid, and IGNORE COLUMN POSITIONS — which output column a
-    // group occupies is itself assigned by the unstable map iteration,
-    // so a position-sensitive key would just re-derive the instability
-    // (the non-null cell set identifies the group regardless of where
-    // its columns landed)
-    def key(row: Seq[Expression], gidPos: Int): String =
-      row.zipWithIndex.collect {
-        case (e, i) if i != gidPos && (e match {
-              case Literal(null, _) => false
-              case _ => true
-            }) =>
-          e.toString.replaceAll("#\\d+", "#")
-      }.sorted.mkString("|")
-    // gid attr exprId -> (old gid value -> new gid value)
-    val remaps =
-      scala.collection.mutable.Map.empty[ExprId, Map[Int, Int]]
-    val rewritten = plan.transformUpWithSubqueries {
-      case e @ Expand(projections, output, _)
-          if projections.size >= 2 &&
-            output.size == projections.head.size => {
-        // the gid column: every row holds an int literal equal to its
-        // own row index (the distinct-rewrite allocates gids 0..n-1 in
-        // row order). Grouping-set Expands are excluded by NAME — the
-        // analyzer calls their gid `spark_grouping_id` and its bitmask
-        // values are semantically meaningful (a CUBE's can coincide
-        // with 0..n-1); the distinct rewrite names its own plain `gid`
-        val gidPos = output.indices.find { g =>
-          output(g).name != "spark_grouping_id" &&
-          projections.zipWithIndex.forall {
-            case (row, i) => row(g) match {
-              case Literal(v: Int, IntegerType) => v == i
-              case _ => false
-            }
-          }
-        }
-        gidPos match {
-          case Some(g) =>
-            val order = projections.indices
-              .sortBy(i => key(projections(i), g))
-            // NO early exit when rows are already key-ordered: the
-            // COLUMN permutation below must still run (one session's
-            // unstable layout can land row-sorted but column-swapped —
-            // skipping it was the first implementation's bug, measured
-            // as the probe still flipping 28/60)
-            locally {
-              // rows in key order, gid literal = new position
-              val newRows = order.zipWithIndex.map { case (old, now) =>
-                projections(old).zipWithIndex.map { case (expr, i) =>
-                  if (i == g) Literal(now) else expr
-                }
-              }
-              // distinct-group output columns (non-gid columns that are
-              // null in some rows — each belongs to the group rows that
-              // populate it) permuted into first-use order under the new
-              // row order; shared columns (non-null everywhere, e.g. the
-              // grouping keys) keep their positions
-              def firstUse(col: Int): Int = newRows.indexWhere(r =>
-                r(col) match {
-                  case Literal(null, _) => false
-                  case _ => true
-                })
-              val grouped = output.indices.filter { c =>
-                c != g && projections.exists(r => r(c) match {
-                  case Literal(null, _) => true
-                  case _ => false
-                })
-              }
-              val colOrder = grouped.sortBy(c =>
-                (firstUse(c), grouped.indexOf(c)))
-              val colMap = grouped.zip(colOrder).toMap // pos -> source
-              val newOutput = output.indices.map(i =>
-                output(colMap.getOrElse(i, i)))
-              val finalRows = newRows.map(r =>
-                r.indices.map(i => r(colMap.getOrElse(i, i))))
-              remaps(output(g).exprId) =
-                order.zipWithIndex.map { case (old, now) => old -> now }
-                  .toMap
-              Expand(finalRows.map(_.toSeq), newOutput.toSeq, e.child)
-            }
-          case None => e
-        }
-      }
-    }
-    if (remaps.isEmpty) rewritten
-    else rewritten.transformUpWithSubqueries { case p =>
-      val remapped = p.transformExpressionsUp {
-        case EqualTo(Literal(v: Int, IntegerType), a: AttributeReference)
-            if remaps.get(a.exprId).exists(_.contains(v)) =>
-          EqualTo(Literal(remaps(a.exprId)(v)), a)
-        case EqualTo(a: AttributeReference, Literal(v: Int, IntegerType))
-            if remaps.get(a.exprId).exists(_.contains(v)) =>
-          EqualTo(a, Literal(remaps(a.exprId)(v)))
-      }
-      remapped match {
-        // the distinct-rewrite's INNER aggregate (identified by the gid
-        // attribute in its grouping) also orders its grouping list by
-        // the same unstable map iteration — sort it (and the matching
-        // grouping-attr prefix of the output list) by the same
-        // session-independent key; grouping order is semantically free,
-        // and this is hash input only
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-            if a.groupingExpressions.exists {
-              case ar: AttributeReference => remaps.contains(ar.exprId)
-              case _ => false
-            } =>
-          def gkey(ex: Expression): String =
-            ex.toString.replaceAll("#\\d+", "#")
-          val sortedGrouping = a.groupingExpressions.sortBy(gkey)
-          val groupingSet = a.groupingExpressions
-            .collect { case ar: AttributeReference => ar.exprId }.toSet
-          val (groupRefs, rest) = a.aggregateExpressions.partition {
-            case ar: AttributeReference => groupingSet.contains(ar.exprId)
-            case _ => false
-          }
-          a.copy(groupingExpressions = sortedGrouping,
-            aggregateExpressions = groupRefs.sortBy(gkey) ++ rest)
-        case other => other
-      }
-    }
-  }
-
-  /** The FOURTH measured instability class (root-caused in round 14,
-    * surfaced by the verify-basis tripwire flipping j_range_interval /
-    * x_ann_centroid_drift between the same two hashes across verify
-    * runs): a logical `Range` node prints its numSlices —
-    * `splits=Some(N)` — and N defaults to the SESSION's parallelism
-    * (local[4] vs local[8] vs local[32]), so every query built on
-    * `spark.range(...)` fingerprints differently per core count. That
-    * is machine config, not query structure; a cross-run history must
-    * not read "ran on a different box" as plan churn. Fold numSlices
-    * to None before canonicalization. Residual, documented: an
-    * EXPLICIT `spark.range(n, numSlices = k)` change also folds —
-    * acceptable coarseness for a "did my plan move" signal (no graft
-    * query passes numSlices explicitly). */
-  private def stableRangeSlices(
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    plan.transformUpWithSubqueries {
-      case r: org.apache.spark.sql.catalyst.plans.logical.Range
-          if r.numSlices.isDefined => r.copy(numSlices = None)
-    }
-
-  /** The exact string `planHash` hashes — sanitized and
-    * deterministically ordered. Exposed so `Explain --canon` prints
-    * precisely what gets fingerprinted (diffing two sessions' dumps
-    * must surface ONLY hash-relevant differences). */
-  def stableString(df: DataFrame): String = {
-    val opt = df.queryExecution.optimizedPlan
-    // fallible at every stage: a Catalyst internals change must degrade
-    // to the raw canonicalized string, never break the recorder
-    val grouped =
-      try stableDistinctGroups(opt) catch { case _: Throwable => opt }
-    val desliced =
-      try stableRangeSlices(grouped) catch { case _: Throwable => grouped }
-    val canon = desliced.canonicalized
-    val ordered =
-      try stableOrder(canon) catch { case _: Throwable => canon }
-    sanitizeTokens(ordered.toString)
-  }
-
-  /** Hash of an already-computed `stableString` — exposed so callers
-    * that need both the string and the hash (Explain --canon) compute
-    * the canonicalization pass once. */
+  /** Hash of an already-rendered `stableString`, for callers that print
+    * the string too (`Explain --canon`). */
   def hashOf(stable: String): String =
     f"${scala.util.hashing.MurmurHash3.stringHash(stable)}%08x"
 
-  def planHash(df: DataFrame): String = hashOf(stableString(df))
+  /** The exact text `planHash` hashes, in two parts:
+    *
+    *  - the ANALYZED plan's text, with `#<exprId>` and the
+    *    `CTERelationDef/Ref <id>` numbers masked (both come from
+    *    JVM-wide counters). The analyzer keeps the user's operand and
+    *    aggregate order. The optimized plan's expressions are not
+    *    hashed: its distinct-aggregate Expand rows (and, in canonical
+    *    form, its commutative operands) are ordered by hashCodes that
+    *    reach the per-JVM ExprId;
+    *  - the OPTIMIZED plan's operator skeleton: node names in tree
+    *    shape, no expressions, so optimizer decisions that move
+    *    operators stay visible.
+    *
+    * Two session-dependent leaks survive in the analyzed text and are
+    * folded: JVM identity tokens (`sanitizeTokens`) and the logical
+    * `Range`'s numSlices, which defaults to the session's parallelism
+    * (machine config, not query structure; an explicit
+    * `spark.range(n, numSlices = k)` change folds too — no graft query
+    * passes one). The exprId mask also folds `#<digits>` inside a string
+    * literal; like the other residuals, acceptable for an advisory
+    * "did my plan move" signal. */
+  def stableString(df: DataFrame): String = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Range}
+    val qe = df.queryExecution
+    val analyzed = qe.analyzed.transformUpWithSubqueries {
+      case r: Range if r.numSlices.isDefined => r.copy(numSlices = None)
+    }
+    def shape(p: LogicalPlan, indent: String): String =
+      indent + p.nodeName + "\n" +
+        p.children.map(shape(_, indent + "  ")).mkString
+    sanitizeTokens(analyzed.toString)
+      .replaceAll("#\\d+", "#")
+      .replaceAll("(CTERelation(?:Def|Ref)) \\d+", "$1") +
+      "== optimized operator shape ==\n" + shape(qe.optimizedPlan, "")
+  }
+
+  /** Rewrite the two JVM-session identity token classes to fixed
+    * strings: a custom typed Aggregate's function object prints its
+    * default `Class@identityHash` (`graft.functions.GroupConcat@1509bd56`),
+    * and JIT-assigned lambda class names (`...$$Lambda$4054/0x...@...`)
+    * carry a per-session index and address. The identityHash rewrite is
+    * anchored to a QUALIFIED name ('.' or '$' before the '@') followed
+    * by 6–8 lowercase hex digits — the shape `Object.toString` prints
+    * (`Integer.toHexString` of a uniform 32-bit hash is 6+ digits with
+    * probability 1 − 2⁻¹²). A data literal like `user@ab12` or
+    * `a.b@cafe` keeps distinguishing plans. Residual: a ≥6-hex dotted
+    * data literal still folds, and a <6-digit identity hash still
+    * flips; both are advisory-only. */
+  private def sanitizeTokens(s: String): String = s
+    .replaceAll("\\$\\$Lambda(\\$\\d+)?/0x[0-9a-fA-F]+", "\\$\\$Lambda")
+    .replaceAll("([\\w.$]*[.$][\\w$]+)@[0-9a-f]{6,8}\\b", "$1@id")
 
   /** Execute `df` to completion (count), returning the Entry that
     * records it — the full-fidelity recording path with a real row

@@ -12,12 +12,12 @@ import org.apache.spark.sql.DataFrame
   *  - default: `localCheckpoint()` — executor-local blocks, no external
   *    storage, fastest. The blocks die with an executor, so on a real
   *    cluster a lost node forces whole-job recomputation.
-  *  - reliable: set `spark.graft.checkpoint.dir` (SparkConf) or the
-  *    `SPARK_GRAFT_CHECKPOINT_DIR` env var to a fault-tolerant path
-  *    (HDFS/S3/...) and every barrier becomes a reliable `checkpoint()`
-  *    persisted there — iterative state survives executor loss, the way
-  *    the reference survives a PM crash through its persistent extent
-  *    state (reference: versioning/BRM/extentmap.h:116).
+  *  - reliable: set `spark.graft.checkpoint.dir` (SparkConf) to a
+  *    fault-tolerant path (HDFS/S3/...) and every barrier becomes a
+  *    reliable `checkpoint()` persisted there — iterative state survives
+  *    executor loss, the way the reference survives a PM crash through
+  *    its persistent extent state (reference:
+  *    versioning/BRM/extentmap.h:116).
   *
   * At 100 TB the reliable mode is the production setting: a 10-round
   * star-contraction over a trillion edges cannot afford to restart
@@ -28,7 +28,6 @@ object Checkpoints {
   /** Resolved checkpoint dir, if reliable mode is enabled. */
   def reliableDir(df: DataFrame): Option[String] =
     df.sparkSession.conf.getOption("spark.graft.checkpoint.dir")
-      .orElse(sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR"))
       .filter(_.nonEmpty)
 
   /** True when the context's fs-qualified checkpoint dir (always a UUID

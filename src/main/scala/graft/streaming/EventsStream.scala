@@ -43,13 +43,12 @@ object EventsStream {
     * partitions — profiled at 27 s of the 32 s wall, almost all
     * per-partition store overhead. Deriving the count from staged bytes
     * (~4 MB of input per state partition, capped by the session's own
-    * shuffle setting, floor 1) keeps state partitions proportional to
+    * shuffle setting, floor 4) keeps state partitions proportional to
     * the data at ANY size: a 100 GB staging dir saturates the cap and
     * behaves exactly as before, a megabyte-scale drill gets the handful
     * of stores it can actually fill. The clone leaves the caller's
     * session conf untouched (bench sections run concurrent queries on
-    * the shared session — a temporary set/restore there would race).
-    * SPARK_GRAFT_STREAM_SHUFFLE overrides the derived count. */
+    * the shared session — a temporary set/restore there would race). */
   def streamSession(s: SparkSession, stagedDir: String): SparkSession = {
     val bytes =
       try {
@@ -72,10 +71,7 @@ object EventsStream {
     // cutting the per-partition state-store fixed cost 8× vs the
     // core-count default
     val cap = s.sessionState.conf.numShufflePartitions
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
-      .getOrElse(math.min(cap.toLong,
-        math.max(4L, bytes / (4L << 20) + 1)).toInt)
+    val parts = math.min(cap.toLong, math.max(4L, bytes / (4L << 20) + 1))
     val s2 = s.newSession()
     graft.Tables.tune(s2)
     s2.conf.set("spark.sql.shuffle.partitions", parts.toString)

@@ -1260,13 +1260,14 @@ class CatalogSpec extends GraftSuite {
     // hashCodes, so two sessions fingerprint the IDENTICAL plan
     // differently — a cross-run history keyed on it reads every fresh
     // session as plan churn (observed live in round 11: 16/16 headline
-    // queries false-flagged). planHash hashes the canonicalized plan
-    // STRING instead; this pins the cross-JVM agreement that makes
-    // d_query_regression's plan_change signal meaningful across runs.
+    // queries false-flagged). planHash hashes plan TEXT instead
+    // (QueryStats.stableString); this pins the cross-JVM agreement that
+    // makes d_query_regression's plan_change signal meaningful across
+    // runs.
     // a_group_concat is the measured worst offender of the second
     // instability class (round 12): its custom typed Aggregate prints
-    // the function object's Class@identityHash into the canonicalized
-    // string, which differed every session until planHash sanitized
+    // the function object's Class@identityHash into the plan string,
+    // which differed every session until planHash sanitized
     // identity tokens — 26 registry queries false-flagged permanent
     // plan_change on the verify-basis history through that hole
     for (q <- Seq("q01_pricing_summary", "a_group_concat")) {
@@ -1326,28 +1327,27 @@ class CatalogSpec extends GraftSuite {
   }
 
   test("planHash is ExprId-range-independent for multi-distinct-agg plans") {
-    // the full-session fingerprint residual, root-caused round 13:
-    // RewriteDistinctAggregates assigns gid group numbers (and Expand
-    // output columns) by iterating a Map keyed by expression sets whose
-    // hashCodes reach ExprId — a per-session counter — so a plan with
-    // ≥2 countDistinct groups fingerprinted differently depending on
-    // the ExprId range it was constructed in (fresh session vs late in
-    // a 318-query one; graft.CanonProbe measured 17–28 flips in 60).
-    // stableDistinctGroups normalizes rows/columns/gids/filters to a
-    // session-independent order; this loop re-creates the trigger —
-    // the ONLY varied state is the ExprId counter
-    val q = "f_pseudo_columns" // two distinct-agg groups (mid, file)
-    def hash(): String = graft.plans.QueryStats.planHash(
-      SparkEntry.queries(q)(spark, sf))
-    val first = hash()
-    for (i <- 1 to 12) {
-      (1 to 997 * i).foreach { _ =>
-        org.apache.spark.sql.catalyst.expressions.NamedExpression
-          .newExprId
+    // RewriteDistinctAggregates orders its Expand rows, columns and gid
+    // filters by hashCodes that reach ExprId — a per-session counter —
+    // so a fingerprint of the optimized plan's expressions depends on
+    // the ExprId range the query was built in (fresh session vs late in
+    // a 318-query one). w_nulls_ordering flipped the same way under an
+    // un-canonicalized optimized rendering. This loop re-creates the
+    // trigger: the ONLY varied state is the ExprId counter
+    for (q <- Seq(
+        "f_pseudo_columns", // two distinct-agg groups (mid, file)
+        "w_nulls_ordering")) {
+      def hash(): String = graft.plans.QueryStats.planHash(
+        SparkEntry.queries(q)(spark, sf))
+      val first = hash()
+      for (i <- 1 to 12) {
+        (1 to 997 * i).foreach { _ =>
+          org.apache.spark.sql.catalyst.expressions.NamedExpression
+            .newExprId
+        }
+        assert(hash() == first,
+          s"$q: fingerprint flipped after burning ${997 * i} ExprIds")
       }
-      assert(hash() == first,
-        s"fingerprint flipped after burning ${997 * i} ExprIds — the " +
-          "distinct-group normalization regressed")
     }
   }
 
@@ -1459,37 +1459,33 @@ class CatalogSpec extends GraftSuite {
     assert(off.skipped.isEmpty)
   }
 
-  test("stableDistinctGroups leaves grouping-set Expands untouched") {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.plans.logical.{Expand,
-      LocalRelation, LogicalPlan}
-    val a = AttributeReference("a", IntegerType)()
-    val b = AttributeReference("b", IntegerType)()
-    val c1 = AttributeReference("c1", IntegerType)()
-    val c2 = AttributeReference("c2", IntegerType)()
-    val child = LocalRelation(a, b)
-    // two rows whose content keys sort OPPOSITE to their gid order, so
-    // the distinct-rewrite normalization, when it acts, must reorder
-    def rows: Seq[Seq[Expression]] = Seq(
-      Seq(Literal(0), Literal(null, IntegerType), b),
-      Seq(Literal(1), a, Literal(null, IntegerType)))
-    def proj(p: LogicalPlan) =
-      p.collect { case e: Expand => e.projections }.head
-    // distinct-rewrite shape: gid attribute named plain `gid` — the
-    // normalization acts (rows re-sorted by content key, renumbered)
-    val gid = AttributeReference("gid", IntegerType)()
-    val acted = graft.plans.QueryStats.stableDistinctGroups(
-      Expand(rows, Seq(gid, c1, c2), child))
-    assert(proj(acted) != rows, "distinct-rewrite Expand must normalize")
-    // grouping-sets shape (ADVICE r13): same 0..n-1 literal pattern
-    // but the gid attribute is the analyzer's `spark_grouping_id`,
-    // whose bitmask values are semantically meaningful — excluded by
-    // name, plan unchanged
-    val sgid = AttributeReference("spark_grouping_id", IntegerType)()
-    val excluded = graft.plans.QueryStats.stableDistinctGroups(
-      Expand(rows, Seq(sgid, c1, c2), child))
-    assert(proj(excluded) == rows,
-      "grouping-set Expand must pass through untouched")
+  test("planHash tells ROLLUP from CUBE over the same columns") {
+    // grouping-set gids are bitmasks assigned from the user's query, so
+    // the two shapes must never fold into one fingerprint
+    val t = Tables.table(spark, sf, "nation")
+    val rollup = graft.plans.QueryStats.planHash(
+      t.rollup("n_regionkey", "n_nationkey").count())
+    val cube = graft.plans.QueryStats.planHash(
+      t.cube("n_regionkey", "n_nationkey").count())
+    assert(rollup != cube)
+  }
+
+  test("planHash sees the optimizer's operator shape") {
+    // the analyzed text is identical with and without predicate
+    // pushdown; only the optimized plan's skeleton (Filter above vs
+    // below the Join) can tell the two apart
+    def df = Tables.table(spark, sf, "nation")
+      .join(Tables.table(spark, sf, "region"),
+        col("n_regionkey") === col("r_regionkey"))
+      .filter(col("r_name") === "ASIA")
+    val key = "spark.sql.optimizer.excludedRules"
+    val pushed = graft.plans.QueryStats.planHash(df)
+    spark.conf.set(key,
+      "org.apache.spark.sql.catalyst.optimizer.PushDownPredicates")
+    val unpushed =
+      try graft.plans.QueryStats.planHash(df) finally spark.conf.unset(key)
+    assert(pushed != unpushed)
+    assert(pushed == graft.plans.QueryStats.planHash(df))
   }
 
   test("stableString folds Range numSlices (session-parallelism leak)") {
@@ -1498,7 +1494,7 @@ class CatalogSpec extends GraftSuite {
     // based query fingerprinted differently per core count — the
     // verify-basis tripwire flipped j_range_interval and
     // x_ann_centroid_drift between the same two hashes depending on
-    // SPARK_GRAFT_CPUS. The canon string must carry no splits value.
+    // SPARK_GRAFT_CPUS. The hashed text must carry no splits value.
     val df = spark.range(0, 16).toDF("id")
       .groupBy(($"id" % 4).as("k")).count()
     val s = graft.plans.QueryStats.stableString(df)
