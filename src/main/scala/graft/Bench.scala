@@ -678,6 +678,11 @@ object Bench {
         var childTail = ""
         val flag = java.nio.file.Paths.get(s"$tmp/cat", "_locks",
           ".midswap_soak_orders")
+        def manifests() = scala.util.Using.resource(java.nio.file.Files.list(
+          java.nio.file.Paths.get(s"$tmp/cat/soak_orders/_manifest")))(
+          _.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("v")).toSet)
+        val preManifests = manifests()
         val staged: Either[String, Unit] = try {
           // the crash batch REPLACES batch 0's rows under batch_id 999
           // (same keys), so pre- and post-image are both enumerable
@@ -729,8 +734,7 @@ object Bench {
         staged match {
           case Left(json) => json
           case Right(_) => try {
-            val liveGone = !java.nio.file.Files.exists(
-              java.nio.file.Paths.get(s"$tmp/cat/soak_orders"))
+            val unpublished = manifests() == preManifests
             val lockLeft = java.nio.file.Files.exists(
               java.nio.file.Paths.get(s"$tmp/cat/_locks/soak_orders.lock"))
             // next READER: full pre-image or full post-image, never a mix
@@ -745,7 +749,7 @@ object Bench {
             val recovered = image != "INCONSISTENT" && finalOk
             if (!recovered) fails += 1
             s"""{"ran":true,"staged":true,"attempts":$attempts,""" +
-              s""""killed_mid_swap":true,"live_gone_at_kill":$liveGone,""" +
+              s""""killed_mid_commit":true,"unpublished_at_kill":$unpublished,""" +
               s""""stale_lock_left":$lockLeft,"reader_image":"$image",""" +
               s""""next_writer_ok":$finalOk,"recovered":$recovered}"""
           } catch { case e: Throwable =>

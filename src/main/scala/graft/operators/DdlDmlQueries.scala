@@ -576,9 +576,9 @@ object DdlDmlQueries {
     * dbcon/mysql/ha_calpont_partition.cpp:790-894; ddl.y partition
     * mark/drop/restore): disable 1996 (offline, data intact), re-enable it,
     * then drop 1998 outright. The final read must show every year EXCEPT
-    * 1998 — a wrong enable or a wrong drop both hash-mismatch. Dropping is
-    * a directory delete, never a table rewrite, which is what makes
-    * retention deletes O(1) at 100 TB. */
+    * 1998 — a wrong enable or a wrong drop both hash-mismatch. Every step
+    * is a manifest-only commit, never a table rewrite, which is what makes
+    * retention deletes cheap at 100 TB. */
   val dropPartition: QueryDef = QueryDef(
     "d_drop_partition",
     (s, dir) => {
@@ -1469,9 +1469,9 @@ object DdlDmlQueries {
 
   /** Operator-visible incident log, read side (reference analog:
     * loggingcpp persists crit/warning rows queryably, not only to
-    * stderr). The WRITE-side forcing paths — a hammered torn-listing
-    * bracket exhaustion, a lock restore losing to a third claimant in
-    * a widened window — live in CatalogSpec; this row gates the
+    * stderr). The WRITE-side forcing path — a lock restore losing to a
+    * third claimant in a widened window — lives in CatalogSpec; this
+    * row gates the
     * persisted format and the read surface: O_APPEND lines parse back
     * in order with fields intact, and a torn half-line from a crashed
     * recorder is skipped rather than poisoning the whole log. */

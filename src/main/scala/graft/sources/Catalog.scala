@@ -1,31 +1,48 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec,
+  PartitioningUtils}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths}
-import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
-/** Thin table catalog over Parquet directories.
+/** Thin table catalog over Parquet files, versioned by a manifest log.
   *
   * Plays the role of the reference's CalpontSystemCatalog + DDL processors
   * (reference: dbcon/execplan/calpontsystemcatalog.h:107;
   * dbcon/ddlpackage/ddl.y:233-300 CREATE/DROP/TRUNCATE/ALTER;
-  * dbcon/ddlpackageproc/). A table is a named Parquet directory with a
-  * declared schema; all mutation is whole-file immutable-snapshot semantics
-  * (the reference's MVCC version buffer, versioning/BRM/dbrm.h:163-192, is
-  * subsumed by immutable Parquet + atomic directory swap).
+  * dbcon/ddlpackageproc/).
+  *
+  * Every table version is an immutable manifest,
+  * `<root>/<name>/_manifest/v<n>`: the schema, the live data files with
+  * their sizes, and the disabled partition specs. The manifest log plays
+  * the role of the reference's extent map and version buffer
+  * (versioning/BRM/extentmap.h, dbrm.h:163-192): it says which files
+  * belong to which version, and a writer never moves a file out from
+  * under a reader. A commit writes new files into a fresh commit
+  * directory `<root>/<name>/c<k>/`, then publishes the next manifest with
+  * one create-new under the table lock. A read pins the newest manifest
+  * and scans exactly its files, so it sees one whole version. Older
+  * manifests are the retained versions (`tableAsOf`, `rollbackTo`);
+  * `vacuumVersions` ages them out and deletes the files no retained
+  * manifest names, including those of a commit that crashed before it
+  * published.
   *
   * DML parity (reference: dbcon/dmlpackageproc insert/update/delete
-  * package processors):
-  * INSERT INTO…SELECT = append write; UPDATE/DELETE = read-modify-overwrite.
-  * At scale, `update`/`delete` rewrite only because Parquet is immutable —
-  * the operation is a full distributed scan+write, same cost class as the
-  * reference's block-rewrite through the version buffer.
+  * package processors): INSERT INTO…SELECT publishes the old file list
+  * plus the batch's files; UPDATE/DELETE/upsert read the pinned version
+  * and publish only the files of its replacement — a full distributed
+  * scan+write, the same cost class as the reference's block-rewrite
+  * through the version buffer.
   */
-class Catalog(spark: SparkSession, root: String,
-    bracketAttempts: Int = 20) {
-  private val tables = TrieMap.empty[String, StructType]
+class Catalog(spark: SparkSession, root: String) {
+  private val readRetries = 40
   Files.createDirectories(Paths.get(root))
 
   def tablePath(name: String): String = s"$root/$name"
@@ -46,7 +63,7 @@ class Catalog(spark: SparkSession, root: String,
   def createView(name: String, sql: String): Unit = {
     require(!Files.exists(viewFile(name)), s"view $name already exists")
     Files.createDirectories(viewsDir)
-    tables.keys.foreach(t => table(t).createOrReplaceTempView(t))
+    listTables.foreach(t => table(t).createOrReplaceTempView(t))
     spark.sql(sql).createOrReplaceTempView(name)
     Files.writeString(viewFile(name), sql)
   }
@@ -58,230 +75,112 @@ class Catalog(spark: SparkSession, root: String,
     spark.catalog.dropTempView(name)
   }
 
-  def listViews: Seq[String] =
-    if (!Files.exists(viewsDir)) Seq.empty
-    else scala.util.Using.resource(Files.list(viewsDir)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.endsWith(".sql")).map(_.stripSuffix(".sql"))
-        .toSeq.sorted
-    }
+  def listViews: Seq[String] = names(viewsDir)
+    .filter(_.endsWith(".sql")).map(_.stripSuffix(".sql")).sorted
 
   /** Attach a (possibly fresh) session to an existing catalog dir:
-    * discover persisted tables from their parquet directories, register
-    * every table as a temp view, then replay persisted view definitions
-    * (name-sorted; a view may reference catalog tables or any view that
-    * sorts before it). This is what makes catalog state survive the
-    * session — the reference's views outlive the connection the same
-    * way (ha_view.cpp resolves them from the frm store per statement). */
+    * register every table that has a published manifest as a temp view,
+    * then replay persisted view definitions (name-sorted; a view may
+    * reference catalog tables or any view that sorts before it). This is
+    * what makes catalog state survive the session — the reference's
+    * views outlive the connection the same way (ha_view.cpp resolves
+    * them from the frm store per statement). Takes no lock: a commit
+    * that crashed before publishing left no manifest, so there is
+    * nothing to recover. */
   def attach(): Unit = {
-    import scala.jdk.CollectionConverters._
-    val entries = scala.util.Using.resource(Files.list(Paths.get(root)))(
-      _.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filterNot(n => n.startsWith("_") || n.startsWith("."))
-        .toSeq)
-    val live = entries.filterNot(n =>
-      n.endsWith(".staging") || n.endsWith(".old")).toSet
-    // a table whose writer crashed INSIDE the commit window has no live
-    // dir — only <n>.old (pre-image) and/or <n>.staging (post-image).
-    // Filtering those names out silently DROPS the table from a fresh
-    // session forever (the crash spec passed only because it reused the
-    // pre-crash Catalog instance); run the same recovery the read path
-    // uses, under the table lock, and register the restored image.
-    val crashed = entries.collect {
-      case n if n.endsWith(".staging") => n.stripSuffix(".staging")
-      case n if n.endsWith(".old") => n.stripSuffix(".old")
-    }.distinct.filterNot(live)
-    crashed.foreach(n => TableLocks.withLock(root, n)(recover(n)))
-    (live ++ crashed.filter(n => Files.exists(Paths.get(tablePath(n)))))
-      .toSeq.sorted
-      .foreach { n =>
-        tables.put(n, table0(n).schema)
-        table(n).createOrReplaceTempView(n)
-      }
+    names(Paths.get(root)).filterNot(n => n.startsWith("_") ||
+      n.startsWith(".")).sorted.foreach(attachOne)
     listViews.foreach { v =>
       spark.sql(Files.readString(viewFile(v))).createOrReplaceTempView(v)
     }
   }
 
-  /** Attach exactly ONE table from the catalog dir (crash-recovering it
-    * under ITS OWN lock if a writer died mid-commit), returning false
-    * when nothing of the table exists yet. For callers that need a
-    * single table while already holding locks — a full attach()
-    * acquires OTHER tables' locks for their crash recovery, which is a
-    * cross-process lock-order inversion for anyone recording into one
-    * catalog table while holding another table's lock (QueryStats.append
-    * was exactly that: a writer holding a data-table lock then logging
-    * history could deadlock-by-timeout against this session). Reentrant
-    * when the caller already holds `name`'s lock. */
-  def attachOne(name: String): Boolean = {
-    def exists(suffix: String) =
-      Files.exists(Paths.get(tablePath(name) + suffix))
-    if (!exists("") && !exists(".old") && !exists(".staging")) false
-    else {
-      TableLocks.withLock(root, name)(recover(name))
-      if (!exists("")) false // remnants unrecoverable (incomplete stage)
-      else {
-        tables.put(name, table0(name).schema)
-        table(name).createOrReplaceTempView(name)
-        true
-      }
-    }
-  }
+  /** Attach exactly ONE table; false when it has no published version. */
+  def attachOne(name: String): Boolean =
+    try { table(name).createOrReplaceTempView(name); true }
+    catch { case _: IllegalArgumentException => false }
 
-  /** CREATE TABLE name (schema) — an empty Parquet directory with schema. */
-  def createTable(name: String, schema: StructType): Unit = {
-    require(!tables.contains(name), s"table $name already exists")
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema)
-      .write.mode(SaveMode.Overwrite).parquet(tablePath(name))
-    tables.put(name, schema)
-  }
+  /** CREATE TABLE name (schema) — version 0 with no files. */
+  def createTable(name: String, schema: StructType): Unit =
+    create(name, (schema, Nil, Nil))
 
   /** CREATE TABLE AS SELECT. */
-  def createTableAs(name: String, df: DataFrame): Unit = {
-    require(!tables.contains(name), s"table $name already exists")
-    df.write.mode(SaveMode.Overwrite).parquet(tablePath(name))
-    tables.put(name, df.schema)
-  }
+  def createTableAs(name: String, df: DataFrame): Unit =
+    create(name, (df.schema, Nil, write(name, 0, df, Nil)))
 
   /** CREATE TABLE AS SELECT, Hive-partitioned on `partCol` — the directory
     * layout that replaces the reference's extent-map partition placement
     * (reference: versioning/BRM/extentmap.h:116-132 partition/segment in
-    * EMEntry). */
+    * EMEntry). The schema is the one a read of the written directory
+    * infers: partition column last, typed from its directory values. */
   def createTablePartitionedAs(name: String, df: DataFrame,
-      partCol: String): Unit = {
-    require(!tables.contains(name), s"table $name already exists")
-    df.write.partitionBy(partCol).mode(SaveMode.Overwrite)
-      .parquet(tablePath(name))
-    tables.put(name, table0(name).schema)
-  }
+      partCol: String): Unit =
+    create(name, {
+      val files = write(name, 0, df, Seq(partCol))
+      val dir = Paths.get(tablePath(name), files.head._1).getParent.getParent
+      (spark.read.parquet(dir.toString).schema, Seq(partCol), files)
+    })
 
-  private def partDir(name: String, spec: String): Path =
-    Paths.get(tablePath(name), spec)
+  /** Every create publishes version 0 under the table lock, so a second
+    * catalog instance on the same root (another process included) can
+    * never replace a table that exists. */
+  private def create(name: String,
+      v0: => (StructType, Seq[String], Seq[(String, Long)])): Unit =
+    TableLocks.withLock(root, name) {
+      require(published(name).isEmpty, s"table $name already exists")
+      val (schema, partCols, files) = v0
+      publish(name, 0, Manifest(schema, partCols, files, Nil))
+    }
+
+  private def inPartition(file: String, spec: String): Boolean =
+    s"/$file".contains(s"/$spec/")
 
   /** caldisablepartitions analog (reference:
     * dbcon/mysql/ha_calpont_partition.cpp:790-894 partition mark): take a
-    * partition offline without deleting it, by renaming its directory to a
-    * dot-prefixed name Spark's file listing ignores. `spec` is the
-    * Hive-style dir name, e.g. "o_year=1995". */
-  def disablePartition(name: String, spec: String): Unit = {
-    val d = partDir(name, spec)
-    require(Files.exists(d), s"no partition $spec in table $name")
-    Files.move(d, d.resolveSibling("." + d.getFileName.toString))
-  }
+    * partition offline without deleting it. `spec` is the Hive-style dir
+    * name, e.g. "o_year=1995"; its files stay in the manifest, marked
+    * offline, so reads and DML skip them. */
+  def disablePartition(name: String, spec: String): Unit =
+    commit(name) { (m, _) =>
+      require(!m.disabled.contains(spec) &&
+        m.files.exists(f => inPartition(f._1, spec)),
+        s"no partition $spec in table $name")
+      m.copy(disabled = m.disabled :+ spec)
+    }
 
   /** calenablepartitions analog: bring a disabled partition back online. */
-  def enablePartition(name: String, spec: String): Unit = {
-    val d = partDir(name, spec)
-    val hidden = d.resolveSibling("." + d.getFileName.toString)
-    require(Files.exists(hidden), s"partition $spec of $name is not disabled")
-    Files.move(hidden, d)
-  }
+  def enablePartition(name: String, spec: String): Unit =
+    commit(name) { (m, _) =>
+      require(m.disabled.contains(spec),
+        s"partition $spec of $name is not disabled")
+      m.copy(disabled = m.disabled.filterNot(_ == spec))
+    }
 
   /** caldroppartitions analog: permanently remove a partition (live or
-    * disabled) — a directory delete, never a table rewrite. */
-  def dropPartition(name: String, spec: String): Unit = {
-    val d = partDir(name, spec)
-    deleteRecursively(d)
-    deleteRecursively(d.resolveSibling("." + d.getFileName.toString))
-  }
-
-  def table(name: String): DataFrame = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"no such table: $name"))
-    // bracket the eager file LISTING with a generation identity check:
-    // Spark's InMemoryFileIndex treats a root directory that vanishes
-    // between its glob and its leaf-listing as an EMPTY directory (by
-    // design — "was it deleted very recently?" is a WARNING), so a
-    // reader whose listing straddles rewrite()'s swap window can get a
-    // silently EMPTY relation instead of an error (observed ~1/500
-    // commits under the CatalogStress hammer). The live dir's file key
-    // (inode) changes with every swap; equal keys on both sides of the
-    // listing prove it saw exactly one committed generation. A swap
-    // landing AFTER the listing still fails loudly at scan time
-    // (FAILED_READ_FILE) and is absorbed by readCommitted's retry.
-    var attempt = 0
-    while (true) {
-      ensureLive(name)
-      val k1 = liveKey(name)
-      val df = spark.read.schema(schema).parquet(tablePath(name))
-      val k2 = liveKey(name)
-      if (k1 != null && k1 == k2) return df
-      if (attempt >= bracketAttempts) {
-        // N straight generation changes inside a ~ms listing window
-        // means a pathological commit rate. Round 10 returned the last
-        // (possibly-torn) listing with a stderr note — but readCommitted
-        // callers then treated it as a committed snapshot, quietly
-        // reinstating the silent-empty-read this bracket exists to
-        // kill. Fail TRANSIENTLY instead (FileNotFound-class, which
-        // readCommitted's retry absorbs like any other commit-window
-        // artifact), and leave a persisted incident an operator can
-        // query after the fact — stderr on an executor is ephemeral.
-        Incidents.record(root, "torn_listing", name,
-          s"generation bracket exhausted after $bracketAttempts " +
-            "attempts (pathological commit rate?)")
-        throw new java.io.FileNotFoundException(
-          s"table $name: listing never bracketed one stable generation " +
-            s"after $bracketAttempts attempts — transient, retry the read")
-      }
-      attempt += 1
-      Thread.sleep(10)
+    * disabled) — a manifest-only commit, never a table rewrite; the
+    * bytes go at the vacuum that ages out the last version naming them. */
+  def dropPartition(name: String, spec: String): Unit =
+    commit(name) { (m, _) =>
+      m.copy(files = m.files.filterNot(f => inPartition(f._1, spec)),
+        disabled = m.disabled.filterNot(_ == spec))
     }
-    sys.error("unreachable")
-  }
 
-  /** Identity of the live directory's current generation: the inode
-    * (fileKey) when the filesystem reports one, else the dir's mtime;
-    * null while the dir is missing (mid-swap). */
-  private def liveKey(name: String): AnyRef =
-    try {
-      val a = Files.readAttributes(Paths.get(tablePath(name)),
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      val fk = a.fileKey()
-      if (fk != null) fk
-      else java.lang.Long.valueOf(a.lastModifiedTime().toMillis)
-    } catch { case _: Exception => null }
+  def table(name: String): DataFrame = scan(name, manifest(name, current(name)))
 
-  /** Reader-side commit-window handling: a missing live dir means either
-    * a writer is inside rewrite()'s two-rename commit window (wait it
-    * out — the analog of the reference's brief reader block on the
-    * version-buffer lock at commit) or a writer crashed mid-swap (run
-    * recovery, under the table lock so recovery can never race an
-    * in-flight writer's swap). */
-  private def ensureLive(name: String): Unit = {
-    val live = Paths.get(tablePath(name))
-    if (Files.exists(live)) return
-    val deadline = System.nanoTime() + 30L * 1000000000L
-    while (!Files.exists(live) &&
-        TableLocks.heldByOtherLiveOwner(root, name) &&
-        System.nanoTime() < deadline)
-      Thread.sleep(5)
-    if (!Files.exists(live))
-      TableLocks.withLock(root, name)(recover(name))
-  }
-
-  /** Run a read action with snapshot-consistency retry. A concurrent
-    * rewrite swaps the WHOLE directory, so any successful scan sees
-    * either the complete pre-image or the complete post-image — never a
-    * mix; the only mid-commit artifact a reader can hit is a vanished
-    * path (listing raced the rename, or listed files moved to _versions
-    * before the scan ran). Those surface as file-not-found–class errors
-    * and are retried against the new snapshot. This is the MVCC read
-    * guarantee the dwweek concurrent load+query scenario exercises in
-    * the reference (utils/scenarios/dwweek/test/dwControlNightly.sh:
-    * daytime query groups against tables receiving bulk loads). */
-  def readCommitted[T](name: String, retries: Int = 40)(
-      action: DataFrame => T): T = {
+  /** Run a read action with snapshot-consistency retry. A read pins one
+    * manifest whose files are never rewritten, so a scan sees exactly one
+    * committed version; the one transient failure left is a vacuum
+    * deleting what a very slow reader pinned, retried against the
+    * current version. This is the MVCC read guarantee the reference's
+    * dwweek concurrent load+query scenario exercises
+    * (utils/scenarios/dwweek/test/dwControlNightly.sh). */
+  def readCommitted[T](name: String)(action: DataFrame => T): T = {
     def transient(e: Throwable): Boolean = {
       val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .take(8).toSeq
       chain.exists {
         case _: java.io.FileNotFoundException => true
-        // rename-swap victims surface as NoSuchFileException too, whose
+        // a vanished file surfaces as NoSuchFileException too, whose
         // message is just the PATH — no "does not exist" to match; and
         // Spark 4 wraps either in SparkException [FAILED_READ_FILE.*],
         // sometimes (NO_HINT) with the cause's text absent from every
@@ -296,104 +195,163 @@ class Catalog(spark: SparkSession, root: String,
     while (true) {
       try return action(table(name))
       catch {
-        case e: Exception if attempt < retries && transient(e) =>
+        case e: Exception if attempt < readRetries && transient(e) =>
           attempt += 1; Thread.sleep(25)
       }
     }
     sys.error("unreachable")
   }
 
-  /** Crash recovery: a failure between the two moves in rewrite() can leave
-    * no live dir while .old (pre-image) and/or .staging (post-image) exist.
-    * Restore the staged post-image if its write completed (_SUCCESS marker)
-    * — archiving the pre-image as the version the completed commit would
-    * have retained, so the crash leaves no gap in tableAsOf history —
-    * else fall back to the pre-image, so readers never see a missing
-    * table. */
-  private def recover(name: String): Unit = {
-    val live = Paths.get(tablePath(name))
-    if (!Files.exists(live)) {
-      val staged = Paths.get(tablePath(name) + ".staging")
-      val old = Paths.get(tablePath(name) + ".old")
-      if (Files.exists(staged) && Files.exists(staged.resolve("_SUCCESS"))) {
-        Files.move(staged, live)
-        archiveOld(name, old)
-      } else if (Files.exists(old)) {
-        Files.move(old, live)
-        deleteRecursively(staged)
-      }
-    }
+  // ---- the manifest log ------------------------------------------------
+
+  /** One table version: `files` are paths relative to the table directory
+    * with their byte sizes; files under a `disabled` spec are offline. */
+  private case class Manifest(schema: StructType, partCols: Seq[String],
+      files: Seq[(String, Long)], disabled: Seq[String]) {
+    def offline(file: String): Boolean =
+      disabled.exists(inPartition(file, _))
+    def render: String = (Seq(s"schema ${schema.json}") ++
+      partCols.map("partition " + _) ++ disabled.map("disabled " + _) ++
+      files.map { case (f, n) => s"file $n $f" }).mkString("", "\n", "\n")
   }
 
-  /** Retain a displaced pre-image directory as the table's next version
-    * (no-op when `old` doesn't exist). Shared by the commit sequence and
-    * both salvage paths (recover's staged promotion; a leftover .old a
-    * crash stranded between commitStaged's swap and its versioning move
-    * — deleting that, as pre-round-11 code did, silently cut a snapshot
-    * out of the rollbackTo/tableAsOf history). */
-  private def archiveOld(name: String, old: Path): Unit =
-    if (Files.exists(old)) {
-      val vdir = versionsDir(name)
-      Files.createDirectories(vdir)
-      Files.move(old, vdir.resolve(
-        s"v${versions(name).lastOption.map(_ + 1).getOrElse(0)}"))
+  private def parse(text: String): Manifest = {
+    val lines = text.linesIterator.map(_.split(" ", 2)).toSeq
+    def all(key: String) = lines.collect { case Array(`key`, v) => v }
+    Manifest(DataType.fromJson(all("schema").head).asInstanceOf[StructType],
+      all("partition"),
+      all("file").map { s => val Array(n, f) = s.split(" ", 2); f -> n.toLong },
+      all("disabled"))
+  }
+
+  private def manifestDir(name: String): Path =
+    Paths.get(tablePath(name), "_manifest")
+
+  private def names(dir: Path): Seq[String] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else scala.util.Using.resource(Files.list(dir))(
+      _.iterator().asScala.map(_.getFileName.toString).toSeq)
+
+  /** Published versions of a table, oldest first. */
+  private def published(name: String): Seq[Int] =
+    names(manifestDir(name)).filter(_.matches("v\\d+"))
+      .map(_.drop(1).toInt).sorted
+
+  private def manifest(name: String, v: Int): Manifest =
+    parse(Files.readString(manifestDir(name).resolve(s"v$v")))
+
+  /** The newest published version. A directory in the pre-manifest
+    * layout (data and `_SUCCESS` at its top, no `_manifest`) is refused
+    * by name: there is no second read path for it. */
+  private def current(name: String): Int =
+    published(name).lastOption.getOrElse {
+      val dir = Paths.get(tablePath(name))
+      if (Files.exists(dir.resolve("_SUCCESS")))
+        throw new IllegalStateException(s"$dir holds a table in the " +
+          "pre-manifest layout; delete it and create the table again")
+      throw new IllegalArgumentException(s"no such table: $name")
     }
 
-  /** INSERT INTO name SELECT … (append). Serialized by the table lock
-    * like every DML statement (the reference's DMLProc takes the table
-    * lock for inserts too — dbcon/dmlpackageproc), and COMMITTED like
-    * one: a bare `Append` into the live dir publishes the batch's part
-    * files one rename at a time, so a concurrent reader could list the
-    * pre-image plus HALF the batch — with the dir inode unchanged, so
-    * neither table()'s generation bracket nor readCommitted's retry
-    * can tell. Instead the batch stages next to HARD LINKS of the
-    * current files (O(files) metadata, no data copy) and publishes
-    * through the same atomic rename-aside swap as rewrite() — readers
-    * see the complete pre- or post-image, never a torn batch, and the
-    * pre-image joins the version history like every other DML. */
-  def insertIntoSelect(name: String, df: DataFrame): Unit = {
-    require(tables.contains(name), s"no such table: $name")
+  /** Publish `m` as version `v`: written aside, then hard-linked into
+    * place. link(2) fails on an existing name, so a version appears
+    * exactly once, complete, and is never overwritten. */
+  private def publish(name: String, v: Int, m: Manifest): Unit = {
+    val dir = manifestDir(name)
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, ".v", ".tmp")
+    try {
+      Files.writeString(tmp, m.render)
+      Files.createLink(dir.resolve(s"v$v"), tmp)
+    } finally Files.delete(tmp)
+  }
+
+  /** Write `df` into a fresh commit directory (numbered from the version
+    * it is written for, skipping any an unpublished commit left behind)
+    * and return its data files with their sizes. */
+  private def write(name: String, v: Int, df: DataFrame,
+      partCols: Seq[String]): Seq[(String, Long)] = {
+    val table = Paths.get(tablePath(name))
+    val dir = Iterator.from(v).map(k => table.resolve(s"c$k"))
+      .find(!Files.exists(_)).get
+    df.write.partitionBy(partCols: _*).parquet(dir.toString)
+    scala.util.Using.resource(Files.walk(dir))(_.iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !"_.".contains(p.getFileName.toString.head))
+      .map(p => table.relativize(p).toString -> Files.size(p)).toSeq.sorted)
+  }
+
+  /** A DataFrame over exactly `m`'s online files. Spark is handed the
+    * files, their sizes and their partition values from the manifest, so
+    * a read lists no directory and runs no listing job, however many
+    * files the version holds. */
+  private def scan(name: String, m: Manifest): DataFrame = {
+    val dir = new HPath(tablePath(name))
+    val base = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(dir)
+    val files = m.files.filterNot(f => m.offline(f._1)).map { case (f, n) =>
+      new FileStatus(n, false, 1, 0L, 0L, new HPath(base, f)) }
+    val partSchema = StructType(m.partCols.map(m.schema(_)))
+    val tz = java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val parts = files.map(_.getPath.getParent).distinct.map { d =>
+      val kv = Iterator.iterate(d)(_.getParent).takeWhile(_ != base)
+        .map(_.getName.split("=", 2)).collect { case Array(k, v) => k -> v }
+        .toMap
+      PartitionPath(InternalRow.fromSeq(partSchema.map(f => PartitioningUtils
+        .castPartValueToDesiredType(f.dataType, kv(f.name), tz))), d)
+    }
+    val listing = new FileStatusCache {
+      private val byPath = files.map(f => f.getPath -> Array(f)).toMap
+      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] =
+        byPath.get(p)
+      def putLeafFiles(p: HPath, leaves: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
+      Some(m.schema), listing, Some(PartitionSpec(partSchema, parts)))
+    val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      StructType(m.schema.filterNot(f => m.partCols.contains(f.name))), None,
+      new ParquetFileFormat, Map.empty)(spark))
+    if (m.partCols.isEmpty) df else df.select(m.schema.fieldNames.map(col): _*)
+  }
+
+  /** The one COMMIT sequence, serialized end-to-end by the per-table
+    * advisory lock (reference: DMLProc acquires the table lock before
+    * any DML and holds it through commit —
+    * dbcon/dmlpackageproc/commandpackageprocessor.cpp:34,
+    * versioning/BRM tablelockdata.h). `next` derives the new manifest
+    * from the current one — reading it, writing a commit directory for
+    * the version it is given — and the result is published. The
+    * snapshot read happens inside the lock, so two concurrent upserts
+    * compose instead of the second erasing the first's rows. */
+  private def commit(name: String)(next: (Manifest, Int) => Manifest): Unit =
     TableLocks.withLock(root, name) {
-      // recover BEFORE appending: after a crash inside the commit
-      // window the live dir is missing and the pre-image is parked in
-      // .old — appending against nothing would mint a fresh live dir
-      // with only the new batch and silently orphan every pre-crash row
-      recover(name)
-      stageAppend(name, df)
-      commitStaged(name)
-    }
-  }
-
-  /** Build `<name>.staging` = hard links to the live image's files plus
-    * the appended batch. _SUCCESS is deliberately NOT linked: the batch
-    * write re-creates it at job commit, so recover() can only ever
-    * promote a staged dir whose batch finished. */
-  private def stageAppend(name: String, df: DataFrame): Unit = {
-    val live = Paths.get(tablePath(name))
-    val staged = Paths.get(tablePath(name) + ".staging")
-    FsUtil.deleteRecursively(staged)
-    linkTree(live, staged)
-    df.write.mode(SaveMode.Append).parquet(staged.toString)
-  }
-
-  /** Recursively hard-link `src`'s data tree under `dst` (files only —
-    * directories are recreated), skipping _SUCCESS and dot-files. */
-  private def linkTree(src: Path, dst: Path): Unit = {
-    Files.createDirectories(dst)
-    scala.util.Using.resource(Files.list(src)) { st =>
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.foreach { p =>
-        val n = p.getFileName.toString
-        if (!n.startsWith(".") && n != "_SUCCESS") {
-          if (Files.isDirectory(p)) linkTree(p, dst.resolve(n))
-          else Files.createLink(dst.resolve(n), p)
-        }
+      val v = current(name) + 1
+      val m = next(manifest(name, v - 1), v)
+      // crash-injection point for the soak's kill -9 drill (reference: a
+      // DMLProc crash mid-commit is what cleartablelock recovery exists
+      // for, commandpackageprocessor.cpp:34): with GRAFT_SWAP_PAUSE_MS
+      // set, park and flag at the worst instant — files written, manifest
+      // not published, lock held. A no-op when the variable is unset.
+      sys.env.get("GRAFT_SWAP_PAUSE_MS").foreach { ms =>
+        val flag = Paths.get(root, "_locks", s".midswap_$name")
+        Files.createDirectories(flag.getParent)
+        Files.writeString(flag, s"${ProcessHandle.current().pid()}\n")
+        try Thread.sleep(ms.toLong)
+        finally Files.deleteIfExists(flag)
       }
+      publish(name, v, m)
     }
-  }
 
-  /** UPDATE name SET (via transform) WHERE (via predicate): read-modify-
-    * overwrite through a staging dir so a failed write never corrupts. */
+  /** INSERT INTO name SELECT … (append): the new version is the old file
+    * list plus the batch's files, so a reader sees the whole batch or
+    * none of it. Serialized by the table lock like every DML statement
+    * (the reference's DMLProc takes the table lock for inserts too). */
+  def insertIntoSelect(name: String, df: DataFrame): Unit =
+    commit(name) { (m, v) =>
+      m.copy(files = m.files ++ write(name, v, df, m.partCols))
+    }
+
+  /** UPDATE name SET (via transform) WHERE (via predicate). */
   def update(name: String, transform: DataFrame => DataFrame): Unit =
     rewrite(name, transform)
 
@@ -401,142 +359,68 @@ class Catalog(spark: SparkSession, root: String,
   def delete(name: String, keep: DataFrame => DataFrame): Unit =
     rewrite(name, keep)
 
-  /** The one read-modify-write path, serialized end-to-end by the
-    * per-table advisory lock (reference: DMLProc acquires the table lock
-    * before any update/delete and holds it through commit —
-    * dbcon/dmlpackageproc/commandpackageprocessor.cpp:34,
-    * versioning/BRM tablelockdata.h). The SNAPSHOT READ happens inside
-    * the lock (the staged write executes `f(table)` here), so two
-    * concurrent upserts compose instead of the second erasing the
-    * first's rows with a swap computed from a stale pre-image. */
+  /** The one read-modify-write path: the new version holds only the files
+    * `f` writes from the pinned version, plus the offline partitions'
+    * files, carried forward untouched — offline means invisible to reads
+    * and writes alike, the reference's disabled-partition semantics
+    * (ha_calpont_partition.cpp partition mark). A failed write publishes
+    * nothing. */
   private def rewrite(name: String, f: DataFrame => DataFrame): Unit =
-      TableLocks.withLock(root, name) {
-    require(tables.contains(name), s"no such table: $name")
-    recover(name)
-    val staged = tablePath(name) + ".staging"
-    f(table(name)).write.mode(SaveMode.Overwrite).parquet(staged)
-    commitStaged(name)
-  }
-
-  /** The one COMMIT sequence (shared by rewrite and the staged append
-    * paths): swap the completed `.staging` post-image in via
-    * rename-aside so a crash mid-sequence never leaves the table
-    * missing — worst case the data survives in .old or .staging — then
-    * retain the displaced pre-image as the next version. */
-  private def commitStaged(name: String): Unit = {
-    val live = Paths.get(tablePath(name))
-    val old = Paths.get(tablePath(name) + ".old")
-    val staged = Paths.get(tablePath(name) + ".staging")
-    // a leftover .old here means a PREVIOUS commit crashed between its
-    // staging→live swap and its versioning move: live is that commit's
-    // post-image and .old its never-versioned pre-image. Salvage it
-    // into the version history (what the crashed commit was about to
-    // do) instead of deleting it — a delete leaves a silent gap in
-    // tableAsOf/rollbackTo.
-    archiveOld(name, old)
-    // disabled partitions (dot-prefixed dirs, see disablePartition)
-    // ride EVERY commit: staging is built from the live listing —
-    // which, by design, excludes hidden dirs — so without this
-    // re-link the first DML while a partition is offline would drop
-    // the partition from the live image and strand its data in a
-    // vacuumable version snapshot (enablePartition would then fail).
-    // Hard links only: the bytes stay shared with the displaced
-    // pre-image snapshot, and the offline data is intentionally NOT
-    // transformed by the DML — offline means invisible to reads and
-    // writes alike, exactly the reference's disabled-partition
-    // semantics (ha_calpont_partition.cpp partition mark).
-    if (Files.exists(live) && Files.exists(staged))
-      scala.util.Using.resource(Files.list(live)) { st =>
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(p => Files.isDirectory(p) &&
-            p.getFileName.toString.startsWith("."))
-          .foreach { p =>
-            val dst = staged.resolve(p.getFileName.toString)
-            if (!Files.exists(dst)) linkTree(p, dst)
-          }
-      }
-    Files.move(live, old)
-    // crash-injection window for the dwweek recovery drill (reference:
-    // a DMLProc crash mid-commit is what cleartablelock recovery exists
-    // for, dbcon/dmlpackageproc/commandpackageprocessor.cpp:34): with
-    // GRAFT_SWAP_PAUSE_MS set, park at the WORST instant — no live dir,
-    // pre-image in .old, post-image staged, table lock held — and flag
-    // it, so the soak harness can kill -9 this writer exactly here and
-    // prove the stale-lock steal + recover() path restores a consistent
-    // snapshot for the next reader/writer. A no-op in production (env
-    // unset).
-    sys.env.get("GRAFT_SWAP_PAUSE_MS").foreach { ms =>
-      val flag = Paths.get(root, "_locks", s".midswap_$name")
-      Files.createDirectories(flag.getParent)
-      Files.writeString(flag, s"${ProcessHandle.current().pid()}\n")
-      try Thread.sleep(ms.toLong)
-      finally Files.deleteIfExists(flag)
+    commit(name) { (m, v) =>
+      val out = f(scan(name, m))
+      val partCols = m.partCols.filter(out.columns.contains)
+      Manifest(out.schema, partCols, write(name, v, out, partCols) ++
+        m.files.filter(x => m.offline(x._1)), m.disabled)
     }
-    Files.move(staged, live)
-    // MVCC snapshot retention (reference: versioning/BRM version buffer,
-    // dbrm.h:163-192 — a DML block-rewrite keeps the pre-image until the
-    // transaction's VSS entries age out): the displaced pre-image becomes
-    // the NEXT version under _versions/<name>, readable via tableAsOf.
-    // Numbered max+1, never count-based: after vacuumVersions([v0,v1] →
-    // [v1]) a count-derived name collides with a retained one — the
-    // move throws AFTER the live swap landed, stranding the pre-image
-    // in .old — salvaged by the NEXT commit's archiveOld (or recover),
-    // so even that crash leaves no history gap — and non-colliding
-    // counts misorder history so "oldest first" (and therefore vacuum
-    // itself) lies. Rename only — no data copy; at 100 TB retention is
-    // bounded by vacuumVersions (the aging analog), not the write path.
-    archiveOld(name, old)
-  }
 
   // ---- time travel ----------------------------------------------------
 
-  private def versionsDir(name: String): Path =
-    Paths.get(root, "_versions", name)
+  /** Retained versions older than the current one, oldest first (v0 = the
+    * state before the first mutation). */
+  def versions(name: String): Seq[Int] = published(name).dropRight(1)
 
-  /** Retained pre-image versions for a table, oldest first (v0 = the
-    * state before the first versioned mutation). */
-  def versions(name: String): Seq[Int] = {
-    val d = versionsDir(name)
-    if (!Files.exists(d)) Seq.empty
-    else scala.util.Using.resource(Files.list(d)) { st =>
-      // resource-wrapped: this runs on EVERY commit (version numbering)
-      // — an unclosed directory stream here leaks one fd per DML until
-      // the writer session hits its ulimit
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("v")).map(_.drop(1).toInt)
-        .toSeq.sorted
-    }
-  }
-
-  /** SELECT … AS OF version: read the retained pre-image snapshot v (the
-    * reference's version-buffer read path for a not-yet-aged block). */
+  /** SELECT … AS OF version: read retained version v (the reference's
+    * version-buffer read path for a not-yet-aged block). */
   def tableAsOf(name: String, v: Int): DataFrame = {
-    val p = versionsDir(name).resolve(s"v$v")
-    require(Files.exists(p), s"no version $v of $name retained")
-    spark.read.parquet(p.toString)
+    require(published(name).contains(v), s"no version $v of $name retained")
+    scan(name, manifest(name, v))
   }
 
-  /** Age out retained snapshots older than `keep` versions (the VSS
-    * aging analog — at scale a retention window, not forever). Under
-    * the table lock: racing a rewrite's version-number assignment
-    * would let the vacuum read a version list mid-mutation. */
+  /** Age out retained versions older than `keep` (the VSS aging analog —
+    * at scale a retention window, not forever), then delete every file
+    * no remaining manifest names: an aged-out version's, a dropped
+    * partition's, or an unpublished commit's. Under the table lock, so no
+    * commit is writing files it has not published yet. */
   def vacuumVersions(name: String, keep: Int): Unit =
     TableLocks.withLock(root, name) {
       versions(name).dropRight(keep).foreach(v =>
-        deleteRecursively(versionsDir(name).resolve(s"v$v")))
+        Files.delete(manifestDir(name).resolve(s"v$v")))
+      val named = published(name).flatMap(manifest(name, _).files.map(_._1))
+        .toSet
+      val table = Paths.get(tablePath(name))
+      // a data file keeps its checksum sidecar `.<file>.crc`
+      def owner(f: String) = f.replaceFirst("(^|/)\\.([^/]+)\\.crc$", "$1$2")
+      val paths = scala.util.Using.resource(Files.walk(table))(
+        _.iterator().asScala.toSeq.reverse)
+      paths.foreach { p =>
+        val f = table.relativize(p).toString
+        if (p == table || f.startsWith("_manifest")) ()
+        else if (Files.isDirectory(p)) {
+          if (names(p).isEmpty) Files.delete(p)
+        } else if (!named(owner(f))) Files.delete(p)
+      }
     }
 
-  /** ROLLBACK analog: restore the retained pre-image snapshot v as the
-    * current table state (reference: a DML rollback re-applies the
-    * version buffer's undo images, versioning/BRM/dbrm.h:163-192 +
-    * dmlproc rollback path). Goes through the versioned `rewrite`, so
-    * the state being rolled back is itself retained as a new version —
-    * the audit trail survives the abort, and at 100 TB the cost is one
-    * snapshot copy, never a log replay. */
+  /** ROLLBACK analog: republish retained version v's files as the current
+    * state (reference: a DML rollback re-applies the version buffer's
+    * undo images, versioning/BRM/dbrm.h:163-192 + dmlproc rollback
+    * path). The state being rolled back stays retained as a version —
+    * the audit trail survives the abort — and no data is copied. */
   def rollbackTo(name: String, v: Int): Unit =
-    rewrite(name, _ => tableAsOf(name, v))
+    commit(name) { (_, _) =>
+      require(published(name).contains(v), s"no version $v of $name retained")
+      manifest(name, v)
+    }
 
   /** INSERT … ON DUPLICATE KEY UPDATE (MySQL upsert, full-row form): a
     * batch row whose key matches an existing row replaces it; the rest
@@ -610,10 +494,9 @@ class Catalog(spark: SparkSession, root: String,
     * reference's bulk-load table lock; ids within the batch cost one
     * count + one prefix-scan over the batch only, never the table. */
   def insertAutoInc(name: String, colName: String, batch: DataFrame,
-      orderBy: Seq[org.apache.spark.sql.Column]): Long = {
-    require(tables.contains(name), s"no such table: $name")
+      orderBy: Seq[org.apache.spark.sql.Column]): Long =
     TableLocks.withLock(root, name) {
-      recover(name) // same crashed-rewrite guard as every append path
+      val cols = manifest(name, current(name)).schema.fieldNames.toSeq
       val first = autoIncNext(name, colName)
       // materialize the batch ONCE: count() and the assignment write are
       // two jobs, and a non-deterministic batch source re-evaluated
@@ -627,70 +510,40 @@ class Catalog(spark: SparkSession, root: String,
           Seq(graft.functions.Prefix.rowNumber(rn)))
         .withColumn(colName, col(rn) + lit(first - 1L))
         .drop(rn)
-      val cols = tables(name).fieldNames.toSeq
-      stageAppend(name, assigned.select(cols.head, cols.tail: _*))
-      commitStaged(name)
+      insertIntoSelect(name, assigned.select(cols.head, cols.tail: _*))
       first
     }
-  }
 
-  /** TRUNCATE TABLE. */
-  def truncate(name: String): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"no such table: $name"))
-    TableLocks.withLock(root, name) {
-      recover(name) // clear any crashed-rewrite leftovers (.old/.staging)
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .write.mode(SaveMode.Overwrite).parquet(tablePath(name))
-    }
-  }
+  /** TRUNCATE TABLE: publishes an empty version (the truncated state
+    * stays retained like any other). */
+  def truncate(name: String): Unit =
+    commit(name)((m, _) => m.copy(files = Nil, disabled = Nil))
 
-  /** DROP TABLE — under the table lock (dropping mid-rewrite would
-    * yank the live dir out of the swap sequence), and scrubbing every
-    * per-table sidecar: retained versions, auto-increment counters,
-    * and crash remnants. Leaving them would let a later CREATE of the
-    * same name serve the DROPPED table's history through tableAsOf and
-    * resume its id sequence. */
+  /** DROP TABLE — under the table lock, deleting the table directory
+    * (every version and file) and the auto-increment counters. Leaving
+    * them would let a later CREATE of the same name serve the DROPPED
+    * table's history through tableAsOf and resume its id sequence. */
   def dropTable(name: String): Unit = TableLocks.withLock(root, name) {
-    tables.remove(name)
-    deleteRecursively(Paths.get(tablePath(name)))
-    deleteRecursively(Paths.get(tablePath(name) + ".old"))
-    deleteRecursively(Paths.get(tablePath(name) + ".staging"))
-    deleteRecursively(versionsDir(name))
+    FsUtil.deleteRecursively(Paths.get(tablePath(name)))
     val ai = Paths.get(root, "_autoinc")
-    if (Files.exists(ai))
-      scala.util.Using.resource(Files.list(ai)) { st =>
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"$name."))
-          .toSeq
-      }.foreach(p => Files.deleteIfExists(p))
+    names(ai).filter(_.startsWith(s"$name."))
+      .foreach(n => Files.deleteIfExists(ai.resolve(n)))
   }
 
   /** ALTER TABLE ADD COLUMN (with default value, rewrite). */
   def addColumn(name: String, colName: String,
-      value: org.apache.spark.sql.Column): Unit = {
+      value: org.apache.spark.sql.Column): Unit =
     rewrite(name, _.withColumn(colName, value))
-    tables.put(name, table0(name).schema)
-  }
 
   /** ALTER TABLE DROP COLUMN. */
-  def dropColumn(name: String, colName: String): Unit = {
+  def dropColumn(name: String, colName: String): Unit =
     rewrite(name, _.drop(colName))
-    tables.put(name, table0(name).schema)
-  }
 
-  private def table0(name: String): DataFrame =
-    spark.read.parquet(tablePath(name))
+  /** Tables with a published version under this catalog root. */
+  def listTables: Seq[String] =
+    names(Paths.get(root)).filter(published(_).nonEmpty).sorted
 
-  def listTables: Seq[String] = tables.keys.toSeq.sorted
-
-  /** Recorded operational incidents for this catalog root (torn-listing
-    * bailouts, lock-restore losses) — queryable with the engine itself,
-    * like the lock view. */
+  /** Recorded operational incidents for this catalog root (lock-restore
+    * losses) — queryable with the engine itself, like the lock view. */
   def incidents: DataFrame = Incidents.df(spark, root)
-
-  private def deleteRecursively(p: Path): Unit =
-    FsUtil.deleteRecursively(p)
 }

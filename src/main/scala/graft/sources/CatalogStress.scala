@@ -6,18 +6,21 @@ import org.apache.spark.sql.functions.{col, lit}
 /** Throwaway-grade stress main for the reader-vs-rewrite snapshot race:
   * one writer thread commits locked full-table updates as fast as it
   * can while N reader threads take readCommitted snapshots; any read
-  * that is not exactly one complete generation is dumped with the live
-  * directory listing at the moment of observation. Used to reproduce
-  * (and then pin) the round-10 mixed-leg anomalies; kept because a
-  * filesystem-race reproducer is worth more than the bug report it
-  * came from. Args: [durationSec] [readers]. */
+  * that is not exactly one complete generation is dumped with the files
+  * of the manifest it pinned. Used to reproduce (and then pin) the
+  * round-10 mixed-leg anomalies; kept because a filesystem-race
+  * reproducer is worth more than the bug report it came from.
+  * Args: [durationSec] [readers]; runs on SPARK_GRAFT_CPUS cores
+  * (default: all). */
 object CatalogStress {
   def main(args: Array[String]): Unit = {
     val durSec = args.headOption.map(_.toInt).getOrElse(60)
     val readers = args.drop(1).headOption.map(_.toInt).getOrElse(4)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -35,32 +38,26 @@ object CatalogStress {
       while (!stop) { cat.update("t", _.withColumn("gen", lit(g)))
         commits += 1; g += 1 }
     })
-    def listLive(): String =
-      try {
-        import scala.jdk.CollectionConverters._
-        val p = java.nio.file.Paths.get(s"$tmp/cat/t")
-        if (!java.nio.file.Files.exists(p)) "<missing>"
-        else scala.util.Using.resource(java.nio.file.Files.list(p))(
-          _.iterator().asScala.map(f =>
-            s"${f.getFileName}:${java.nio.file.Files.size(f)}")
-            .mkString(", "))
-      } catch { case e: Exception => s"<list failed: $e>" }
     val rts = (1 to readers).map { r =>
       new Thread(() => {
         while (!stop) {
+          // the files of the manifest the last read attempt pinned
+          var pinned = Seq.empty[String]
           try {
-            val gens = cat.readCommitted("t")(
-              _.groupBy("gen").count().collect())
+            val gens = cat.readCommitted("t") { df =>
+              pinned = df.inputFiles.toSeq.sorted
+              df.groupBy("gen").count().collect()
+            }
             nreads.incrementAndGet()
             if (gens.length != 1 || gens(0).getLong(1) != expect) {
               anomalies.incrementAndGet()
               System.err.println(s"[stress] reader$r BAD SNAPSHOT " +
-                s"gens=${gens.mkString(",")} live={${listLive()}}")
+                s"gens=${gens.mkString(",")} pinned={${pinned.mkString(", ")}}")
             }
           } catch { case e: Throwable =>
             anomalies.incrementAndGet()
             System.err.println(s"[stress] reader$r EXCEPTION $e " +
-              s"live={${listLive()}}")
+              s"pinned={${pinned.mkString(", ")}}")
             var c = e.getCause; var d = 0
             while (c != null && d < 6) {
               System.err.println(s"[stress]   cause: $c"); c = c.getCause

@@ -10,13 +10,12 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * persisted state, not from a scrollback that no longer exists).
   *
   * Incidents recorded today:
-  *  - `torn_listing` — Catalog.table's generation bracket exhausted
-  *    its attempts under a pathological commit rate (the read then
-  *    FAILS transiently instead of returning an unverified listing);
   *  - `lock_restore_lost` — TableLocks.removeClaim displaced a live
   *    successor claim and could not restore it (mutual exclusion may
   *    have been violated; the displaced stamp is preserved in a
   *    grave file for forensics).
+  * `torn_listing` came from Catalog's old directory-listing bracket and
+  * is no longer recorded; logs that hold it still parse.
   *
   * Storage is one O_APPEND text line per incident under
   * `<root>/_incidents/log` — small single writes are atomic on POSIX,

@@ -11,12 +11,12 @@ import org.apache.spark.sql.SparkSession
   * Runs one locked `Catalog.upsert` of the parquet batch at `batchPath`
   * into `table` under `root`, keyed on `keys` (comma-separated). The
   * parent harness sets GRAFT_SWAP_PAUSE_MS so the upsert parks inside
-  * the commit window (live dir renamed aside, post-image staged, table
+  * the commit window (files written, manifest not yet published, table
   * lock held) and flags `<root>/_locks/.midswap_<table>`; the parent
   * then kill -9s this process at that flag — a real cross-process
   * mid-commit crash, not a simulated one — and proves the next
-  * reader/writer recovers through the stale-lock steal + recover()
-  * path with a consistent snapshot.
+  * reader/writer sees a consistent snapshot and gets the lock through
+  * the stale-lock steal.
   */
 object SoakCrashWriter {
   def main(args: Array[String]): Unit = {

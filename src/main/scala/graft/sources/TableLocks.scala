@@ -11,9 +11,8 @@ import scala.collection.concurrent.TrieMap
   * dbcon/dmlpackageproc/commandpackageprocessor.cpp:34 CLEANUP/table-lock
   * release path; versioning/BRM tablelockdata.h — lock state keyed by
   * table OID with owner/session/txn). Without it, two concurrent writers
-  * interleaving Catalog's rename-aside swap can silently lose one
-  * writer's batch (writer A swaps in a rewrite computed from a pre-B
-  * snapshot, erasing B's committed rows).
+  * can silently lose one writer's batch (writer A publishes a rewrite
+  * computed from a pre-B snapshot, erasing B's committed rows).
   *
   * Two layers, both advisory (readers never block — MVCC semantics):
   *
@@ -300,9 +299,7 @@ object TableLocks {
   }
 
   /** True while a DIFFERENT live owner (or a not-yet-readable claim)
-    * holds the table's lock file. Used by the read path to distinguish
-    * "a writer is mid-swap, wait for the live dir" from "a writer
-    * crashed, run recovery". */
+    * holds the table's lock file. */
   def heldByOtherLiveOwner(root: String, table: String): Boolean = {
     val lf = lockFile(root, table)
     Files.exists(lf) && (readClaim(lf) match {

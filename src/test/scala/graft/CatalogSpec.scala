@@ -142,30 +142,116 @@ class CatalogSpec extends GraftSuite {
     assert(cat.versions("t") == Seq(2), "vacuum must age out the OLDEST")
   }
 
-  test("attach() recovers a table whose writer crashed mid-swap") {
-    // a fresh session attaching a catalog whose writer died inside the
-    // commit window (live dir missing, pre-image in .old) must restore
-    // and register the table — round-10's review found attach()
-    // silently filtering the remnants out, losing the table forever
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_cat").toString
+  /** Plant what a writer killed between writing its files and publishing
+    * its manifest leaves behind: a commit directory with complete parquet
+    * files, in the directory the next commit would have used, and no
+    * manifest naming them. */
+  private def plantUnpublished(root: String, name: String, commitDir: String,
+      rows: org.apache.spark.sql.DataFrame): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(root, name, commitDir)
+    rows.write.parquet(dir.toString)
+    dir
+  }
+
+  /** A table "t" with a published v0 (a, b) and current version v1
+    * (A, B), and a writer that crashed between writing commit `c2` and
+    * publishing v2. */
+  private def crashedMidCommit(): (String, Catalog, java.nio.file.Path) = {
+    val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
     val cat = new Catalog(spark, root)
     cat.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
-    Files.move(Paths.get(s"$root/t"), Paths.get(s"$root/t.old"))
+    cat.update("t", _.withColumn("name", upper($"name")))   // publishes v1
+    val orphan = plantUnpublished(root, "t", "c2",
+      Seq((9L, "x"), (8L, "y"), (7L, "z")).toDF("id", "name"))
+    (root, cat, orphan)
+  }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.select("id").as[Long].collect().sorted.toSeq
+
+  test("attach() recovers a table whose writer crashed mid-swap") {
+    // the commit window is now the span between writing c<k>/ and
+    // publishing the manifest: a fresh session attaching after a crash
+    // there must register the table and serve the complete published
+    // image, never the unpublished files
+    val (root, _, _) = crashedMidCommit()
     val fresh = new Catalog(spark.newSession(), root)
     fresh.attach()
     assert(fresh.listTables == Seq("t"),
-      "crashed table must be recovered and registered on attach")
-    assert(fresh.table("t").count() == 2,
-      "recovered image must be the complete pre-image")
-    // the complete staged post-image variant recovers forward instead
-    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name")
-      .write.parquet(s"$root/t.staging")
-    Files.move(Paths.get(s"$root/t"), Paths.get(s"$root/t.old"))
-    val fresh2 = new Catalog(spark.newSession(), root)
-    fresh2.attach()
-    assert(fresh2.table("t").count() == 3,
-      "a completed staged post-image must win recovery on attach")
+      "crashed table must be registered on attach")
+    assert(ids(fresh.table("t")) == Seq(1L, 2L),
+      "a fresh session must not see the unpublished files")
+    assert(fresh.table("t").select("name").as[String].collect().sorted
+      .toSeq == Seq("A", "B"), "attach must serve the published image")
+    sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(root),
+      swallowErrors = true)
+  }
+
+  test("catalog recovers a table whose live dir vanished mid-rewrite") {
+    // a rewrite that crashed before publishing leaves the current
+    // version intact: the same instance keeps reading it, and the next
+    // rewrite publishes over it with no gap in the numbering
+    val (root, cat, _) = crashedMidCommit()
+    assert(ids(cat.table("t")) == Seq(1L, 2L))
+    cat.delete("t", _.filter($"id" === 1L))
+    assert(cat.versions("t") == Seq(0, 1))
+    assert(cat.tableAsOf("t", 1).select("name").as[String].collect()
+      .sorted.toSeq == Seq("A", "B"))
+    assert(ids(cat.table("t")) == Seq(1L))
+    sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(root),
+      swallowErrors = true)
+  }
+
+  test("a pre-image stranded in .old is salvaged into version history") {
+    // versions are manifests published once and never moved, so a crash
+    // cannot strand a pre-image: history keeps it, the unpublished
+    // commit never becomes a version, and the next vacuum deletes the
+    // orphaned files while every retained version stays readable
+    val (root, cat, orphan) = crashedMidCommit()
+    assert(cat.versions("t") == Seq(0))
+    assert(ids(cat.tableAsOf("t", 0)) == Seq(1L, 2L))
+    intercept[IllegalArgumentException](cat.tableAsOf("t", 2))
+    cat.delete("t", _.filter($"id" === 1L))
+    assert(java.nio.file.Files.exists(orphan))
+    cat.vacuumVersions("t", keep = 2)
+    assert(!java.nio.file.Files.exists(orphan),
+      "vacuum must delete unpublished files")
+    assert(cat.versions("t") == Seq(0, 1))
+    assert(ids(cat.tableAsOf("t", 0)) == Seq(1L, 2L))
+    assert(ids(cat.table("t")) == Seq(1L))
+    sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(root),
+      swallowErrors = true)
+  }
+
+  test("a second catalog instance cannot replace an existing table") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
+    val a = new Catalog(spark, root)
+    a.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    // B has never attached or read "t"
+    val b = new Catalog(spark, root)
+    intercept[IllegalArgumentException](
+      b.createTableAs("t", Seq((3L, "c")).toDF("id", "name")))
+    intercept[IllegalArgumentException](b.createTable("t",
+      StructType(Seq(StructField("id", LongType)))))
+    assert(a.table("t").select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L), "the existing table's rows must be intact")
+    sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(root),
+      swallowErrors = true)
+  }
+
+  test("ALTER by one catalog instance is visible to another") {
+    val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
+    val a = new Catalog(spark, root)
+    a.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
+    val b = new Catalog(spark.newSession(), root)
+    b.attach()
+    a.addColumn("t", "score", lit(7))
+    a.dropColumn("t", "name")
+    val got = b.table("t")
+    assert(got.columns.toSeq == Seq("id", "score"), got.columns.toSeq)
+    assert(got.select("score").as[Int].collect().toSeq == Seq(7, 7))
+    sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(root),
+      swallowErrors = true)
   }
 
   test("dropTable scrubs versions, auto-inc state, and crash remnants") {
@@ -186,11 +272,10 @@ class CatalogSpec extends GraftSuite {
   }
 
   raceTest("appends are atomic: readers never see a torn batch") {
-    // a bare Append publishes part files one rename at a time — with
-    // the dir inode unchanged, neither the generation bracket nor
-    // readCommitted's retry can see it. Appends now stage against
-    // hard links and commit through the same swap as rewrites; every
-    // concurrent count must land on a batch boundary.
+    // a bare Append into a listed directory publishes part files one
+    // rename at a time, so a reader could count half a batch. An append
+    // publishes one manifest naming the whole batch; every concurrent
+    // count must land on a batch boundary.
     import scala.jdk.CollectionConverters._
     val cat = freshCatalog()
     cat.createTableAs("t",
@@ -237,48 +322,23 @@ class CatalogSpec extends GraftSuite {
       .collect().map(_.getDouble(0)).toSeq == Seq(20.0, 14.0))
   }
 
-  test("catalog recovers a table whose live dir vanished mid-rewrite") {
+  test("append paths keep every published row after an unpublished commit") {
     import java.nio.file.{Files, Paths}
-    val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
+    val root = Files.createTempDirectory("graft_cat").toString
     val cat = new Catalog(spark, root)
     cat.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
-    val live = Paths.get(s"$root/t")
-    // crash case 1: between move(live, old) and move(staged, live) with no
-    // complete staged post-image → must restore the .old pre-image
-    Files.move(live, Paths.get(s"$root/t.old"))
-    assert(cat.table("t").count() == 2)
-    assert(Files.exists(live) && !Files.exists(Paths.get(s"$root/t.old")))
-    // crash case 2: staged post-image finished writing (_SUCCESS present)
-    // → must promote the staged version, not the pre-image
-    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name")
-      .write.parquet(s"$root/t.staging")
-    Files.move(live, Paths.get(s"$root/t.old"))
-    assert(cat.table("t").count() == 3)
-    assert(!Files.exists(Paths.get(s"$root/t.staging")))
-  }
-
-  test("append paths recover a crashed rewrite instead of orphaning the pre-image") {
-    import java.nio.file.{Files, Paths}
-    val root = java.nio.file.Files.createTempDirectory("graft_cat").toString
-    val cat = new Catalog(spark, root)
-    cat.createTableAs("t", Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
-    // crash between rewrite()'s two renames: live dir gone, pre-image in
-    // .old. A bare Append would mint a fresh live dir holding ONLY the
-    // new batch and strand the pre-crash rows forever.
-    Files.move(Paths.get(s"$root/t"), Paths.get(s"$root/t.old"))
+    cat.update("t", _.withColumn("name", upper($"name")))
+    plantUnpublished(root, "t", "c2", Seq((9L, "x")).toDF("id", "name"))
     cat.insertIntoSelect("t", Seq((3L, "c")).toDF("id", "name"))
     assert(cat.table("t").select("id").as[Long].collect().toSet ==
-      Set(1L, 2L, 3L), "append after crash must keep the pre-image")
+      Set(1L, 2L, 3L), "append after a crash must keep every published row")
     // same for the auto-increment insert path
-    Files.move(Paths.get(s"$root/t"), Paths.get(s"$root/t.old"))
-    cat.createTableAs("ai", Seq.empty[(Long, Long)].toDF("id", "k"))
-    Files.move(Paths.get(s"$root/t.old"), Paths.get(s"$root/t")) // restore t
-    cat.dropTable("ai")
     cat.createTableAs("ai", Seq((0L, 99L)).toDF("id", "k"))
-    Files.move(Paths.get(s"$root/ai"), Paths.get(s"$root/ai.old"))
+    plantUnpublished(root, "ai", "c1", Seq((5L, 55L)).toDF("id", "k"))
     cat.insertAutoInc("ai", "id", Seq(1L).toDF("k"), Seq(col("k")))
     assert(cat.table("ai").select("k").as[Long].collect().toSet ==
-      Set(99L, 1L), "auto-inc append after crash must keep the pre-image")
+      Set(99L, 1L), "auto-inc append after a crash must keep every row")
+    sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
   }
 
   test("loader honors custom delimiter and quote") {
@@ -472,7 +532,7 @@ class CatalogSpec extends GraftSuite {
     cat.createTableAs("t", Seq((0L, 0, 0)).toDF("id", "writer", "gen"))
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     // each writer upserts 4 distinct-key batches; without the table lock
-    // a writer's swap computed from a stale pre-image erases the other
+    // a writer's commit computed from a stale pre-image erases the other
     // writer's committed rows
     val threads = (1 to 2).map { w =>
       new Thread(() => {
@@ -519,17 +579,12 @@ class CatalogSpec extends GraftSuite {
   }
 
   raceTest("snapshot reads stay complete under a continuous writer (hammer)") {
-    // round-10 regression pin (found by the bench's new mixed leg,
-    // reproduced by sources.CatalogStress): Spark's InMemoryFileIndex
-    // treats a root dir that vanishes between its glob and its
-    // leaf-listing as EMPTY (a logged warning, not an error), so a
-    // reader whose listing straddled rewrite()'s swap window got a
-    // silently EMPTY relation (~1/500 commits); and the swap's scan
-    // victims surface as NoSuchFileException / [FAILED_READ_FILE.*]
-    // shapes the old transient matcher missed. table() now brackets
-    // the listing with a generation file-key check and readCommitted
-    // retries all vanished-file shapes — this hammer must observe
-    // ONLY complete one-generation snapshots.
+    // round-10 regression pin (found by the bench's mixed leg,
+    // reproduced by sources.CatalogStress): when commits swapped the
+    // table directory, a reader whose listing straddled the swap got a
+    // silently EMPTY relation (~1/500 commits). A read now pins one
+    // manifest and lists nothing — this hammer must observe ONLY
+    // complete one-generation snapshots, never an empty or torn one.
     import scala.jdk.CollectionConverters._
     val cat = freshCatalog()
     cat.createTableAs("h",
@@ -689,12 +744,12 @@ class CatalogSpec extends GraftSuite {
   test("a writer kill -9'd INSIDE the commit window recovers cross-process") {
     // the dwweek-with-failures scenario as a permanent spec (the bench
     // soak runs the same drill per round): a REAL second JVM runs a
-    // locked upsert, parks between the swap's two renames (live dir
-    // gone, pre-image in .old, post-image staged, lock held), and is
-    // kill -9'd there. The next reader must recover a COMPLETE image
-    // through the stale-lock steal + recover() path, and the next
-    // writer must proceed under a fresh claim.
+    // locked upsert, parks after writing its files and before
+    // publishing its manifest (lock held), and is kill -9'd there. The
+    // next reader must see a COMPLETE image, and the next writer must
+    // proceed under a fresh claim through the stale-lock steal.
     import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("graft_crash").toString
     var proc: sources.ChildJvm.Spawned = null
     try {
@@ -703,6 +758,11 @@ class CatalogSpec extends GraftSuite {
         spark.range(0, 100).toDF("id").withColumn("gen", lit(0)))
       spark.range(0, 100).toDF("id").withColumn("gen", lit(1))
         .write.parquet(s"$root/_batch")
+      def manifests() = scala.util.Using.resource(
+        Files.list(Paths.get(root, "t", "_manifest")))(_.iterator()
+        .asScala.map(_.getFileName.toString).filter(_.startsWith("v"))
+        .toSet)
+      val preImage = manifests()
       proc = sources.ChildJvm.spawn("graft.sources.SoakCrashWriter",
         Seq(root, "t", s"$root/_batch", "id"),
         env = Map("GRAFT_SWAP_PAUSE_MS" -> "120000"))
@@ -715,11 +775,11 @@ class CatalogSpec extends GraftSuite {
         s"writer JVM never reached the commit window (alive=" +
           s"${proc.isAlive}); output tail:\n${proc.tail().takeRight(2000)}")
       proc.destroyForcibly(); proc.waitFor()
-      assert(!Files.exists(Paths.get(root, "t")),
-        "kill must land with the live dir renamed aside")
+      assert(manifests() == preImage,
+        "kill must land with no manifest newer than the pre-image")
       assert(Files.exists(Paths.get(root, "_locks", "t.lock")),
         "the dead writer's claim must still be on disk")
-      // next READER: stale-steal + recover, complete image only
+      // next READER: one complete image, never a mix
       val gens = cat.readCommitted("t")(
         _.groupBy("gen").count().collect())
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -1085,102 +1145,30 @@ class CatalogSpec extends GraftSuite {
   }
 
   test("DML while a partition is disabled preserves the offline data") {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_part").toString
-    val cat = new Catalog(spark, root)
+    val cat = freshCatalog()
     val df = (0L until 30L).map(i => (i, (i % 3).toInt)).toDF("id", "pk")
-    // staged APPEND while offline (the round-10 regression: staging was
-    // built from the live listing, which excludes hidden dirs, so the
-    // commit dropped the disabled partition from the live image and
-    // enablePartition failed, the data surviving only in a vacuumable
-    // version snapshot)
+    def counts(t: String) = cat.table(t).groupBy("pk").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // APPEND while offline (the round-10 regression: the commit dropped
+    // the disabled partition from the live image, so enablePartition
+    // failed and the data survived only in a vacuumable version)
     cat.createTablePartitionedAs("pta", df, "pk")
     cat.disablePartition("pta", "pk=0")
     cat.insertIntoSelect("pta", Seq((100L, 1)).toDF("id", "pk"))
-    assert(Files.isDirectory(Paths.get(root, "pta", ".pk=0")),
-      "hidden partition must survive a staged append")
+    assert(counts("pta") == Map(1 -> 11L, 2 -> 10L))
     cat.enablePartition("pta", "pk=0")
-    // offline rows byte-identical after the round trip (read the
-    // partition dir directly — the appended batch lands in the root
-    // layout, which is a separate concern from offline preservation)
-    assert(spark.read.parquet(s"$root/pta/pk=0").count() == 10)
+    assert(counts("pta") == Map(0 -> 10L, 1 -> 11L, 2 -> 10L),
+      "offline rows must survive an append")
     // REWRITE while offline, on its own table: offline data is
     // invisible to the DML (the delete must not touch it) and must
-    // survive the swap too
+    // survive the commit too
     cat.createTablePartitionedAs("ptb", df, "pk")
     cat.disablePartition("ptb", "pk=0")
     cat.update("ptb", _.filter(col("id") % 2 === 0))
-    assert(Files.isDirectory(Paths.get(root, "ptb", ".pk=0")),
-      "hidden partition must survive a rewrite")
+    assert(counts("ptb") == Map(1 -> 5L, 2 -> 5L))
     cat.enablePartition("ptb", "pk=0")
-    assert(spark.read.parquet(s"$root/ptb/pk=0").count() == 10,
+    assert(counts("ptb") == Map(0 -> 10L, 1 -> 5L, 2 -> 5L),
       "offline rows must be untouched by the online delete")
-    sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
-  }
-
-  test("a pre-image stranded in .old is salvaged into version history") {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_salv").toString
-    val cat = new Catalog(spark, root)
-    cat.createTableAs("t", Seq(1L, 2L).toDF("v"))
-    cat.update("t", _.withColumn("v", col("v") * 10))
-    assert(cat.versions("t") == Seq(0))
-    // simulate a crash BETWEEN commitStaged's staging→live swap and its
-    // .old→_versions move: live already holds the post-image, the
-    // pre-image sits in .old, never versioned. Pre-round-11 the next
-    // commit's deleteRecursively(old) silently discarded it — a gap in
-    // tableAsOf history.
-    Files.move(Paths.get(root, "_versions", "t", "v0"),
-      Paths.get(root, "t.old"))
-    assert(cat.versions("t").isEmpty)
-    cat.update("t", _.withColumn("v", col("v") + 1))
-    // both the salvaged pre-image AND this commit's displaced pre-image
-    // must now be retained, in order
-    assert(cat.versions("t") == Seq(0, 1))
-    assert(cat.tableAsOf("t", 0).as[Long].collect().sorted.toSeq ==
-      Seq(1L, 2L), "salvaged snapshot must be the original pre-image")
-    assert(cat.tableAsOf("t", 1).as[Long].collect().sorted.toSeq ==
-      Seq(10L, 20L))
-    assert(cat.table("t").as[Long].collect().sorted.toSeq ==
-      Seq(11L, 21L))
-    sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
-  }
-
-  test("generation-bracket exhaustion fails transiently + records incident") {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_torn").toString
-    // attempts=0: the FIRST listing that straddles a commit swap trips
-    // the exhaustion path (production keeps 20 retries; the path under
-    // test is what happens when they run out)
-    val cat = new Catalog(spark, root, bracketAttempts = 0)
-    cat.createTableAs("t", Seq(1L, 2L).toDF("v"))
-    @volatile var stop = false
-    val writerErr = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val writer = new Thread(() => {
-      try { var g = 0L
-        while (!stop) { cat.update("t", _.withColumn("v", lit(g))); g += 1 }
-      } catch { case e: Throwable => writerErr.set(e) }
-    })
-    writer.start()
-    var sawTransient = false
-    val deadline = System.nanoTime() + 90L * 1000000000L
-    while (!sawTransient && System.nanoTime() < deadline) {
-      try { cat.table("t"); () }
-      catch { case _: java.io.FileNotFoundException => sawTransient = true }
-    }
-    // readCommitted must ABSORB the transient failure (its retry loop is
-    // exactly what the FileNotFound-class contract exists for)
-    if (sawTransient)
-      assert(cat.readCommitted("t")(_.count()) == 2L)
-    stop = true
-    writer.join()
-    assert(writerErr.get() == null, s"writer failed: ${writerErr.get()}")
-    assert(sawTransient,
-      "a 0-attempt bracket under a hammering writer must trip within 90s")
-    assert(sources.Incidents.list(root).exists(_.kind == "torn_listing"),
-      "exhaustion must leave a queryable incident")
-    assert(cat.incidents.filter(col("kind") === "torn_listing").count() >= 1)
-    sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
   }
 
   test("a lock restore lost to a third claimant records an incident") {
@@ -1226,12 +1214,11 @@ class CatalogSpec extends GraftSuite {
     val root = Files.createTempDirectory("graft_qslock").toString
     val cat = new Catalog(spark, root)
     cat.createTableAs("data", Seq(1L).toDF("v"))
-    // plant a crashed commit on "data" (live parked in .old): a FULL
-    // attach would need data's lock to recover it — which a writer
-    // holds. Round 10's append deadlocked-by-timeout here (lock-order
-    // inversion: writer holds data + wants history; recorder holds
-    // history + wants data).
-    Files.move(Paths.get(root, "data"), Paths.get(root, "data.old"))
+    // plant a crashed commit on "data" and hold data's lock, as a
+    // writer would. Round 10's append deadlocked-by-timeout here
+    // (lock-order inversion: writer holds data + wants history;
+    // recorder holds history + wants data, to recover data's crash).
+    plantUnpublished(root, "data", "c1", Seq(5L).toDF("v"))
     @volatile var release = false
     val holding = new java.util.concurrent.CountDownLatch(1)
     val holder = new Thread(() =>
@@ -1249,7 +1236,7 @@ class CatalogSpec extends GraftSuite {
     holder.join()
     assert(sec < 20.0,
       s"append blocked ${sec}s — it must not wait on data's lock")
-    // the history landed and data recovers fine once its lock is free
+    // the history landed and data reads its published version
     assert(graft.plans.QueryStats.history(spark, root).count() == 1)
     assert(cat.readCommitted("data")(_.count()) == 1L)
     sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
