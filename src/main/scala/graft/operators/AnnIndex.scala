@@ -414,7 +414,7 @@ object AnnIndex {
     * the marker must carry IndexVersion and every versioned artifact
     * path must be present.
     *
-    * The check-and-build runs under the same claim-by-hard-link writer
+    * The check-and-build runs under the same kernel-file-lock writer
     * lock DML uses (keyed on the index dir), so two sessions racing a
     * cold index serialize — one builds, the other re-checks and finds
     * it fresh — instead of both writing the same artifact dirs
@@ -623,7 +623,7 @@ object AnnIndex {
   //    the manifest once per query, so they can never see a
   //    half-published append or a mid-compaction state.
   //  * writer lock — every mutator runs under the same TableLocks
-  //    claim-by-hard-link lock DML uses, so two appenders' manifest
+  //    kernel file lock DML uses, so two appenders' manifest
   //    read-modify-writes serialize across JVMs.
   //  * one-generation retention — compaction writes the new base under a
   //    fresh generation name, publishes, and only deletes dirs that a

@@ -1290,20 +1290,17 @@ object DdlDmlQueries {
     * which makes the plan SHAPE itself oracle-checked: a planner
     * regression that adds, drops, or reorders a step breaks this row in
     * the correctness gate, not just a bench number. */
-  /** viewtablelock + cleartablelock analog (reference:
-    * tools/viewtablelock/viewtablelock.cpp — prints table, owner
-    * name/PID, create time, state per BRM table lock;
-    * tools/cleartablelock/cleartablelock.cpp — operator-driven release
-    * of a dead writer's lock). The scenario walks the lock lifecycle in
-    * a scratch catalog and observes it through `TableLocks.list/clear`:
-    * a live DML holder is visible AND protected from a non-forced clear;
-    * a committed DML leaves no lock; a crashed writer's claim (forged
-    * dead pid) reads dead and clears; a remote host's claim is honored
-    * under its liveness lease and refuses a plain clear, yielding only
-    * to the forced override (the tool's confirmed path). Every
+  /** viewtablelock analog (reference: tools/viewtablelock/
+    * viewtablelock.cpp — prints table and owner PID per BRM table lock).
+    * The scenario walks the lock lifecycle in a scratch catalog and
+    * observes it through `TableLocks.list`: a live DML holder lists as
+    * held by this process; a committed DML leaves the table unheld; and
+    * a crashed writer's leftover stamp file (a pid no process can have)
+    * is not a hold at all, because the kernel dropped the lock with its
+    * process, so there is nothing for a cleartablelock to clear. Every
     * observation is a deterministic boolean, so the oracle is exact
-    * constants — the check is that the LOCK PROTOCOL produces these
-    * answers, not that constants equal constants. */
+    * constants — the check is that the LOCK produces these answers, not
+    * that constants equal constants. */
   val viewTableLocks: QueryDef = QueryDef(
     "d_view_table_locks",
     (s, dir) => {
@@ -1311,51 +1308,29 @@ object DdlDmlQueries {
       import graft.sources.TableLocks
       val root = scratch("viewlocks")
       val tbl = "orders_load"
-      def present() = TableLocks.list(root).exists(_.table == tbl)
-      def live() = TableLocks.list(root)
-        .exists(i => i.table == tbl && i.ownerLive)
-      val rows = scala.collection.mutable.ArrayBuffer
-        .empty[(Int, String, String, Boolean, Boolean, Boolean)]
-      TableLocks.withLock(root, tbl) {
-        rows += ((1, "during_dml", tbl, present(), live(),
-          TableLocks.clear(root, tbl)))
+      val self = ProcessHandle.current().pid()
+      def phase(n: Int, event: String) = {
+        val held = TableLocks.list(root).filter(_.table == tbl)
+        (n, event, tbl, held.nonEmpty, held.exists(_.pid == self))
       }
-      rows += ((2, "after_commit", tbl, present(), live(),
-        TableLocks.clear(root, tbl)))
-      val lf = java.nio.file.Paths.get(root, "_locks", s"$tbl.lock")
-      java.nio.file.Files.createDirectories(lf.getParent)
-      // a crashed writer: impossible pid (> linux pid_max), dead by
-      // construction — viewtablelock shows it, cleartablelock clears it
-      java.nio.file.Files.writeString(lf,
-        s"999999999 1 ${TableLocks.hostId} 1\n")
-      rows += ((3, "crashed_writer", tbl, present(), live(),
-        TableLocks.clear(root, tbl)))
-      // a remote host's fresh claim: locally unprobeable, honored as
-      // live under the lease — plain clear refuses, force overrides.
-      // Stamped a year into the future so the liveness verdict (this
-      // row sits in the byte-exact correctness gate) is independent of
-      // wall-clock stalls AND of the graft.lock.crossHostLeaseMs
-      // sys-prop, which concurrently-running lock specs legitimately
-      // shrink to milliseconds — liveness reads max(wall, mtime)
-      // against the lease, and a future wall can only read live.
-      java.nio.file.Files.writeString(lf,
-        s"4242 99999 remotehost#deadbeef " +
-          s"${System.currentTimeMillis() + 365L * 24 * 3600 * 1000}\n")
-      rows += ((4, "remote_leased", tbl, present(), live(),
-        TableLocks.clear(root, tbl)))
-      rows += ((5, "remote_forced", tbl, present(), live(),
-        TableLocks.clear(root, tbl, force = true)))
-      rows.toSeq.toDF("phase", "event", "table_name", "lock_present",
-        "owner_live", "cleared").orderBy(col("phase"))
+      val rows = scala.collection.mutable.ArrayBuffer
+        .empty[(Int, String, String, Boolean, Boolean)]
+      TableLocks.withLock(root, tbl) { rows += phase(1, "during_dml") }
+      rows += phase(2, "after_commit")
+      // a crashed writer: its stamp stays, its kernel lock does not
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(root, "_locks", s"$tbl.lock"),
+        "999999999\n")
+      rows += phase(3, "crashed_writer")
+      rows.toSeq.toDF("phase", "event", "table_name", "held",
+        "held_by_self").orderBy(col("phase"))
     },
     oracle = Some("""
       SELECT * FROM (VALUES
-        (1, 'during_dml',     'orders_load', true,  true,  false),
-        (2, 'after_commit',   'orders_load', false, false, false),
-        (3, 'crashed_writer', 'orders_load', true,  false, true),
-        (4, 'remote_leased',  'orders_load', true,  true,  false),
-        (5, 'remote_forced',  'orders_load', true,  true,  true)
-      ) AS t(phase, event, table_name, lock_present, owner_live, cleared)
+        (1, 'during_dml',     'orders_load', true,  true),
+        (2, 'after_commit',   'orders_load', false, false),
+        (3, 'crashed_writer', 'orders_load', false, false)
+      ) AS t(phase, event, table_name, held, held_by_self)
       ORDER BY phase""")
   )
 
@@ -1469,10 +1444,10 @@ object DdlDmlQueries {
 
   /** Operator-visible incident log, read side (reference analog:
     * loggingcpp persists crit/warning rows queryably, not only to
-    * stderr). The WRITE-side forcing path — a lock restore losing to a
-    * third claimant in a widened window — lives in CatalogSpec; this
-    * row gates the
-    * persisted format and the read surface: O_APPEND lines parse back
+    * stderr). No production path records an incident any more (its
+    * two kinds, `lock_restore_lost` and `torn_listing`, came from
+    * mechanisms since replaced), so this row gates the log as a format:
+    * the persisted lines and the read surface — O_APPEND lines parse back
     * in order with fields intact, and a torn half-line from a crashed
     * recorder is skipped rather than poisoning the whole log. */
   val incidentsLog: QueryDef = QueryDef(

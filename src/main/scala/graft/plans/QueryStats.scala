@@ -120,7 +120,10 @@ object QueryStats {
     * creating it on first use. Create-if-missing runs under the
     * history table's own lock so two concurrent recorders (two bench
     * JVMs on a shared root) can't both mint the table; the append
-    * itself is the ordinary locked insert. */
+    * itself is the ordinary locked insert. Each append publishes a
+    * version whose manifest names every history file, so the older
+    * versions are vacuumed at once, still under the lock: an append
+    * deletes no file, and the newest manifest names them all. */
   def append(spark: SparkSession, root: String, runId: String,
       entries: Seq[Entry]): Unit = {
     if (entries.isEmpty) return
@@ -141,6 +144,7 @@ object QueryStats {
         Row(e.query, e.wallMs, e.rows, e.tsMillis, e.planHash, runId))
       cat.insertIntoSelect(tableName, spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema))
+      cat.vacuumVersions(tableName, keep = 1)
     }
   }
 

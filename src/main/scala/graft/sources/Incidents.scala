@@ -9,13 +9,13 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * utils/loggingcpp; an operator diagnoses yesterday's anomaly from
   * persisted state, not from a scrollback that no longer exists).
   *
-  * Incidents recorded today:
-  *  - `lock_restore_lost` — TableLocks.removeClaim displaced a live
-  *    successor claim and could not restore it (mutual exclusion may
-  *    have been violated; the displaced stamp is preserved in a
-  *    grave file for forensics).
-  * `torn_listing` came from Catalog's old directory-listing bracket and
-  * is no longer recorded; logs that hold it still parse.
+  * No production path records an incident today; the test suite's
+  * flake tripwire (`test_flake`) does. The two kinds the log was built
+  * for survive as log-format data only, and logs that hold them still
+  * parse:
+  *  - `lock_restore_lost` came from TableLocks' old rename-aside steal,
+  *    replaced by the kernel's file lock;
+  *  - `torn_listing` came from Catalog's old directory-listing bracket.
   *
   * Storage is one O_APPEND text line per incident under
   * `<root>/_incidents/log` — small single writes are atomic on POSIX,

@@ -15,8 +15,8 @@ import org.apache.spark.sql.SparkSession
   * lock held) and flags `<root>/_locks/.midswap_<table>`; the parent
   * then kill -9s this process at that flag — a real cross-process
   * mid-commit crash, not a simulated one — and proves the next
-  * reader/writer sees a consistent snapshot and gets the lock through
-  * the stale-lock steal.
+  * reader/writer sees a consistent snapshot and gets the lock at once:
+  * the kernel dropped the dead writer's file lock with its process.
   */
 object SoakCrashWriter {
   def main(args: Array[String]): Unit = {
