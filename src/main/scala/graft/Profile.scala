@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.SparkSession
 
 /** Per-job/stage wall-time profiler for one registered query — the
@@ -10,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   *   scripts/run_class.sh graft.Profile <sfDir> <query> [reps]
   * Runs the query `reps` times through the noop sink (first rep warms
   * codegen/page cache like the bench), then prints, for the LAST rep,
-  * every Spark job with its wall ms and every stage with wall ms, task
-  * count, and name — the local[™] stand-in for the Spark UI timeline the
+  * how many generated classes it compiled and in how many ms, every Spark
+  * job with its wall ms and every stage with wall ms, task count, and
+  * name — the local[™] stand-in for the Spark UI timeline the
   * optimization guide (§1.1, §7.1) starts from. */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -68,10 +71,16 @@ object Profile {
     for (i <- 1 until reps) println(f"rep $i: ${once()}%.3f s")
     Thread.sleep(400)
     jobs.clear(); stages.clear(); record = true
+    val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     val wall = once()
+    val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     Thread.sleep(400)
     record = false
     println(f"last rep: $wall%.3f s  ($name @ $sfDir)")
+    // a warm rep should find every generated class in Spark's cache
+    println(f"-- codegen: $classes classes compiled, $compileMs%.1f ms --")
     import scala.jdk.CollectionConverters._
     val js = jobs.values().asScala.toSeq.sortBy(_.id)
     println(s"-- ${js.size} jobs --")

@@ -25,11 +25,30 @@ object Tables {
   private val tuned = java.util.Collections.synchronizedSet(
     new java.util.HashSet[org.apache.spark.sql.SparkSession]())
 
+  /** Entries in Spark's generated-class cache. One `power_stream` pass
+    * (TPC-H q01-q22 plus the classifier) cycles through ~350 generated
+    * classes; at Spark's default of 100 every lookup missed, so each run
+    * Janino-compiled every class again on the driver. ~3x that working set. */
+  private val codegenCacheEntries = 1000
+
   /** Session defaults we care about regardless of how the driver built the
-    * session. Idempotent, runtime-settable confs only; applied once per
-    * session (table() calls this on every read). */
+    * session. Idempotent; applied once per session (table() calls this on
+    * every read). All settings are runtime confs except the generated-class
+    * cache size: a static conf that Spark reads once per JVM, when it first
+    * generates code, so it takes effect only if `tune` runs before the JVM's
+    * first codegen. Bench, Verify, Sql, Explain, Profile and the tests'
+    * SparkSpec call `tune` right after `getOrCreate()`, before any query. */
   def tune(spark: SparkSession): Unit = {
     if (!tuned.add(spark)) return
+    // `spark.conf.set` refuses static confs; the session's SQLConf does not
+    spark.sessionState.conf.setConfString(
+      "spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+    // The cache is keyed by source text, and the class name carried the
+    // whole-stage codegen stage id, which AQE numbers in the order stages
+    // materialize: q21's two broadcast stages race, so one pipeline got
+    // two names and two compiles. Without the id, equal pipelines share a
+    // class within and across queries.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -311,7 +311,8 @@ class Catalog(spark: SparkSession, root: String) {
     val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
       StructType(m.schema.filterNot(f => m.partCols.contains(f.name))), None,
       new ParquetFileFormat, Map.empty)(spark))
-    if (m.partCols.isEmpty) df else df.select(m.schema.fieldNames.map(col): _*)
+    if (m.partCols.isEmpty) df
+    else df.select(m.schema.fieldNames.toIndexedSeq.map(col): _*)
   }
 
   /** The one COMMIT sequence, serialized end-to-end by the per-table

@@ -650,4 +650,33 @@ class PlanSpec extends GraftSuite {
     assert(trace.find(_._2 == "agg_partial").get._3.isEmpty)
     graft.sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(dir))
   }
+
+  test("a repeated TPC-H pass compiles no generated class") {
+    // Spark keeps generated classes in one JVM-wide LRU cache that
+    // Tables.tune sizes; at Spark's default of 100 entries a pass over
+    // q01-q22 (~300 classes) evicted its own classes and Janino-compiled
+    // every one of them again on every run
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val tpch = Seq("q01_pricing_summary", "q02_min_cost_supplier",
+      "q03_shipping_priority", "q04_order_priority",
+      "q05_local_supplier_volume", "q06_forecast_revenue",
+      "q07_volume_shipping", "q08_market_share", "q09_product_profit",
+      "q10_returned_items", "q11_important_stock", "q12_ship_mode_priority",
+      "q13_customer_distribution", "q14_promo_effect", "q15_top_supplier",
+      "q16_parts_supplier", "q17_small_quantity",
+      "q18_large_volume_customer", "q19_discounted_revenue",
+      "q20_excess_stock", "q21_suppliers_waiting", "q22_global_sales")
+    def pass(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      for (n <- tpch) {
+        spark.catalog.clearCache()
+        SparkEntry.queries(n)(spark, sf)
+          .write.mode("overwrite").format("noop").save()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val compiled = Seq.fill(3)(pass())
+    assert(compiled.last == 0L,
+      s"classes compiled per pass: ${compiled.mkString(", ")}")
+  }
 }
