@@ -773,8 +773,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     // nightly dwweek profile (scripts/nightly_soak.sh): warmup + soak
     // (+ crash drills) only, with the cycle and drill counts it sets
     val soakOnly = sys.env.get("SPARK_GRAFT_SOAK_ONLY").contains("1")
@@ -786,18 +784,7 @@ object Bench {
     val histRoot =
       sys.env.getOrElse("SPARK_GRAFT_HISTORY_DIR", "bench_history")
     val budget = new WallBudget(budgetSec)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // FAIR job scheduling for the multi-user legs: under FIFO a 0.1 s
-      // scan-agg from user B queues behind every stage of user A's join,
-      // so small-query latency would measure queue depth, not the engine
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.tune(spark)
+    val spark = Session.local()
     val sc = spark.sparkContext
 
     // between-queries hygiene: clearCache drops SQL-cache entries and the

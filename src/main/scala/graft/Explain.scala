@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection main: prints the formatted plan (and post-AQE executed
   * plan) for the named queries. Usage:
   *   scripts/run_class.sh graft.Explain <sfDir> q01_pricing_summary …
@@ -28,16 +26,7 @@ object Explain {
       if (rest.nonEmpty) rest
       else if (canon) SparkEntry.queries.keys.toSeq
       else Bench.headline
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Tables.tune(spark)
+    val spark = Session.local()
     if (canon) {
       names.foreach { name =>
         // drop persist()s left by the previous query, as Verify does

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** SQL runner — the mysqld-front-end analog (reference: patched mysqld +
   * ExeMgr, SURVEY §3.1; here the whole lifecycle is Catalyst's).
   *
@@ -16,15 +14,7 @@ object Sql {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Sql <sfDir> <sql | @file> …")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     Tables.registerAll(spark, sfDir)
     args.drop(1).foreach { arg =>
       val sql =

@@ -22,65 +22,6 @@ object Tables {
   val extension: Seq[String] = Seq("events", "documents", "embeddings")
   val all: Seq[String] = starSchema ++ extension
 
-  private val tuned = java.util.Collections.synchronizedSet(
-    new java.util.HashSet[org.apache.spark.sql.SparkSession]())
-
-  /** Entries in Spark's generated-class cache. One `power_stream` pass
-    * (TPC-H q01-q22 plus the classifier) cycles through ~350 generated
-    * classes; at Spark's default of 100 every lookup missed, so each run
-    * Janino-compiled every class again on the driver. ~3x that working set. */
-  private val codegenCacheEntries = 1000
-
-  /** Session defaults we care about regardless of how the driver built the
-    * session. Idempotent; applied once per session (table() calls this on
-    * every read). All settings are runtime confs except the generated-class
-    * cache size: a static conf that Spark reads once per JVM, when it first
-    * generates code, so it takes effect only if `tune` runs before the JVM's
-    * first codegen. Bench, Verify, Sql, Explain, Profile and the tests'
-    * SparkSpec call `tune` right after `getOrCreate()`, before any query. */
-  def tune(spark: SparkSession): Unit = {
-    if (!tuned.add(spark)) return
-    // `spark.conf.set` refuses static confs; the session's SQLConf does not
-    spark.sessionState.conf.setConfString(
-      "spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
-    // The cache is keyed by source text, and the class name carried the
-    // whole-stage codegen stage id, which AQE numbers in the order stages
-    // materialize: q21's two broadcast stages race, so one pipeline got
-    // two names and two compiles. Without the id, equal pipelines share a
-    // class within and across queries.
-    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    // AQE coalescing floor: left at Spark's 1 MB default, on purpose.
-    // r15 measured a 16 KB floor both ways: it parallelizes the rare
-    // compute-dense sub-MB shuffle stage, but every stage-DENSE pipeline
-    // (the ANN train/encode chains: dozens of tiny shuffles + broadcast
-    // materializations + checkpoint barriers) regressed ~2×
-    // (x_ann_ivfpq_topk 8.1 s → 19.1 s, x_ann_pq_topk 3.9 s → 8.5 s at
-    // sf0.1/local[32]) because each of its many stages fanned out to
-    // 16–32 near-empty tasks whose launch/fetch overhead multiplied.
-    // The single-task hot spots are fixed structurally instead
-    // (Tables.spread at the operator's input + codegen'd fold kernels),
-    // which parallelizes exactly the stages that need it and nothing
-    // else. Override per session via standard Spark conf if a future
-    // workload wants a different floor.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    // The reference broadcasts join small sides under 64 MB
-    // (oam/etc/Calpont.xml:483 PmMaxMemorySmallSide); match that.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-    // events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
-    // rejects; read as long and convert (see table()).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // every unpersist of a localCheckpoint barrier's RDD logs an
-    // expected "was locally checkpointed … cannot be recomputed after
-    // unpersisting" WARN: hundreds of lines of noise per run
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    plans.GraftExtensions.registerAll(spark)
-  }
-
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   /** Scale-adaptive compute spread. The bench tables are single-file,
@@ -236,7 +177,7 @@ object Tables {
 
   /** Read one table. Filters/pruning push down to the parquet scan. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    tune(spark)
+    Session.tune(spark)
     val p = path(dir, name)
     val fp = fingerprint(p)
     val perSession = relationCache.synchronized {
@@ -286,7 +227,7 @@ object Tables {
 
   /** Read every table and register temp views so `spark.sql` works too. */
   def registerAll(spark: SparkSession, dir: String): Map[String, DataFrame] = {
-    tune(spark)
+    Session.tune(spark)
     all.map { n =>
       val df = table(spark, dir, n)
       df.createOrReplaceTempView(n)

@@ -23,14 +23,7 @@ object AnnMaintMutator {
   def main(args: Array[String]): Unit = {
     val Array(dir, roundsStr) = args
     val rounds = roundsStr.toInt
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ann-maint-mutator")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(2)
     applyRounds(spark, dir, rounds,
       Some(java.nio.file.Paths.get(dir, "_mutating")))
     java.nio.file.Files.writeString(

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * Scale notes: every query here is declarative DataFrame API, so Catalyst
   * pushes filters into the parquet scan, prunes columns, and two-phase
   * aggregates. Dimension tables (region/nation/customer/supplier/part) are
-  * broadcast-joined automatically under the 64 MB threshold (Tables.tune);
+  * broadcast-joined automatically under the 64 MB threshold (Session.tune);
   * at 100 TB only lineitem/orders are big, and every join below keys on
   * their natural keys so AQE handles skew/shuffle sizing.
   */

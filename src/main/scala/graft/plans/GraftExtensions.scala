@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GreaterThan,
   * Two registration paths:
   *  - `GraftExtensions` for `spark.sql.extensions=graft.plans.GraftExtensions`
   *    (the SparkSessionExtensions route, like any Spark extension library);
-  *  - `registerAll(spark)` for an existing session (what Tables.tune uses,
-  *    since the driver builds the session itself).
+  *  - `registerAll(spark)` for an existing session: `graft.Session.tune`
+  *    calls it last, and a session whose registry holds these functions
+  *    counts as tuned.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit =

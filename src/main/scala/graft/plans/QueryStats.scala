@@ -226,15 +226,7 @@ object QueryStats {
 object PlanHashChild {
   def main(args: Array[String]): Unit = {
     val Array(queryName, dir) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-planhash-child")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Tables.tune(spark)
+    val spark = graft.Session.local(2)
     val df = graft.SparkEntry.queries(queryName)(spark, dir)
     println(s"PLANHASH=${QueryStats.planHash(df)}")
     spark.stop()

@@ -86,10 +86,12 @@ class Catalog(spark: SparkSession, root: String) {
     * views outlive the connection the same way (ha_view.cpp resolves
     * them from the frm store per statement). Takes no lock: a commit
     * that crashed before publishing left no manifest, so there is
-    * nothing to recover. */
+    * nothing to recover. A DROP cut short after its rename left a
+    * `_dropped.*` directory that no table names; attach deletes it. */
   def attach(): Unit = {
-    names(Paths.get(root)).filterNot(n => n.startsWith("_") ||
-      n.startsWith(".")).sorted.foreach(attachOne)
+    names(Paths.get(root)).filter(_.startsWith("_dropped."))
+      .foreach(n => FsUtil.deleteRecursively(Paths.get(root, n)))
+    tableNames.foreach(attachOne)
     listViews.foreach { v =>
       spark.sql(Files.readString(viewFile(v))).createOrReplaceTempView(v)
     }
@@ -128,6 +130,8 @@ class Catalog(spark: SparkSession, root: String) {
       v0: => (StructType, Seq[String], Seq[(String, Long)])): Unit =
     TableLocks.withLock(root, name) {
       require(published(name).isEmpty, s"table $name already exists")
+      // counters a DROP cut short left behind must not resume here
+      dropAutoInc(name)
       val (schema, partCols, files) = v0
       publish(name, 0, Manifest(schema, partCols, files, Nil))
     }
@@ -520,12 +524,25 @@ class Catalog(spark: SparkSession, root: String) {
   def truncate(name: String): Unit =
     commit(name)((m, _) => m.copy(files = Nil, disabled = Nil))
 
-  /** DROP TABLE — under the table lock, deleting the table directory
-    * (every version and file) and the auto-increment counters. Leaving
-    * them would let a later CREATE of the same name serve the DROPPED
-    * table's history through tableAsOf and resume its id sequence. */
+  /** DROP TABLE — under the table lock, one rename moves the table
+    * directory (every version and file) aside to a `_dropped.` name that
+    * no listing reads, so the table is gone at once, whole; then that
+    * directory and the auto-increment counters are deleted. A crash
+    * after the rename leaves only garbage: `attach` deletes the
+    * directory and `create` the counters. Leaving either in use would
+    * let a later CREATE of the same name serve the DROPPED table's
+    * history through tableAsOf or resume its id sequence. */
   def dropTable(name: String): Unit = TableLocks.withLock(root, name) {
-    FsUtil.deleteRecursively(Paths.get(tablePath(name)))
+    val dir = Paths.get(tablePath(name))
+    if (Files.exists(dir)) {
+      val aside = Paths.get(root, s"_dropped.$name.${System.nanoTime()}")
+      Files.move(dir, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      FsUtil.deleteRecursively(aside)
+    }
+    dropAutoInc(name)
+  }
+
+  private def dropAutoInc(name: String): Unit = {
     val ai = Paths.get(root, "_autoinc")
     names(ai).filter(_.startsWith(s"$name."))
       .foreach(n => Files.deleteIfExists(ai.resolve(n)))
@@ -541,8 +558,12 @@ class Catalog(spark: SparkSession, root: String) {
     rewrite(name, _.drop(colName))
 
   /** Tables with a published version under this catalog root. */
-  def listTables: Seq[String] =
-    names(Paths.get(root)).filter(published(_).nonEmpty).sorted
+  def listTables: Seq[String] = tableNames.filter(published(_).nonEmpty)
+
+  /** Entries of the root that can name a table: `_` and `.` prefixes are
+    * the catalog's own (locks, views, counters, dropped tables). */
+  private def tableNames: Seq[String] = names(Paths.get(root))
+    .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
 
   /** Recorded operational incidents for this catalog root (lock-restore
     * losses) — queryable with the engine itself, like the lock view. */

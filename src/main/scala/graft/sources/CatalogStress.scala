@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Throwaway-grade stress main for the reader-vs-rewrite snapshot race:
@@ -10,20 +9,13 @@ import org.apache.spark.sql.functions.{col, lit}
   * of the manifest it pinned. Used to reproduce (and then pin) the
   * round-10 mixed-leg anomalies; kept because a filesystem-race
   * reproducer is worth more than the bug report it came from.
-  * Args: [durationSec] [readers]; runs on SPARK_GRAFT_CPUS cores
+  * Args: [durationSec] [readers]; runs on `graft.Session.cores` cores
   * (default: all). */
 object CatalogStress {
   def main(args: Array[String]): Unit = {
     val durSec = args.headOption.map(_.toInt).getOrElse(60)
     val readers = args.drop(1).headOption.map(_.toInt).getOrElse(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val tmp = java.nio.file.Files.createTempDirectory("graft_stress")
     val cat = new Catalog(spark, s"$tmp/cat")
     cat.createTableAs("t", spark.range(0, 15000).toDF("id")

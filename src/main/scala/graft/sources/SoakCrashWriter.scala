@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-JVM writer for the soak's crash-recovery cycle — the dwweek
   * scenario's missing piece (reference: utils/scenarios/dwweek runs a
   * week of nightly loads WITH failures along the way; recovery is
@@ -21,14 +19,7 @@ import org.apache.spark.sql.SparkSession
 object SoakCrashWriter {
   def main(args: Array[String]): Unit = {
     val Array(root, table, batchPath, keys) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-soak-crash-writer")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(2)
     val cat = new Catalog(spark, root)
     cat.attach()
     cat.upsert(table, spark.read.parquet(batchPath),

@@ -73,7 +73,7 @@ object EventsStream {
     val cap = s.sessionState.conf.numShufflePartitions
     val parts = math.min(cap.toLong, math.max(4L, bytes / (4L << 20) + 1))
     val s2 = s.newSession()
-    graft.Tables.tune(s2)
+    graft.Session.tune(s2)
     s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
     s2
   }

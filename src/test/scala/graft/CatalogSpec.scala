@@ -11,44 +11,6 @@ class CatalogSpec extends GraftSuite {
     new Catalog(spark,
       java.nio.file.Files.createTempDirectory("graft_cat").toString)
 
-  /** Retry-once-and-RECORD wrapper for the reader-vs-rewrite race
-    * tests (round-14 directive #5; rationale at the flake-tripwire
-    * test at the bottom of this suite): a first failure is recorded —
-    * incident line with the TEST NAME and the exception head — and
-    * retried once; a reproducing failure still fails the suite. */
-  private val flakeRoot = "target/flake_incidents"
-  private def retryOnceRecordingIn(root: String, name: String)(
-      body: => Unit): Unit =
-    try body
-    catch {
-      // ScalaTest's canceled/pending signals are not failures — they
-      // must reach the framework untouched, not be logged as flakes
-      // and re-executed (ADVICE r14)
-      case e @ (_: org.scalatest.exceptions.TestCanceledException |
-                _: org.scalatest.exceptions.TestPendingException) =>
-        throw e
-      // NonFatal only: a fatal JVM error (OutOfMemoryError,
-      // StackOverflowError) means the JVM is likely corrupted —
-      // re-running the heavy race body in it proves nothing, and the
-      // error must propagate as-is (ADVICE r14)
-      case scala.util.control.NonFatal(e) =>
-        val head = Option(e.getMessage).getOrElse(e.toString)
-          .replaceAll("\\s+", " ").take(200)
-        // the incident parser splits on spaces — the name goes in the
-        // table field underscored so the line stays machine-readable
-        sources.Incidents.record(root, "test_flake",
-          name.replaceAll("\\s+", "_"), head)
-        System.err.println(s"[flake-tripwire] '$name' failed once " +
-          s"($head) — recorded to $root/_incidents/log, retrying once")
-        body
-    }
-  private def retryOnceRecording(name: String)(body: => Unit): Unit =
-    retryOnceRecordingIn(flakeRoot, name)(body)
-  /** `test` + the flake tripwire — registration helper so the race
-    * tests wrap with a one-line change. */
-  private def raceTest(name: String)(body: => Unit): Unit =
-    test(name) { retryOnceRecording(name)(body) }
-
   test("create / insert / truncate / drop lifecycle") {
     val cat = freshCatalog()
     val schema = StructType(Seq(StructField("id", LongType),
@@ -271,7 +233,30 @@ class CatalogSpec extends GraftSuite {
       "recreated table inherited the dropped table's id sequence")
   }
 
-  raceTest("appends are atomic: readers never see a torn batch") {
+  test("a DROP cut short after its rename leaves no table behind") {
+    // the state a crash between dropTable's rename and its deletes
+    // leaves: the directory moved aside, the id counter still in place
+    import java.nio.file.Files
+    val cat = freshCatalog()
+    cat.createTableAs("t", Seq((0L, 5L)).toDF("id", "k"))
+    cat.insertAutoInc("t", "id", Seq(7L).toDF("k"), Seq(col("k")))
+    val dir = java.nio.file.Paths.get(cat.tablePath("t"))
+    val aside = dir.resolveSibling("_dropped.t.1")
+    Files.move(dir, aside)
+    assert(cat.autoIncNext("t", "id") > 1, "fixture must keep the counter")
+    val after = new Catalog(spark, dir.getParent.toString)
+    assert(after.listTables.isEmpty, after.listTables)
+    after.createTableAs("t", Seq((0L, 9L)).toDF("id", "k"))
+    assert(after.versions("t").isEmpty)
+    assert(after.autoIncNext("t", "id") == 1L,
+      "recreated table resumed the dropped table's id sequence")
+    after.attach()
+    assert(!Files.exists(aside), "attach must delete the dropped leftover")
+    assert(after.listTables == Seq("t"))
+    assert(after.table("t").as[(Long, Long)].collect().toSeq == Seq((0L, 9L)))
+  }
+
+  test("appends are atomic: readers never see a torn batch") {
     // a bare Append into a listed directory publishes part files one
     // rename at a time, so a reader could count half a batch. An append
     // publishes one manifest naming the whole batch; every concurrent
@@ -551,7 +536,7 @@ class CatalogSpec extends GraftSuite {
     assert(ids == want, s"every committed batch must survive, got $ids")
   }
 
-  raceTest("a reader sees the pre- or post-image of a rewrite, never a mix") {
+  test("a reader sees the pre- or post-image of a rewrite, never a mix") {
     import scala.jdk.CollectionConverters._
     val cat = freshCatalog()
     cat.createTableAs("r",
@@ -578,7 +563,7 @@ class CatalogSpec extends GraftSuite {
       .map(_.getInt(0)).toSeq == Seq(5))
   }
 
-  raceTest("snapshot reads stay complete under a continuous writer (hammer)") {
+  test("snapshot reads stay complete under a continuous writer (hammer)") {
     // round-10 regression pin (found by the bench's mixed leg,
     // reproduced by sources.CatalogStress): when commits swapped the
     // table directory, a reader whose listing straddled the swap got a
@@ -1342,65 +1327,5 @@ class CatalogSpec extends GraftSuite {
     assert(s.contains("Range"), s"fixture must keep its Range node:\n$s")
     assert(!s.contains("splits=Some"),
       s"numSlices must be folded out of the hash input:\n$s")
-  }
-
-  // ---- flake tripwire (round-14 directive #5): one CatalogSpec test
-  // failed ONCE under full-suite load (2026-08-16, FAILED_READ_FILE
-  // noise near the reader-vs-rewrite race tests; never reproduced in
-  // 7+ full runs) and the failing test's NAME was lost to output
-  // truncation. The reader-vs-rewrite race family now runs under
-  // retryOnceRecording: a first failure appends an incident line —
-  // kind `test_flake`, the TEST NAME, the exception head — to the
-  // durable flake log (target/flake_incidents, checked each round)
-  // and prints it, then the body re-runs once. A failure that
-  // REPRODUCES on the retry still fails the suite — a recurring torn
-  // snapshot is an engine bug, and one retry only absorbs one-off
-  // environment noise while capturing the name either way. ----
-  test("flake tripwire: clean runs record nothing; a flake is NAMED") {
-    import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_flake").toString
-    // clean body → zero incident lines (the directive's assertion)
-    retryOnceRecordingIn(root, "clean test") { assert(1 + 1 == 2) }
-    assert(sources.Incidents.list(root).isEmpty,
-      "a passing body must record nothing")
-    // fails once then passes → suite-green, incident carries the name
-    var n = 0
-    retryOnceRecordingIn(root, "flaky reader test") {
-      n += 1; if (n == 1) sys.error("[FAILED_READ_FILE] simulated flake")
-    }
-    assert(n == 2, "the body must have been retried exactly once")
-    val inc = sources.Incidents.list(root)
-    assert(inc.map(_.kind) == Seq("test_flake"))
-    assert(inc.head.table == "flaky_reader_test",
-      s"the incident must NAME the test: ${inc.head}")
-    assert(inc.head.detail.contains("FAILED_READ_FILE"))
-    // fails twice → rethrows (a reproducing failure is not absorbed)
-    val e = intercept[RuntimeException] {
-      retryOnceRecordingIn(root, "hard fail") { sys.error("boom") }
-    }
-    assert(e.getMessage == "boom")
-    assert(sources.Incidents.list(root).count(_.table == "hard_fail") == 1)
-    // ScalaTest cancel/pending propagate UNTOUCHED: run once, no
-    // incident, no retry (ADVICE r14 — they are signals, not flakes)
-    var c = 0
-    intercept[org.scalatest.exceptions.TestCanceledException] {
-      retryOnceRecordingIn(root, "canceled test") {
-        c += 1; cancel("environment missing")
-      }
-    }
-    assert(c == 1, "a canceled body must not be re-run")
-    // fatal JVM errors propagate as-is: the JVM is suspect and the
-    // heavy race body must not re-run in it (ADVICE r14)
-    var f = 0
-    intercept[OutOfMemoryError] {
-      retryOnceRecordingIn(root, "fatal error") {
-        f += 1; throw new OutOfMemoryError("simulated")
-      }
-    }
-    assert(f == 1, "a fatal error must not be re-run")
-    assert(!sources.Incidents.list(root).exists(i =>
-      i.table == "canceled_test" || i.table == "fatal_error"),
-      "cancel/fatal must not be recorded as flakes")
-    sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
   }
 }

@@ -106,9 +106,8 @@ class PlanSpec extends GraftSuite {
   test("bucketed join runs without exchanging the join key") {
     // disable broadcast so the test exercises the big×big path bucketing
     // exists for (at sf0.001 Catalyst would rightly broadcast the dim side)
-    // build first: run() → Tables.tune resets the threshold, so the
-    // override must come after the DataFrame is constructed (planning
-    // happens at action time against the live conf)
+    // planning happens at action time against the live conf, so the
+    // override need only cover planOf
     val df = operators.DdlDmlQueries.bucketedJoin.run(spark, sf)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -653,7 +652,7 @@ class PlanSpec extends GraftSuite {
 
   test("a repeated TPC-H pass compiles no generated class") {
     // Spark keeps generated classes in one JVM-wide LRU cache that
-    // Tables.tune sizes; at Spark's default of 100 entries a pass over
+    // Session.tune sizes; at Spark's default of 100 entries a pass over
     // q01-q22 (~300 classes) evicted its own classes and Janino-compiled
     // every one of them again on every run
     import org.apache.spark.metrics.source.CodegenMetrics

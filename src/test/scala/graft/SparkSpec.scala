@@ -6,17 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session for all suites (one JVM-wide session, lazy). */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    Tables.tune(s)
+    val s = Session.local(4)
+    s.conf.set("spark.sql.streaming.checkpointLocation",
+      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
     s
   }
   val sf: String = "/root/testdata/sf0.001"
