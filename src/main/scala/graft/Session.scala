@@ -41,14 +41,16 @@ object Session {
   private val codegenCacheEntries = 1000
 
   /** Session defaults we care about regardless of how the driver built the
-    * session. Idempotent; applied once per session (Tables.table calls this
-    * on every read). A session counts as tuned once its own function
-    * registry holds graft's functions, which `tune` registers last; temp
-    * functions belong to one session, so a `newSession()` is tuned on its
-    * first read and no session is kept reachable here. All settings are
-    * runtime confs except the generated-class cache size: a static conf
-    * that Spark reads once per JVM, when it first generates code, so it
-    * takes effect only if `tune` runs before the JVM's first codegen.
+    * session. Idempotent; applied once per session. `Tables.table` calls
+    * it before every read, first of all, because the schema it converts
+    * from a file footer depends on `nanosAsLong`. A session counts as
+    * tuned once its own function registry holds graft's functions, which
+    * `tune` registers last; temp functions belong to one session, so a
+    * `newSession()` is tuned on its first read and no session is kept
+    * reachable here. All settings are runtime confs except the
+    * generated-class cache size: a static conf that Spark reads once per
+    * JVM, when it first generates code, so it takes effect only if `tune`
+    * runs before the JVM's first codegen.
     * `local` runs it before returning; a session built elsewhere (the
     * benchmark harness's) gets it from its first `Tables.registerAll`. */
   def tune(spark: SparkSession): Unit = {
@@ -84,7 +86,8 @@ object Session {
     // (oam/etc/Calpont.xml:483 PmMaxMemorySmallSide); match that.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
     // events.parquet carries TIMESTAMP(NANOS) which the vectorized reader
-    // rejects; read as long and convert (see Tables.table).
+    // rejects; read as long and convert. Tables.table reads the footer
+    // schema under this setting, so it must be set before the first read.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // every unpersist of a localCheckpoint barrier's RDD logs an
     // expected "was locally checkpointed … cannot be recomputed after

@@ -1,18 +1,30 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.PartitionSpec
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Table registry over the driver-generated parquet testdata.
   *
   * Plays the role of the reference's `CalpontSystemCatalog`
   * (reference: dbcon/execplan/calpontsystemcatalog.h:107 — schema.table.column
-  * → object IDs → column files). Here a table is simply a parquet path; the
+  * → object IDs → column files). Here a base table is a parquet path: a
+  * file, or a flat directory of part files. Its schema comes from a file
+  * footer, as a catalog table's comes from its manifest, and both are
+  * scanned through the one builder `sources.FileScan`, so a read plans
+  * from metadata and runs no job. Nothing about a table is cached. The
   * columnar layout, dictionary encoding, and min/max block statistics the
   * reference implements by hand (blocksize.h:25, extentmap.h:99) come free
   * from the Parquet format + Spark's vectorized reader.
   *
-  * At 100 TB the same code holds: `spark.read.parquet` scales to any number
-  * of files/partitions; scan parallelism is governed by
+  * At 100 TB the same code holds: scan parallelism is governed by
   * `spark.sql.files.maxPartitionBytes`, and partition/row-group pruning is
   * automatic once filters are pushed (verified in PlanSpec).
   */
@@ -43,7 +55,7 @@ object Tables {
     // physical-planning + whole-stage-codegen pass of the subtree on
     // the driver PER CALL, at query-construction time. For the
     // scan-shaped inputs spread is used on, the split count is
-    // estimable from the (already-listed, cached) FileIndex without
+    // estimable from the FileIndex the relation already holds, without
     // planning; anything non-scan-shaped falls back to the exact
     // physical count. The callers' keys must stay high-cardinality
     // (doc_id, l_orderkey …) — a low-cardinality key would make the
@@ -89,119 +101,33 @@ object Tables {
     walk(df.queryExecution.optimizedPlan)
   } catch { case _: Throwable => None }
 
-  /** Inferred schema per table path, cached while the directory's
-    * fingerprint holds — the CalpontSystemCatalog caching analog (the
-    * reference resolves schema.table.column through an in-memory catalog
-    * per statement, calpontsystemcatalog.h:107; it does not re-read
-    * storage metadata). Without this, EVERY DataFrame construction runs
-    * a footer-reading schema-inference job per table (50–150 ms each,
-    * k tables per query) — round 8's switch to end-to-end timing
-    * surfaced that as a uniform ~2× construction tax on the TPC-H
-    * headline. Entries carry the fingerprint they were cached under, so
-    * a directory REWRITTEN at the same path (new files, new schema) is
-    * detected and re-read instead of served stale — the immutability
-    * assumption is enforced, not just documented. */
-  private val schemaCache =
-    scala.collection.concurrent.TrieMap
-      .empty[String, (String, org.apache.spark.sql.types.StructType)]
-
-  /** Cheap change detector for a parquet table path — a DIRECTORY of
-    * part-files or (the driver-generated testdata layout) a single
-    * plain parquet FILE. Dir: mtime + entry count + total length of the
-    * top-level listing (an overwrite replaces part-files, an append
-    * adds files, a swap replaces the dir — each changes a component).
-    * File: mtime + size. One or two stats + at most one readdir;
-    * microseconds against the 50–150 ms footer job it guards.
-    *
-    * The fallback for an unreadable path must be a CONSTANT: round 9's
-    * first cut returned a nanoTime-salted value from the catch block —
-    * and since the testdata tables are single FILES, Files.list threw
-    * NotADirectoryException on every call, every fingerprint was
-    * unique, the cache never hit once, and every query construction
-    * silently re-ran schema inference + a fresh file listing (a
-    * uniform ~1.5× tax on the whole headline that looked exactly like
-    * machine co-load; caught by an r8-vs-r9 same-machine bisect). */
-  private def fingerprint(p: String): String =
-    try {
-      val path = java.nio.file.Paths.get(p)
-      val mtime = java.nio.file.Files.getLastModifiedTime(path).toMillis
-      if (!java.nio.file.Files.isDirectory(path))
-        s"$mtime#f#${java.nio.file.Files.size(path)}"
-      else {
-        var n = 0L
-        var bytes = 0L
-        scala.util.Using.resource(java.nio.file.Files.list(path)) { st =>
-          val it = st.iterator()
-          while (it.hasNext) {
-            val f = it.next()
-            n += 1
-            bytes += (try java.nio.file.Files.size(f)
-                      catch { case _: Exception => 0L })
-          }
-        }
-        s"$mtime#$n#$bytes"
-      }
-    } catch { case _: Exception => "absent" }
-
-  /** Resolved base relation per (session, path), fingerprint-stamped —
-    * constructing a scan is pure (immutable DataFrame) AND the cached
-    * DataFrame freezes the parquet file listing at first action, so the
-    * entry is only valid while the directory is byte-identical; the
-    * fingerprint check on every access enforces that. Weak session keys
-    * alone would never be collected here: every cached Dataset strongly
-    * references its SparkSession, and a WeakHashMap holds VALUES
-    * strongly, so the key would stay reachable through its own value
-    * forever (a permanent leak in a serving process that mints sessions
-    * per client). The per-session map is therefore held through a
-    * SoftReference — the only strong path to a dead session then runs
-    * through softly-reachable state, which the collector clears under
-    * memory pressure, upon which the weak key entry follows. */
-  private val relationCache =
-    new java.util.WeakHashMap[SparkSession, java.lang.ref.SoftReference[
-      scala.collection.concurrent.TrieMap[String, (String, DataFrame)]]]()
-
-  /** Drop cached schema/relation state for one table path (all sessions)
-    * — for callers that know they just mutated a directory and don't
-    * want to rely on the fingerprint (e.g. a same-millisecond in-place
-    * rewrite that preserves file count and byte length). */
-  def invalidate(p: String): Unit = {
-    schemaCache.remove(p)
-    relationCache.synchronized {
-      val it = relationCache.values().iterator()
-      while (it.hasNext) {
-        val m = it.next().get()
-        if (m != null) m.remove(p)
-      }
-    }
-  }
-
-  /** Read one table. Filters/pruning push down to the parquet scan. */
+  /** Read one table: the relation `sources.FileScan` builds, over the
+    * path's parquet files and the schema in the footer of the first one
+    * in path order, the one file Spark's own inference reads. A read runs
+    * no Spark job, keeps nothing, and sees the files as they are now.
+    * Filters/pruning push down to the scan. In a directory, `_`- and
+    * `.`-prefixed names are skipped, as Spark's listing skips them; a
+    * subdirectory (a partitioned layout) is refused. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    Session.tune(spark)
-    val p = path(dir, name)
-    val fp = fingerprint(p)
-    val perSession = relationCache.synchronized {
-      val ref = relationCache.get(spark)
-      val existing = if (ref != null) ref.get else null
-      if (existing != null) existing
-      else {
-        val fresh = scala.collection.concurrent.TrieMap
-          .empty[String, (String, DataFrame)]
-        relationCache.put(spark, new java.lang.ref.SoftReference(fresh))
-        fresh
-      }
-    }
-    val df = perSession.get(p).filter(_._1 == fp).map(_._2).getOrElse {
-      val schema = schemaCache.get(p).filter(_._1 == fp).map(_._2)
-        .getOrElse {
-          val s = spark.read.parquet(p).schema
-          schemaCache.put(p, (fp, s))
-          s
-        }
-      val d = spark.read.schema(schema).parquet(p)
-      perSession.put(p, (fp, d))
-      d
-    }
+    Session.tune(spark) // the footer conversion reads its nanosAsLong
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path(dir, name))
+    val fs = p.getFileSystem(conf)
+    val st = fs.getFileStatus(fs.makeQualified(p))
+    val files = if (!st.isDirectory) Seq(st) else fs.listStatus(st.getPath)
+      .filterNot(f => "_.".contains(f.getPath.getName.head))
+      .sortBy(_.getPath.toString).toSeq
+    require(files.nonEmpty && files.forall(_.isFile),
+      s"${st.getPath} is neither a parquet file nor a flat directory of them")
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(
+      files.head, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    // the Spark schema the writer stored, else the parquet schema
+    // converted under this session's conf, made nullable as
+    // DataSource.resolveRelation makes an inferred schema
+    val schema = org.apache.spark.sql.graft.SchemaBridge.asNullable(
+      ParquetFileFormat.readSchemaFromFooter(new Footer(files.head.getPath,
+        footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    val df = sources.FileScan(spark, files, schema, PartitionSpec.emptySpec)
     // Normalize the event timestamp to TIMESTAMP (ltz) whatever the file
     // carries. Generations of the testdata have shipped TIMESTAMP(NANOS)
     // (arrives as long under nanosAsLong; `div 1000` floors to µs exactly —
@@ -211,16 +137,10 @@ object Tables {
     // NTZ→LTZ cast maps the same wall-clock instant, so downstream
     // unix_micros()/window() calls see one stable type either way.
     df.schema.fields.foldLeft(df) {
-      case (d, f) if f.name == "ts" && f.dataType ==
-          org.apache.spark.sql.types.LongType =>
-        d.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      case (d, f) if f.name == "ts" && f.dataType ==
-          org.apache.spark.sql.types.TimestampNTZType =>
-        d.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast(
-            org.apache.spark.sql.types.TimestampType))
+      case (d, f) if f.name == "ts" && f.dataType == LongType =>
+        d.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case (d, f) if f.name == "ts" && f.dataType == TimestampNTZType =>
+        d.withColumn("ts", col("ts").cast(TimestampType))
       case (d, _) => d
     }
   }

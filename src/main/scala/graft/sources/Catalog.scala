@@ -3,10 +3,8 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileStatusCache,
-  HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec,
-  PartitioningUtils}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{PartitionPath,
+  PartitionSpec, PartitioningUtils}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Path, Paths}
@@ -284,9 +282,9 @@ class Catalog(spark: SparkSession, root: String) {
       .map(p => table.relativize(p).toString -> Files.size(p)).toSeq.sorted)
   }
 
-  /** A DataFrame over exactly `m`'s online files. Spark is handed the
-    * files, their sizes and their partition values from the manifest, so
-    * a read lists no directory and runs no listing job, however many
+  /** A DataFrame over exactly `m`'s online files. `FileScan` is handed
+    * the files, their sizes and their partition values from the manifest,
+    * so a read lists no directory and runs no listing job, however many
     * files the version holds. */
   private def scan(name: String, m: Manifest): DataFrame = {
     val dir = new HPath(tablePath(name))
@@ -303,18 +301,9 @@ class Catalog(spark: SparkSession, root: String) {
       PartitionPath(InternalRow.fromSeq(partSchema.map(f => PartitioningUtils
         .castPartValueToDesiredType(f.dataType, kv(f.name), tz))), d)
     }
-    val listing = new FileStatusCache {
-      private val byPath = files.map(f => f.getPath -> Array(f)).toMap
-      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] =
-        byPath.get(p)
-      def putLeafFiles(p: HPath, leaves: Array[FileStatus]): Unit = ()
-      def invalidateAll(): Unit = ()
-    }
-    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
-      Some(m.schema), listing, Some(PartitionSpec(partSchema, parts)))
-    val df = spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
-      StructType(m.schema.filterNot(f => m.partCols.contains(f.name))), None,
-      new ParquetFileFormat, Map.empty)(spark))
+    val df = FileScan(spark, files,
+      StructType(m.schema.filterNot(f => m.partCols.contains(f.name))),
+      PartitionSpec(partSchema, parts))
     if (m.partCols.isEmpty) df
     else df.select(m.schema.fieldNames.toIndexedSeq.map(col): _*)
   }

@@ -904,9 +904,8 @@ class CatalogSpec extends GraftSuite {
   }
 
   test("Tables.table detects a directory rewritten at the same path") {
-    // the relation/schema caches are fingerprint-stamped: a rewrite at
-    // the same path (different schema, different row count) must be
-    // re-read, never served from the stale cached listing
+    // a read keeps nothing: a rewrite at the same path (different schema,
+    // different row count) is seen by the next read
     val tmp = java.nio.file.Files.createTempDirectory("graft_tabcache")
       .toString
     spark.range(5).toDF("a").write.mode("overwrite")
@@ -917,34 +916,61 @@ class CatalogSpec extends GraftSuite {
       .parquet(s"$tmp/t.parquet")
     val df2 = Tables.table(spark, tmp, "t")
     assert(df2.columns.toSeq == Seq("b"),
-      "rewritten schema must be re-inferred, not cache-served")
+      "rewritten schema must be re-read, not served stale")
     assert(df2.count() == 7)
-    // the explicit hook drops entries too (for same-fingerprint edits)
-    Tables.invalidate(Tables.path(tmp, "t"))
     assert(Tables.table(spark, tmp, "t").count() == 7)
+    // a partitioned layout is refused, never read as its top level only
+    spark.range(4).selectExpr("id", "id % 2 AS p").write.partitionBy("p")
+      .parquet(s"$tmp/part.parquet")
+    intercept[IllegalArgumentException](Tables.table(spark, tmp, "part"))
     sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp),
       swallowErrors = true)
   }
 
-  test("Tables.table cache HITS for unchanged paths — dir AND single file") {
-    // round-9 regression guard: the first fingerprint cut assumed every
-    // table path is a directory; the driver testdata are single parquet
-    // FILES, so Files.list threw, the catch returned a nanoTime-salted
-    // value, and the cache never hit once — every query construction
-    // silently re-ran schema inference (a uniform ~1.5x headline tax
-    // that masqueraded as machine co-load). Reference equality proves
-    // the cached relation is served, both layouts.
-    val fileTable = Tables.table(spark, sf, "orders") // sf tables = files
-    assert(Tables.table(spark, sf, "orders") eq fileTable,
-      "single-FILE parquet path must hit the relation cache")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tabhit")
-      .toString
-    spark.range(3).toDF("a").write.parquet(s"$tmp/d.parquet") // a DIR
-    val dirTable = Tables.table(spark, tmp, "d")
-    assert(Tables.table(spark, tmp, "d") eq dirTable,
-      "directory parquet path must hit the relation cache")
-    sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp),
-      swallowErrors = true)
+  test("a table read runs no Spark job and has Spark's inferred schema") {
+    // Tables.table takes the schema from one file footer, as a catalog
+    // table takes it from its manifest, so registering every base table
+    // in a fresh session runs no job (schema inference ran one per table)
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import scala.jdk.CollectionConverters._
+    val s = spark.newSession()
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("tables-read", "registerAll")
+      Tables.registerAll(s, sf)
+      // the bus delivers one listener's events in order: once this
+      // sentinel job's start has arrived, so has every earlier job's
+      sc.setJobGroup("tables-sentinel", "sentinel")
+      s.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("tables-sentinel") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("tables-sentinel"), "sentinel job not seen")
+      assert(groups.asScala.count(_ == "tables-read") == 0,
+        "registerAll ran Spark jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    for (n <- Tables.all) {
+      val relation = Tables.table(s, sf, n).queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation.schema }
+      assert(relation.contains(s.read.parquet(Tables.path(sf, n)).schema),
+        s"$n: footer schema differs from Spark's inferred schema")
+    }
+    // events.ts is compared above under the session's nanosAsLong, and
+    // whatever the file carries, the read normalizes it to TIMESTAMP
+    assert(Tables.table(s, sf, "events").schema("ts").dataType ==
+      TimestampType)
   }
 
   // ---- AUTO_INCREMENT sequence (reference: writeengine/shared/

@@ -11,13 +11,15 @@ class SessionSpec extends GraftSuite {
     s.sessionState.functionRegistry.functionExists(
       FunctionIdentifier("simhash64"))
 
-  /** Tunes a fresh session that runs no action (Spark itself holds a
-    * session that ran one for a while) and hands back only a weak
-    * reference, so no frame of the caller keeps the session alive. */
+  /** Tunes a fresh session and builds a table read in it, with no action
+    * (Spark itself holds a session that ran one for a while), and hands
+    * back only a weak reference, so no frame of the caller keeps the
+    * session alive. */
   private def tunedAndDropped(): WeakReference[SparkSession] = {
     val s = spark.newSession()
     Session.tune(s)
     assert(hasGraftFunctions(s))
+    assert(Tables.table(s, sf, "nation").columns.nonEmpty)
     new WeakReference(s)
   }
 
