@@ -95,6 +95,11 @@ object Session {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
+    // AQE stays on for batch queries; Spark turns it off inside every
+    // streaming query and WARNs each time it does
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+      org.apache.logging.log4j.Level.ERROR)
     plans.GraftExtensions.registerAll(spark)
   }
 }

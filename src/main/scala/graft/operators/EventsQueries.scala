@@ -1173,120 +1173,58 @@ object EventsQueries {
     }
   }
 
-  /** One CDC micro-batch MERGE into the persisted per-user state table
-    * at `$tmp/state` — crash-safe and idempotent:
+  /** One CDC micro-batch MERGE into the per-user state table `state` of
+    * the catalog at `tmp`: one `Catalog.update` whose commit also sets the
+    * applied (lineage, batch id) as the table props `cdc.lineage` and
+    * `cdc.batch`, so the merged rows and the batch they absorbed publish
+    * together or not at all.
     *
-    *  - crash RECOVERY: a crash between the swap's two renames leaves no
-    *    state dir but a retired copy — restored before reading;
-    *  - IDEMPOTENT replay: an `_applied_bid` marker travels inside the
-    *    state dir (underscore files are invisible to the parquet
-    *    reader), so a batch the persisted state already absorbed — a
-    *    crash after the swap but before the stream checkpoint
-    *    committed — merges exactly once instead of double-counting its
-    *    running sums;
-    *  - write-then-swap (the table-format commit analog): stage to a new
-    *    dir carrying its own marker, retire the old state by RENAME,
-    *    move the staged dir into place, drop the retired copy — at
-    *    every instant either the old or the new state is recoverable.
-    *
-    *  - checkpoint-RESET detection: the marker also carries the stream
-    *    LINEAGE id (a `_graft_stream_id` written into the checkpoint
-    *    location when it is first created, surviving restarts of the
-    *    same checkpoint but regenerated when the checkpoint dir is
-    *    fresh). A state table stamped by a DIFFERENT lineage means the
-    *    stream restarted with a new/deleted checkpoint against persisted
-    *    state: batch ids restart at 0, so the bid guard alone would
-    *    silently drop every batch forever. That mismatch now fails
-    *    loudly instead of no-opping — the operator must either keep the
+    *  - IDEMPOTENT replay: a batch id at or below the applied one (a
+    *    crash after the commit, before the stream checkpoint committed)
+    *    is a no-op instead of double-counting its running sums; a crash
+    *    before the commit published nothing, so the batch merges once
+    *    when the stream presents it again;
+    *  - checkpoint-RESET detection: `runId` is the stream LINEAGE id
+    *    (`streamLineageId`: it survives restarts of the same checkpoint
+    *    and is fresh for a fresh checkpoint dir). State stamped by a
+    *    DIFFERENT lineage means the stream restarted with a new/deleted
+    *    checkpoint against persisted state: batch ids restart at 0, so
+    *    the bid guard alone would silently drop every batch forever.
+    *    That mismatch fails loudly — the operator must either keep the
     *    checkpoint or reset the state table with it.
     *
-    * Exposed for the crash/replay simulation in StreamingSpec. */
+    * The step runs under the table lock, and each merge vacuums the state
+    * to one retained version. Exposed for the crash/replay simulation in
+    * StreamingSpec. */
   private[graft] def applyCdcBatch(tmp: String, batch: DataFrame,
       bid: Long, runId: String = ""): Unit = {
-    import java.nio.file.{Files, Paths}
-    val stateDir = s"$tmp/state"
-    val fs = Paths.get(stateDir)
-    def stateExists = Files.exists(fs)
-    val retired = Paths.get(s"$tmp/state_old")
-    if (!stateExists && Files.exists(retired)) Files.move(retired, fs)
-    val markOf = (d: String) => Paths.get(s"$d/_applied_bid")
-    val (applied, appliedRun) =
-      if (stateExists && Files.exists(markOf(stateDir))) {
-        val parts = Files.readString(markOf(stateDir)).trim.split("\\s+")
-        (parts(0).toLong, if (parts.length > 1) Some(parts(1)) else None)
-      } else (-1L, None)
-    if (runId.nonEmpty && appliedRun.exists(_ != runId))
-      throw new IllegalStateException(
-        s"CDC state at $stateDir was written by stream lineage " +
-          s"${appliedRun.get} (through batch $applied) but this stream is " +
-          s"lineage $runId (batch $bid): the checkpoint was reset while " +
-          "the state table persists — refusing to merge (double-count) or " +
-          "skip (data loss); reset the state table together with the " +
-          "checkpoint, or restore the original checkpoint")
-    // upgrade guard: a PRE-LINEAGE marker (bid only) can't distinguish a
-    // same-checkpoint replay from a checkpoint reset — EXCEPT at the
-    // in-order replay boundary ABOVE batch 0. A same-checkpoint crash
-    // recovery re-presents exactly the last committed batch
-    // (bid == applied); failing that hard would turn every first
-    // restart after upgrading to lineage-stamped code into an
-    // operator-intervention outage. So bid == applied > 0 no-ops
-    // idempotently AND adopts this stream's lineage into the marker
-    // (first contact claims provenance, making the next reset
-    // detectable) — safe because a RESET stream restarts its bids at
-    // 0, so it would have tripped the applied > bid guard below on
-    // batch 0 long before reaching bid == applied. At applied == 0 ==
-    // bid that alibi vanishes: 0/0 is simultaneously the replay
-    // boundary and the reset signature (a reset's very first batch),
-    // and a silent adopt-and-skip there eats one batch of genuinely
-    // different data. Both ambiguous shapes fail loudly; only the
-    // provably-replay one adopts.
-    if (runId.nonEmpty && appliedRun.isEmpty && applied >= 0 &&
-        applied >= bid && !(applied == bid && applied > 0))
-      throw new IllegalStateException(
-        s"CDC state at $stateDir carries a pre-lineage marker (through " +
-          s"batch $applied, no stream id) and this stream (lineage " +
-          s"$runId) presented batch $bid: cannot tell an idempotent " +
-          "replay from a checkpoint reset" +
-          (if (applied == bid) " (batch 0/0 is both the replay boundary" +
-            " and a reset's first batch)" else "") +
-          " — refusing to merge (double-count) or skip (data loss); " +
-          "restore the original checkpoint or reset the state table " +
-          "with it")
-    if (runId.nonEmpty && appliedRun.isEmpty && applied == bid &&
-        applied > 0) {
-      // adopt atomically (write-aside + ATOMIC_MOVE): a crash mid-write
-      // of an in-place rewrite would leave a truncated marker that
-      // fails every subsequent parse — the one marker mutation that
-      // doesn't ride the staged-dir swap must not be the one that can
-      // tear
-      val tmpMark = Paths.get(s"$stateDir/_applied_bid.tmp")
-      Files.writeString(tmpMark, s"$applied $runId\n")
-      Files.move(tmpMark, markOf(stateDir),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    if (applied < bid) {
-      val bAgg = batch.groupBy(col("user_id"))
-        .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
-          col("value"))).as("st"),
-          count(lit(1)).as("n"))
-      val merged =
-        if (!stateExists) bAgg
-        else batch.sparkSession.read.parquet(stateDir)
-          .unionByName(bAgg)
-          .groupBy(col("user_id"))
-          .agg(max(col("st")).as("st"), sum(col("n")).as("n"))
-      val next = s"$tmp/state_next_$bid"
-      merged.write.mode("overwrite").parquet(next)
-      Files.writeString(markOf(next),
-        s"$bid${if (runId.nonEmpty) " " + runId else ""}\n")
-      if (stateExists) {
-        graft.sources.FsUtil.deleteRecursively(retired,
-          swallowErrors = true)
-        Files.move(fs, retired)
+    val cat = new graft.sources.Catalog(batch.sparkSession, tmp)
+    val bAgg = batch.groupBy(col("user_id"))
+      .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
+        col("value"))).as("st"),
+        count(lit(1)).as("n"))
+    graft.sources.TableLocks.withLock(tmp, "state") {
+      if (!cat.listTables.contains("state"))
+        cat.createTable("state", bAgg.schema)
+      val applied = cat.prop("state", "cdc.batch").fold(-1L)(_.toLong)
+      val appliedRun = cat.prop("state", "cdc.lineage")
+      if (runId.nonEmpty && appliedRun.exists(_ != runId))
+        throw new IllegalStateException(
+          s"CDC state at ${cat.tablePath("state")} was written by stream " +
+            s"lineage ${appliedRun.get} (through batch $applied) but this " +
+            s"stream is lineage $runId (batch $bid): the checkpoint was " +
+            "reset while the state table persists — refusing to merge " +
+            "(double-count) or skip (data loss); reset the state table " +
+            "together with the checkpoint, or restore the original " +
+            "checkpoint")
+      if (applied < bid) {
+        cat.update("state", _.unionByName(bAgg)
+            .groupBy(col("user_id"))
+            .agg(max(col("st")).as("st"), sum(col("n")).as("n")),
+          Map("cdc.batch" -> bid.toString) ++
+            Option(runId).filter(_.nonEmpty).map("cdc.lineage" -> _))
+        cat.vacuumVersions("state", keep = 1)
       }
-      Files.move(Paths.get(next), fs)
-      graft.sources.FsUtil.deleteRecursively(retired, swallowErrors = true)
     }
   }
 
@@ -1303,15 +1241,14 @@ object EventsQueries {
     * Scale shape: state is ONE row per key (bounded by |users|, not event
     * volume); each merge shuffles (key, 24-byte struct) pairs — batch
     * size + state size, never history; at 100 TB this is the foreachBatch
-    * MERGE a lakehouse CDC sink runs, with the parquet-swap standing in
-    * for the table format's atomic commit. */
+    * MERGE a lakehouse CDC sink runs, with the catalog's manifest commit
+    * as the table format's atomic commit. */
   val streamCdcUpsert: QueryDef = QueryDef(
     "x_stream_cdc_upsert",
     (s, dir) => {
       val tmp = DdlDmlQueries.scratch("stream_cdc_upsert")
       val staged = s"$tmp/events_src"
       ev(s, dir).repartition(4).write.mode("overwrite").parquet(staged)
-      val stateDir = s"$tmp/state"
       val lineage = streamLineageId(s"$tmp/cp")
       val q = s.readStream.schema(ev(s, dir).schema)
         .option("maxFilesPerTrigger", 1).parquet(staged)
@@ -1323,7 +1260,7 @@ object EventsQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      s.read.parquet(stateDir)
+      new graft.sources.Catalog(s, tmp).table("state")
         .select(col("user_id"), col("st.ts").as("last_ts"),
           col("st.event_type").as("last_type"),
           col("st.value").as("last_value"), col("n").as("n_events"))

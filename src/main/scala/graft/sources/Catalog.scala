@@ -19,8 +19,9 @@ import scala.jdk.CollectionConverters._
   *
   * Every table version is an immutable manifest,
   * `<root>/<name>/_manifest/v<n>`: the schema, the live data files with
-  * their sizes, and the disabled partition specs. The manifest log plays
-  * the role of the reference's extent map and version buffer
+  * their sizes, the disabled partition specs and the table props (the
+  * AUTO_INCREMENT counters, a CDC stream's applied batch). The manifest
+  * log plays the role of the reference's extent map and version buffer
   * (versioning/BRM/extentmap.h, dbrm.h:163-192): it says which files
   * belong to which version, and a writer never moves a file out from
   * under a reader. A commit writes new files into a fresh commit
@@ -57,13 +58,17 @@ class Catalog(spark: SparkSession, root: String) {
     * validates the text against the current table set). View text may
     * reference catalog tables by bare name; they register as temp views
     * here so the definition resolves in the creating session exactly as
-    * it later will on attach(). */
+    * it later will on attach(). The definition publishes like a manifest
+    * (written aside, hard-linked into place), so of two instances racing
+    * one name exactly one wins, and no reader sees a torn definition. */
   def createView(name: String, sql: String): Unit = {
     require(!Files.exists(viewFile(name)), s"view $name already exists")
-    Files.createDirectories(viewsDir)
     listTables.foreach(t => table(t).createOrReplaceTempView(t))
-    spark.sql(sql).createOrReplaceTempView(name)
-    Files.writeString(viewFile(name), sql)
+    val view = spark.sql(sql)
+    try linkNew(viewFile(name), sql)
+    catch { case _: java.nio.file.FileAlreadyExistsException =>
+      throw new IllegalArgumentException(s"view $name already exists") }
+    view.createOrReplaceTempView(name)
   }
 
   /** DROP VIEW — removes the persisted definition and the session view. */
@@ -128,10 +133,8 @@ class Catalog(spark: SparkSession, root: String) {
       v0: => (StructType, Seq[String], Seq[(String, Long)])): Unit =
     TableLocks.withLock(root, name) {
       require(published(name).isEmpty, s"table $name already exists")
-      // counters a DROP cut short left behind must not resume here
-      dropAutoInc(name)
       val (schema, partCols, files) = v0
-      publish(name, 0, Manifest(schema, partCols, files, Nil))
+      publish(name, 0, Manifest(schema, partCols, files, Nil, Map.empty))
     }
 
   private def inPartition(file: String, spec: String): Boolean =
@@ -207,13 +210,18 @@ class Catalog(spark: SparkSession, root: String) {
   // ---- the manifest log ------------------------------------------------
 
   /** One table version: `files` are paths relative to the table directory
-    * with their byte sizes; files under a `disabled` spec are offline. */
+    * with their byte sizes; files under a `disabled` spec are offline.
+    * `props` is table state that is not data (the AUTO_INCREMENT counters,
+    * a CDC stream's applied batch): every commit carries it forward
+    * unless it sets a key, so it publishes with the rows, or not at all. */
   private case class Manifest(schema: StructType, partCols: Seq[String],
-      files: Seq[(String, Long)], disabled: Seq[String]) {
+      files: Seq[(String, Long)], disabled: Seq[String],
+      props: Map[String, String]) {
     def offline(file: String): Boolean =
       disabled.exists(inPartition(file, _))
     def render: String = (Seq(s"schema ${schema.json}") ++
       partCols.map("partition " + _) ++ disabled.map("disabled " + _) ++
+      props.toSeq.sorted.map { case (k, v) => s"prop $k $v" } ++
       files.map { case (f, n) => s"file $n $f" }).mkString("", "\n", "\n")
   }
 
@@ -223,7 +231,8 @@ class Catalog(spark: SparkSession, root: String) {
     Manifest(DataType.fromJson(all("schema").head).asInstanceOf[StructType],
       all("partition"),
       all("file").map { s => val Array(n, f) = s.split(" ", 2); f -> n.toLong },
-      all("disabled"))
+      all("disabled"),
+      all("prop").map { s => val Array(k, v) = s.split(" ", 2); k -> v }.toMap)
   }
 
   private def manifestDir(name: String): Path =
@@ -254,16 +263,19 @@ class Catalog(spark: SparkSession, root: String) {
       throw new IllegalArgumentException(s"no such table: $name")
     }
 
-  /** Publish `m` as version `v`: written aside, then hard-linked into
-    * place. link(2) fails on an existing name, so a version appears
+  /** Publish `m` as version `v`. */
+  private def publish(name: String, v: Int, m: Manifest): Unit =
+    linkNew(manifestDir(name).resolve(s"v$v"), m.render)
+
+  /** Create `target` holding `text`: written aside, then hard-linked into
+    * place. link(2) fails on an existing name, so the file appears
     * exactly once, complete, and is never overwritten. */
-  private def publish(name: String, v: Int, m: Manifest): Unit = {
-    val dir = manifestDir(name)
-    Files.createDirectories(dir)
-    val tmp = Files.createTempFile(dir, ".v", ".tmp")
+  private def linkNew(target: Path, text: String): Unit = {
+    Files.createDirectories(target.getParent)
+    val tmp = Files.createTempFile(target.getParent, ".", ".tmp")
     try {
-      Files.writeString(tmp, m.render)
-      Files.createLink(dir.resolve(s"v$v"), tmp)
+      Files.writeString(tmp, text)
+      Files.createLink(target, tmp)
     } finally Files.delete(tmp)
   }
 
@@ -345,9 +357,15 @@ class Catalog(spark: SparkSession, root: String) {
       m.copy(files = m.files ++ write(name, v, df, m.partCols))
     }
 
-  /** UPDATE name SET (via transform) WHERE (via predicate). */
-  def update(name: String, transform: DataFrame => DataFrame): Unit =
-    rewrite(name, transform)
+  /** UPDATE name SET (via transform) WHERE (via predicate); `props` are
+    * set in the same commit. */
+  def update(name: String, transform: DataFrame => DataFrame,
+      props: Map[String, String] = Map.empty): Unit =
+    rewrite(name, transform, props)
+
+  /** A table property of the current version. */
+  def prop(name: String, key: String): Option[String] =
+    manifest(name, current(name)).props.get(key)
 
   /** DELETE FROM name WHERE cond: keep !cond rows. */
   def delete(name: String, keep: DataFrame => DataFrame): Unit =
@@ -359,12 +377,14 @@ class Catalog(spark: SparkSession, root: String) {
     * and writes alike, the reference's disabled-partition semantics
     * (ha_calpont_partition.cpp partition mark). A failed write publishes
     * nothing. */
-  private def rewrite(name: String, f: DataFrame => DataFrame): Unit =
+  private def rewrite(name: String, f: DataFrame => DataFrame,
+      props: Map[String, String] = Map.empty): Unit =
     commit(name) { (m, v) =>
       val out = f(scan(name, m))
       val partCols = m.partCols.filter(out.columns.contains)
-      Manifest(out.schema, partCols, write(name, v, out, partCols) ++
-        m.files.filter(x => m.offline(x._1)), m.disabled)
+      m.copy(schema = out.schema, partCols = partCols,
+        files = write(name, v, out, partCols) ++
+          m.files.filter(x => m.offline(x._1)), props = m.props ++ props)
     }
 
   // ---- time travel ----------------------------------------------------
@@ -405,15 +425,17 @@ class Catalog(spark: SparkSession, root: String) {
       }
     }
 
-  /** ROLLBACK analog: republish retained version v's files as the current
-    * state (reference: a DML rollback re-applies the version buffer's
-    * undo images, versioning/BRM/dbrm.h:163-192 + dmlproc rollback
-    * path). The state being rolled back stays retained as a version —
-    * the audit trail survives the abort — and no data is copied. */
+  /** ROLLBACK analog: republish retained version v's schema and files as
+    * the current state (reference: a DML rollback re-applies the version
+    * buffer's undo images, versioning/BRM/dbrm.h:163-192 + dmlproc
+    * rollback path). The state being rolled back stays retained as a
+    * version — the audit trail survives the abort — and no data is
+    * copied. The props stay the current ones: a rollback never rewinds
+    * an id sequence or a stream's applied batch. */
   def rollbackTo(name: String, v: Int): Unit =
-    commit(name) { (_, _) =>
+    commit(name) { (m, _) =>
       require(published(name).contains(v), s"no version $v of $name retained")
-      manifest(name, v)
+      manifest(name, v).copy(props = m.props)
     }
 
   /** INSERT … ON DUPLICATE KEY UPDATE (MySQL upsert, full-row form): a
@@ -433,80 +455,78 @@ class Catalog(spark: SparkSession, root: String) {
 
   // ---- AUTO_INCREMENT sequence (reference: writeengine/shared/
   // we_brm.h:62 startAutoIncrementSequence / :75 getAutoIncrementRange —
-  // BRM owns one persistent monotone counter per AI column; every bulk
-  // load / insert reserves a contiguous [first, first+count) range under
-  // the same serialization as DML, so concurrent writers can never mint
-  // the same id, and deletes never recycle ids) ------------------------
+  // BRM owns one persistent monotone counter per AI column beside the
+  // extent map; every bulk load / insert reserves a contiguous
+  // [first, first+count) range under the same serialization as DML, so
+  // concurrent writers can never mint the same id, and deletes never
+  // recycle ids). Here the counter is the manifest prop `autoinc.<col>`:
+  // it publishes in the same commit as the rows it numbered. ----------
 
-  private def autoIncFile(name: String, colName: String): Path =
-    Paths.get(root, "_autoinc", s"$name.$colName")
+  /** The next id of `colName` in manifest `m` (1 if never started). A
+    * counter file from the layout before counters moved into the
+    * manifest is refused by name: there is no second read path for it. */
+  private def nextId(name: String, colName: String, m: Manifest): Long = {
+    val legacy = Paths.get(root, "_autoinc", s"$name.$colName")
+    if (Files.exists(legacy))
+      throw new IllegalStateException(s"$legacy holds an AUTO_INCREMENT " +
+        "counter in the pre-manifest layout; delete it and set its value " +
+        "again with setAutoIncStart")
+    m.props.get(s"autoinc.$colName").fold(1L)(_.toLong)
+  }
 
   /** Next value the sequence would hand out (1 if never started) — the
     * information_schema AUTO_INCREMENT surface. */
-  def autoIncNext(name: String, colName: String): Long = {
-    val f = autoIncFile(name, colName)
-    if (Files.exists(f)) Files.readString(f).trim.toLong else 1L
-  }
-
-  /** Persist the sequence counter via write-aside + ATOMIC_MOVE: a
-    * crash inside a plain truncate-then-write leaves an EMPTY counter
-    * file whose parse failure bricks every later insert. */
-  private def writeAutoInc(f: Path, next: Long): Unit = {
-    Files.createDirectories(f.getParent)
-    val tmp = f.resolveSibling(
-      s".${f.getFileName}.tmp.${ProcessHandle.current().pid()}")
-    Files.writeString(tmp, next.toString)
-    Files.move(tmp, f, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  def autoIncNext(name: String, colName: String): Long =
+    nextId(name, colName, manifest(name, current(name)))
 
   /** ALTER TABLE … AUTO_INCREMENT = n analog (reference:
-    * startAutoIncrementSequence). MySQL semantics: the sequence only
-    * moves FORWARD — a start below the current next value is a no-op. */
+    * startAutoIncrementSequence): a manifest-only commit. MySQL
+    * semantics: the sequence only moves FORWARD — a start below the
+    * current next value leaves it where it is. */
   def setAutoIncStart(name: String, colName: String, next: Long): Unit =
-    TableLocks.withLock(root, name) {
-      writeAutoInc(autoIncFile(name, colName),
-        math.max(next, autoIncNext(name, colName)))
+    commit(name) { (m, _) =>
+      m.copy(props = m.props + (s"autoinc.$colName" ->
+        math.max(next, nextId(name, colName, m)).toString))
     }
 
   /** INSERT with AUTO_INCREMENT id assignment: reserves a contiguous id
     * range sized to the batch (the getAutoIncrementRange analog), assigns
     * ids densely in `orderBy` order via the partitioned prefix-scan (no
     * single-task window — the range reservation is driver-side O(1), the
-    * assignment is distributed), appends, and advances the persisted
-    * sequence. Returns the first id of the reserved range (MySQL's
-    * LAST_INSERT_ID() reports the first id of a multi-row insert).
+    * assignment is distributed), and appends. Returns the first id of
+    * the reserved range (MySQL's LAST_INSERT_ID() reports the first id of
+    * a multi-row insert).
     *
-    * The whole reserve→assign→append sequence runs under the table
+    * Reserve, assign, write and advance are one commit under the table
     * lock, so two concurrent inserters get disjoint ranges — the exact
-    * guarantee BRM's mutex around the AI counter provides. The counter
-    * advances BEFORE the batch lands: a crash between them burns the
-    * reserved range (a gap — MySQL semantics after a rolled-back
-    * insert) instead of handing the SAME ids out again next time,
-    * which is the one failure an id sequence can never have. At
-    * 100 TB the lock holds for the batch write, identical to the
-    * reference's bulk-load table lock; ids within the batch cost one
-    * count + one prefix-scan over the batch only, never the table. */
+    * guarantee BRM's mutex around the AI counter provides — and the
+    * advanced counter publishes with the rows or not at all: a failed
+    * insert hands its range out again, and no published row can carry
+    * an id the counter has not passed. At 100 TB the lock holds for the
+    * batch write, identical to the reference's bulk-load table lock; ids
+    * within the batch cost one count + one prefix-scan over the batch
+    * only, never the table. */
   def insertAutoInc(name: String, colName: String, batch: DataFrame,
-      orderBy: Seq[org.apache.spark.sql.Column]): Long =
-    TableLocks.withLock(root, name) {
-      val cols = manifest(name, current(name)).schema.fieldNames.toSeq
-      val first = autoIncNext(name, colName)
+      orderBy: Seq[org.apache.spark.sql.Column]): Long = {
+    var first = 0L
+    commit(name) { (m, v) =>
+      first = nextId(name, colName, m)
       // materialize the batch ONCE: count() and the assignment write are
       // two jobs, and a non-deterministic batch source re-evaluated
-      // between them could write more rows than the reserved range —
-      // handing the overflow ids out again on the next insert
+      // between them could write more rows than the reserved range
       val b = Checkpoints.barrier(batch)
       val n = b.count()
-      writeAutoInc(autoIncFile(name, colName), first + n) // RESERVE
       val rn = "__ai_rn"
+      val cols = m.schema.fieldNames.toSeq
       val assigned = graft.functions.Prefix.over(b, orderBy,
           Seq(graft.functions.Prefix.rowNumber(rn)))
         .withColumn(colName, col(rn) + lit(first - 1L))
-        .drop(rn)
-      insertIntoSelect(name, assigned.select(cols.head, cols.tail: _*))
-      first
+        .select(cols.head, cols.tail: _*)
+      m.copy(files = m.files ++ write(name, v, assigned, m.partCols),
+        props = m.props + (s"autoinc.$colName" -> (first + n).toString))
     }
+    first
+  }
 
   /** TRUNCATE TABLE: publishes an empty version (the truncated state
     * stays retained like any other). */
@@ -514,13 +534,11 @@ class Catalog(spark: SparkSession, root: String) {
     commit(name)((m, _) => m.copy(files = Nil, disabled = Nil))
 
   /** DROP TABLE — under the table lock, one rename moves the table
-    * directory (every version and file) aside to a `_dropped.` name that
-    * no listing reads, so the table is gone at once, whole; then that
-    * directory and the auto-increment counters are deleted. A crash
-    * after the rename leaves only garbage: `attach` deletes the
-    * directory and `create` the counters. Leaving either in use would
-    * let a later CREATE of the same name serve the DROPPED table's
-    * history through tableAsOf or resume its id sequence. */
+    * directory (every version, file and counter) aside to a `_dropped.`
+    * name that no listing reads, so the table is gone at once, whole;
+    * then that directory is deleted. A crash after the rename leaves only
+    * garbage, which `attach` deletes; a later CREATE of the same name
+    * starts with no history and a fresh id sequence. */
   def dropTable(name: String): Unit = TableLocks.withLock(root, name) {
     val dir = Paths.get(tablePath(name))
     if (Files.exists(dir)) {
@@ -528,13 +546,6 @@ class Catalog(spark: SparkSession, root: String) {
       Files.move(dir, aside, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       FsUtil.deleteRecursively(aside)
     }
-    dropAutoInc(name)
-  }
-
-  private def dropAutoInc(name: String): Unit = {
-    val ai = Paths.get(root, "_autoinc")
-    names(ai).filter(_.startsWith(s"$name."))
-      .foreach(n => Files.deleteIfExists(ai.resolve(n)))
   }
 
   /** ALTER TABLE ADD COLUMN (with default value, rewrite). */
@@ -550,11 +561,12 @@ class Catalog(spark: SparkSession, root: String) {
   def listTables: Seq[String] = tableNames.filter(published(_).nonEmpty)
 
   /** Entries of the root that can name a table: `_` and `.` prefixes are
-    * the catalog's own (locks, views, counters, dropped tables). */
+    * the catalog's own (locks, views, incidents, dropped tables). */
   private def tableNames: Seq[String] = names(Paths.get(root))
     .filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
 
-  /** Recorded operational incidents for this catalog root (lock-restore
-    * losses) — queryable with the engine itself, like the lock view. */
+  /** The incident log of this catalog root (`Incidents`; nothing records
+    * into it today) — queryable with the engine itself, like the lock
+    * view. */
   def incidents: DataFrame = Incidents.df(spark, root)
 }

@@ -30,29 +30,12 @@ object Checkpoints {
     df.sparkSession.conf.getOption("spark.graft.checkpoint.dir")
       .filter(_.nonEmpty)
 
-  /** True when the context's fs-qualified checkpoint dir (always a UUID
-    * SUBDIR `setCheckpointDir` created under the configured path) lives
-    * under `dir`. Compares at path-component boundaries — a plain
-    * substring test would false-positive when `dir` is a string prefix
-    * of a sibling path (configured `/tmp/ckpt` vs an existing dir under
-    * `/tmp/ckpt-2/`). */
-  private[graft] def underDir(existing: String, dir: String): Boolean = {
-    // fs-qualification adds a scheme (`file:` locally); strip a local
-    // scheme so `/tmp/x` matches `file:/tmp/x/uuid`, and normalize the
-    // trailing slash so the boundary test is exact
-    def norm(p: String) =
-      p.stripPrefix("file:").stripSuffix("/")
-    val e = norm(existing)
-    val d = norm(dir)
-    e == d || e.startsWith(d + "/")
-  }
-
-  /** Last raw configured dir this process applied to a context — lets a
-    * changed `spark.graft.checkpoint.dir` rotate storage at the next
-    * barrier instead of being first-wins for the context's lifetime
-    * (a long-lived serving session must be able to move checkpoint
-    * traffic off a draining filesystem). Weak keys: a stopped context
-    * drops its entry. */
+  /** The raw configured dir this process last applied to each context:
+    * a changed `spark.graft.checkpoint.dir` rotates storage at the next
+    * barrier instead of being first-wins for the context's lifetime (a
+    * long-lived serving session must be able to move checkpoint traffic
+    * off a draining filesystem). Weak keys: a stopped context drops its
+    * entry. */
   private val applied =
     new java.util.WeakHashMap[org.apache.spark.SparkContext, String]()
 
@@ -61,31 +44,16 @@ object Checkpoints {
     * `localCheckpoint()`.
     *
     * The configured dir is resolved PER BARRIER: when it differs from
-    * what this process last applied (or from a dir the caller set on
-    * the context directly), `setCheckpointDir` runs again, so future
-    * barriers land under the new path while already-written checkpoints
-    * stay readable where they are. Reliable-mode data retention is the
-    * operator's call (or
+    * what this process last applied to the context, `setCheckpointDir`
+    * runs again, so future barriers land under the new path while
+    * already-written checkpoints stay readable where they are.
+    * Reliable-mode data retention is the operator's call (or
     * spark.cleaner.referenceTracking.cleanCheckpoints). */
   def barrier(df: DataFrame): DataFrame = reliableDir(df) match {
     case Some(dir) =>
       val sc = df.sparkSession.sparkContext
-      sc.synchronized {
-        // compare against the FS-QUALIFIED form of the configured dir —
-        // getCheckpointDir is always qualified (scheme + authority, and
-        // relative paths resolved), so matching the raw string would
-        // fail for a relative dir or a non-local default FS (hdfs://…)
-        // and re-run setCheckpointDir on EVERY barrier, minting a fresh
-        // UUID subdir each time
-        val qualified =
-          try {
-            val p = new org.apache.hadoop.fs.Path(dir)
-            p.getFileSystem(sc.hadoopConfiguration).makeQualified(p).toString
-          } catch { case _: Exception => dir }
-        val current = sc.getCheckpointDir
-          .exists(e => underDir(e, qualified) || underDir(e, dir)) &&
-          Option(applied.get(sc)).forall(_ == dir)
-        if (!current) {
+      applied.synchronized {
+        if (applied.get(sc) != dir) {
           sc.setCheckpointDir(dir)
           applied.put(sc, dir)
         }

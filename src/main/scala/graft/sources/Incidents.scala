@@ -9,10 +9,10 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * utils/loggingcpp; an operator diagnoses yesterday's anomaly from
   * persisted state, not from a scrollback that no longer exists).
   *
-  * No production path records an incident today; the test suite's
-  * flake tripwire (`test_flake`) does. The two kinds the log was built
-  * for survive as log-format data only, and logs that hold them still
-  * parse:
+  * Nothing records an incident today: the only writers are the
+  * `d_incidents` query and CatalogSpec's rotation test, which plant
+  * lines to read back. The two kinds the log was built for survive as
+  * log-format data only, and logs that hold them still parse:
   *  - `lock_restore_lost` came from TableLocks' old rename-aside steal,
   *    replaced by the kernel's file lock;
   *  - `torn_listing` came from Catalog's old directory-listing bracket.

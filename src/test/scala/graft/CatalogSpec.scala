@@ -234,8 +234,8 @@ class CatalogSpec extends GraftSuite {
   }
 
   test("a DROP cut short after its rename leaves no table behind") {
-    // the state a crash between dropTable's rename and its deletes
-    // leaves: the directory moved aside, the id counter still in place
+    // the state a crash between dropTable's rename and its delete
+    // leaves: the directory, id counter included, moved aside
     import java.nio.file.Files
     val cat = freshCatalog()
     cat.createTableAs("t", Seq((0L, 5L)).toDF("id", "k"))
@@ -243,7 +243,6 @@ class CatalogSpec extends GraftSuite {
     val dir = java.nio.file.Paths.get(cat.tablePath("t"))
     val aside = dir.resolveSibling("_dropped.t.1")
     Files.move(dir, aside)
-    assert(cat.autoIncNext("t", "id") > 1, "fixture must keep the counter")
     val after = new Catalog(spark, dir.getParent.toString)
     assert(after.listTables.isEmpty, after.listTables)
     after.createTableAs("t", Seq((0L, 9L)).toDF("id", "k"))
@@ -410,6 +409,31 @@ class CatalogSpec extends GraftSuite {
     assert(!s3.catalog.tableExists("grp_counts"))
     assert(s3.catalog.tableExists("base"))
     intercept[IllegalArgumentException](cat.dropView("grp_counts"))
+  }
+
+  test("two instances racing createView of one name: exactly one wins") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_cat").toString
+    try for (round <- 1 to 3) {
+      val name = s"v$round"
+      val gate = new java.util.concurrent.CyclicBarrier(2)
+      val results = (1 to 2).map { i =>
+        val cat = new Catalog(spark.newSession(), root)
+        val text = s"SELECT $i AS winner"
+        val f = new java.util.concurrent.FutureTask[Option[String]](() => {
+          gate.await()
+          try { cat.createView(name, text); Some(text) }
+          catch { case _: IllegalArgumentException => None }
+        })
+        new Thread(f).start()
+        f
+      }.map(_.get())
+      assert(results.flatten.size == 1,
+        s"round $round: exactly one createView must succeed, got $results")
+      assert(Files.readString(Paths.get(root, "_views", s"$name.sql")) ==
+        results.flatten.head, "the file must hold the winner's text")
+    } finally sources.FsUtil.deleteRecursively(Paths.get(root),
+      swallowErrors = true)
   }
 
   test("upsert replaces colliding keys, appends fresh ones, is idempotent") {
@@ -1000,6 +1024,52 @@ class CatalogSpec extends GraftSuite {
     assert(cat.autoIncNext("t", "id") == 103L)
     val ids = cat.table("t").select("id").as[Long].collect().toSet
     assert(ids == Set(4L, 5L, 6L, 7L, 100L, 101L, 102L))
+    // a rollback restores rows, never the id sequence
+    cat.rollbackTo("t", 0)
+    assert(cat.table("t").count() == 0)
+    assert(cat.autoIncNext("t", "id") == 103L, "rollback rewound the ids")
+    assert(cat.insertAutoInc("t", "id",
+      spark.range(0, 2).toDF("k"), Seq(col("k"))) == 103L)
+    assert(cat.table("t").select("id").as[Long].collect().toSet ==
+      Set(103L, 104L))
+  }
+
+  test("a failed auto-increment insert advances neither the counter nor the table") {
+    val cat = freshCatalog()
+    cat.createTableAs("t", Seq.empty[(Long, Long, String)]
+      .toDF("id", "k", "tag"))
+    cat.insertAutoInc("t", "id", Seq((5L, "a")).toDF("k", "tag"),
+      Seq(col("k")))
+    def rows = cat.table("t").as[(Long, Long, String)].collect().toSeq
+    assert(rows == Seq((1L, 5L, "a")) && cat.versions("t") == Seq(0))
+    // the batch lacks `tag`: the range is reserved and the ids assigned
+    // before the final select fails
+    intercept[org.apache.spark.sql.AnalysisException](
+      cat.insertAutoInc("t", "id", spark.range(0, 5).toDF("k"),
+        Seq(col("k"))))
+    assert(cat.autoIncNext("t", "id") == 2L,
+      "a failed insert must not advance the counter")
+    assert(cat.versions("t") == Seq(0))
+    assert(rows == Seq((1L, 5L, "a")))
+    assert(cat.insertAutoInc("t", "id", Seq((6L, "b")).toDF("k", "tag"),
+      Seq(col("k"))) == 2L)
+  }
+
+  test("an id counter file from before counters moved into the manifest is refused") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft_cat").toString
+    val cat = new Catalog(spark, root)
+    cat.createTableAs("t", Seq((1L, 5L)).toDF("id", "k"))
+    val legacy = Paths.get(root, "_autoinc", "t.id")
+    Files.createDirectories(legacy.getParent)
+    Files.writeString(legacy, "2")
+    val e1 = intercept[IllegalStateException](cat.autoIncNext("t", "id"))
+    val e2 = intercept[IllegalStateException](cat.insertAutoInc("t", "id",
+      Seq(6L).toDF("k"), Seq(col("k"))))
+    assert(e1.getMessage.contains(legacy.toString), e1.getMessage)
+    assert(e2.getMessage.contains(legacy.toString), e2.getMessage)
+    assert(cat.versions("t").isEmpty && cat.table("t").count() == 1)
+    sources.FsUtil.deleteRecursively(Paths.get(root), swallowErrors = true)
   }
 
   test("concurrent auto-increment inserters reserve disjoint ranges") {

@@ -5,6 +5,7 @@ import graft.streaming.EventsStream.EventRow
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends GraftSuite {
   import spark.implicits._
@@ -208,13 +209,26 @@ class StreamingSpec extends GraftSuite {
         col("n_events"))
     val diff = state.exceptAll(batch).count() + batch.exceptAll(state).count()
     assert(diff == 0, "4-micro-batch merged state must equal batch LWW")
+    // every merge vacuums the state to one retained version
+    val manifests = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"),
+      s"graft_ddl_scratch_${ProcessHandle.current().pid()}",
+      "stream_cdc_upsert", "state", "_manifest")
+    val published = scala.util.Using.resource(
+      java.nio.file.Files.list(manifests))(_.iterator().asScala
+      .count(_.getFileName.toString.matches("v\\d+")))
+    assert(published >= 1 && published <= 2,
+      s"4 micro-batches left $published manifests")
   }
 
-  test("cdc batch apply is idempotent on replay and recovers a torn swap") {
+  /** The catalog at `tmp` that holds the CDC state table `state`. */
+  private def cdcState(tmp: String) = new sources.Catalog(spark, tmp)
+
+  test("cdc batch apply is idempotent on replay and absorbs an unpublished commit") {
     import java.nio.file.{Files, Paths}
     val tmp = Files.createTempDirectory("graft_cdc_sim").toString
     def stateCount: Map[Long, Long] =
-      spark.read.parquet(s"$tmp/state").collect()
+      cdcState(tmp).table("state").collect()
         .map(r => r.getAs[Long]("user_id") -> r.getAs[Long]("n")).toMap
     val ev = Tables.table(spark, sf, "events")
     val b0 = ev.filter(col("event_id") % 2 === 0)
@@ -222,14 +236,17 @@ class StreamingSpec extends GraftSuite {
     try {
       operators.EventsQueries.applyCdcBatch(tmp, b0, 0L)
       val after0 = stateCount
-      // REPLAY batch 0 (crash after swap, before stream-checkpoint
-      // commit): the _applied_bid marker must make it a no-op — without
-      // it the n running sums double
+      // REPLAY batch 0 (crash after the commit, before the stream
+      // checkpoint committed): the applied batch id in the manifest must
+      // make it a no-op — without it the n running sums double
       operators.EventsQueries.applyCdcBatch(tmp, b0, 0L)
       assert(stateCount == after0, "replayed batch must not double-count")
-      // TORN SWAP before batch 1: simulate a crash between the two
-      // renames (state moved aside, replacement never landed)
-      Files.move(Paths.get(s"$tmp/state"), Paths.get(s"$tmp/state_old"))
+      // a crash inside batch 1's commit: its files written into the
+      // commit directory the next version would use, no manifest naming
+      // them
+      val next = cdcState(tmp).versions("state").size + 1
+      cdcState(tmp).table("state").write
+        .parquet(Paths.get(tmp, "state", s"c$next").toString)
       operators.EventsQueries.applyCdcBatch(tmp, b1, 1L)
       val total = stateCount.values.sum
       assert(total == ev.count(),
@@ -249,9 +266,9 @@ class StreamingSpec extends GraftSuite {
       operators.EventsQueries.applyCdcBatch(tmp, b0, 0L, "lineageA")
       operators.EventsQueries.applyCdcBatch(tmp, b0, 1L, "lineageA")
       // same-lineage replay of an absorbed batch stays a silent no-op
-      val before = spark.read.parquet(s"$tmp/state").count()
+      val before = cdcState(tmp).table("state").count()
       operators.EventsQueries.applyCdcBatch(tmp, b0, 1L, "lineageA")
-      assert(spark.read.parquet(s"$tmp/state").count() == before)
+      assert(cdcState(tmp).table("state").count() == before)
       // a NEW lineage (checkpoint deleted/re-pointed; bids restart at 0)
       // must fail loudly — the old guard silently dropped every batch
       val e = intercept[IllegalStateException](
@@ -263,45 +280,16 @@ class StreamingSpec extends GraftSuite {
       val id1 = operators.EventsQueries.streamLineageId(cp)
       assert(operators.EventsQueries.streamLineageId(cp) == id1)
       assert(operators.EventsQueries.streamLineageId(s"$tmp/cp2") != id1)
-      // upgrade guard: a PRE-LINEAGE marker (bid only, written by code
-      // predating the stream id) + a bid at/below it cannot distinguish
-      // replay from reset — must fail loudly, never silently skip
-      Files.writeString(Paths.get(s"$tmp/state/_applied_bid"), "1\n")
-      val e2 = intercept[IllegalStateException](
-        operators.EventsQueries.applyCdcBatch(tmp, b0, 0L, "lineageB"))
-      assert(e2.getMessage.contains("pre-lineage"))
-      // …but the in-order replay BOUNDARY (bid == applied) is a
-      // legitimate same-checkpoint crash recovery — the exact state a
-      // restart right after upgrading to lineage-stamped code presents.
-      // It must no-op idempotently AND adopt the lineage into the
-      // marker so the NEXT reset is detectable
-      val n1 = spark.read.parquet(s"$tmp/state").count()
-      operators.EventsQueries.applyCdcBatch(tmp, b0, 1L, "lineageB")
-      assert(spark.read.parquet(s"$tmp/state").count() == n1,
-        "bid == applied replay over a pre-lineage marker must no-op")
-      assert(Files.readString(Paths.get(s"$tmp/state/_applied_bid"))
-        .contains("lineageB"), "first contact adopts the lineage")
-      // after adoption a reset is a lineage MISMATCH again — loud
+      // the refused batch changed nothing: the original lineage's next
+      // batch merges in order under its own stamp
+      operators.EventsQueries.applyCdcBatch(tmp, b0, 2L, "lineageA")
+      assert(cdcState(tmp).prop("state", "cdc.batch") == Some("2"))
+      assert(cdcState(tmp).prop("state", "cdc.lineage") == Some("lineageA"))
+      // a reset is refused at any batch id, not only at 0
       val e3 = intercept[IllegalStateException](
-        operators.EventsQueries.applyCdcBatch(tmp, b0, 0L, "lineageC"))
+        operators.EventsQueries.applyCdcBatch(tmp, b0, 5L, "lineageC"))
       assert(e3.getMessage.contains("checkpoint was reset"))
-      // while an in-order NEXT batch merges normally under the marker
-      operators.EventsQueries.applyCdcBatch(tmp, b0, 2L, "lineageB")
-      assert(Files.readString(Paths.get(s"$tmp/state/_applied_bid"))
-        .contains("lineageB"))
-      // the 0/0 boundary is NOT adoptable: applied == 0 is both the
-      // replay boundary (crash right after batch 0) and the reset
-      // signature (a reset restarts bids at 0, so its FIRST batch is
-      // the first chance to notice) — a silent adopt here would eat one
-      // batch of genuinely different data. Must fail loudly.
-      Files.writeString(Paths.get(s"$tmp/state/_applied_bid"), "0\n")
-      val e4 = intercept[IllegalStateException](
-        operators.EventsQueries.applyCdcBatch(tmp, b0, 0L, "lineageD"))
-      assert(e4.getMessage.contains("pre-lineage") &&
-        e4.getMessage.contains("0/0"),
-        s"0/0 over a pre-lineage marker must refuse: ${e4.getMessage}")
-      assert(!Files.readString(Paths.get(s"$tmp/state/_applied_bid"))
-        .contains("lineageD"), "the refused 0/0 must not adopt")
+      assert(cdcState(tmp).prop("state", "cdc.batch") == Some("2"))
     } finally {
       sources.FsUtil.deleteRecursively(Paths.get(tmp), swallowErrors = true)
     }
