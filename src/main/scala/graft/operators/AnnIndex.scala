@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Catalog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,12 +13,18 @@ import org.apache.spark.sql.functions._
   * across statements, not a query-time subtree (reference:
   * versioning/BRM/extentmap.h:116 — EMEntry partition/segment state).
   * `build` trains the coarse quantizer and the product-quantizer
-  * codebooks ONCE and persists four parquet artifacts:
+  * codebooks ONCE and commits the artifacts as `sources.Catalog` tables:
   *
   *   coarse_centroids (cid, centroid)   k×64 floats — the probe table
   *   coarse_assign    (vec_id, cid)     the inverted-list assignment
   *   pq_codebook      (ss, cid, cen)    m×k×sub floats — the ADC table
   *   pq_codes         (vec_id, ss, cid) m small ints/vector — 8-byte codes
+  *
+  * (plus the residual pair respq_codebook/respq_codes). The catalog's
+  * manifest log is the index's one version authority, as BRM is for every
+  * file in the reference (versioning/BRM/dbrm.h:163-192): a row-less
+  * `index` table is the publish point, its props name each artifact's
+  * version, and a reader pins them once and reads `tableAsOf` each.
   *
   * `ivfPqQuery` then composes a pure read-side plan: probe pruning from
   * the broadcast centroids, candidate lists from the assignment, ADC
@@ -27,11 +34,13 @@ import org.apache.spark.sql.functions._
   * artifacts to the warehouse; the query side is sub-second because its
   * only large input is nprobe/k of the code table.
   *
-  * Training materializes intermediate state to scratch parquet (write +
-  * read-back) instead of `persist()`: multi-consumer subtrees still run
-  * the k-means lineage once, but the Spark block-manager cache stays
-  * empty — a library caller composing many ANN queries in one session
-  * accumulates nothing (asserted in VectorTextSpec).
+  * Training hands its final state to a sink that writes it and reads it
+  * back — a catalog commit in the build, scratch parquet (`materialize`)
+  * in the composed in-line queries — instead of `persist()`:
+  * multi-consumer subtrees still run the k-means lineage once, but the
+  * Spark block-manager cache stays empty — a library caller composing
+  * many ANN queries in one session accumulates nothing (asserted in
+  * VectorTextSpec).
   */
 object AnnIndex {
   // fixed index parameters — shared by the composed in-line queries, the
@@ -44,11 +53,12 @@ object AnnIndex {
   val ITERS = 2     // Lloyd iterations (both quantizers)
 
   // per-process scratch root (pid-suffixed so concurrent JVMs can't wipe
-  // each other's artifacts). -Dgraft.ann.scratch overrides it with a
-  // caller-managed SHARED root — how the two-JVM maintenance contention
+  // each other's artifacts), deleted with everything under it when the JVM
+  // exits. -Dgraft.ann.scratch overrides it with a caller-managed SHARED
+  // root that is never deleted — how the two-JVM maintenance contention
   // test points a child mutator at the parent's index (a production
   // deployment would root this on the shared filesystem anyway; the
-  // maint-lock protocol is already cross-process).
+  // catalog's locks are already cross-process).
   private lazy val scratchRoot: java.nio.file.Path = {
     val p = sys.props.get("graft.ann.scratch") match {
       case Some(shared) => java.nio.file.Paths.get(shared)
@@ -56,7 +66,8 @@ object AnnIndex {
         val d = java.nio.file.Paths.get(
           System.getProperty("java.io.tmpdir"),
           s"graft_ann_index_${ProcessHandle.current().pid()}")
-        d.toFile.deleteOnExit() // own it: best-effort cleanup on exit
+        sys.addShutdownHook(
+          graft.sources.FsUtil.deleteRecursively(d, swallowErrors = true))
         d
     }
     java.nio.file.Files.createDirectories(p)
@@ -69,30 +80,23 @@ object AnnIndex {
 
   /** Per-corpus artifact directory — keyed by the data dir so one JVM can
     * hold indexes for several corpora (Verify sf0.01, Bench sf0.1, the 8×
-    * scaling corpus) without collision. */
+    * scaling corpus) without collision. It is the built index's catalog
+    * root; the maintained index's root is its `maint` subdirectory. */
   def indexDir(dir: String): String =
     scratchRoot.resolve(dir.replaceAll("[^A-Za-z0-9._-]", "_")).toString
 
-  def centroidsPath(dir: String): String = s"${indexDir(dir)}/coarse_centroids"
-  def assignPath(dir: String): String = s"${indexDir(dir)}/coarse_assign"
-  def codebookPath(dir: String): String = s"${indexDir(dir)}/pq_codebook"
-  def codesPath(dir: String): String = s"${indexDir(dir)}/pq_codes"
-  def resCodebookPath(dir: String): String =
-    s"${indexDir(dir)}/respq_codebook"
-  def resCodesPath(dir: String): String = s"${indexDir(dir)}/respq_codes"
-  private def marker(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(indexDir(dir), "_GRAFT_INDEX_OK")
+  private def builtCatalog(s: SparkSession, dir: String) =
+    new Catalog(s, indexDir(dir))
+  private val builtTables = Seq("coarse_centroids", "coarse_assign",
+    "pq_codebook", "pq_codes", "respq_codebook", "respq_codes")
 
-  /** Artifact-layout version stamped INTO the marker. Bumped whenever
-    * build() gains a new artifact (v2 = the r7 respq codebook/codes) OR
-    * changes how an artifact's bytes are produced (v3 = the r8 training
-    * restructure: per-round barriers + codebook aggregated from the
-    * final round's state instead of a codes⋈subs re-join — float-rounded
-    * identically, but a layout epoch costs nothing and removes the
-    * doubt), so an index dir built by an older layout reads as absent
-    * and rebuilds instead of passing ensureBuilt with artifacts missing
-    * — the exact failure an unversioned "ok" marker allowed. */
-  private val IndexVersion = "v3"
+  /** Artifact-layout version, published as `index`'s `layout` prop.
+    * Bumped whenever build() gains a new artifact (v2 = the r7 respq
+    * codebook/codes) OR changes how an artifact's bytes are produced
+    * (v3 = the r8 training restructure), so an index built by an older
+    * layout reads as absent and rebuilds. v4: the artifacts became
+    * catalog tables. */
+  private val IndexVersion = "v4"
 
   /** Materialize a deterministic intermediate: write parquet, read back.
     * Truncates lineage and shares the computation across consumers via
@@ -154,11 +158,11 @@ object AnnIndex {
   /** Deterministic-init coarse k-means (fingerprint64(vec_id) mod k — no
     * driver-side sampling, no global sort, identical at any corpus size,
     * and replayable by the DuckDB oracle), `iters` Lloyd rounds. The
-    * final (vec_id, cid) assignment materializes to `dest`: it feeds
+    * final (vec_id, cid) assignment goes through `sink`: it feeds
     * several subtrees (final centroids, probes, candidate lists), so the
     * k-means lineage runs once, with no block-manager cache entry. */
   private[operators] def coarseTrainTo(base: DataFrame, k: Int, iters: Int,
-      dest: String): DataFrame = {
+      sink: DataFrame => DataFrame): DataFrame = {
     var assign = base.select(col("vec_id"),
       pmod(graft.functions.HashFunctions.fingerprint64(
         col("vec_id").cast("string")), lit(k.toLong))
@@ -171,7 +175,7 @@ object AnnIndex {
     for (_ <- 1 to iters)
       assign = graft.sources.Checkpoints.barrier(
         coarseReassign(base, coarseCentroids(base, assign)))
-    materialize(assign, dest)
+    sink(assign)
   }
 
   /** Per-query top-nprobe coarse centroids (ties to smaller cid). */
@@ -257,10 +261,10 @@ object AnnIndex {
 
   /** Deterministic-init per-subspace k-means; the final (vec_id, ss, cid)
     * CODES — the 8-byte-per-vector artifact, no subvector floats —
-    * materialize to `dest` (they feed both the final codebook and the
+    * go through `sink` (they feed both the final codebook and the
     * ADC join). */
   private[operators] def pqTrainCodesTo(subs0: DataFrame, sub: Int, k: Int,
-      iters: Int, dest: String): DataFrame = {
+      iters: Int, sink: DataFrame => DataFrame): DataFrame = {
     // the subvector lineage (normalize + slice, or the residual
     // centroid-subtract join) feeds the init pass and every Lloyd
     // round's encode — run it once
@@ -277,7 +281,7 @@ object AnnIndex {
     for (_ <- 1 to iters)
       assign = graft.sources.Checkpoints.barrier(
         pqEncode(subs, pqCodebookOf(assign, sub)))
-    materialize(assign.select(col("vec_id"), col("ss"), col("cid")), dest)
+    sink(assign.select(col("vec_id"), col("ss"), col("cid")))
   }
 
   /** The query-side ADC distance table (q_id, ss, cid, dd) — m×k doubles
@@ -350,11 +354,13 @@ object AnnIndex {
   }
 
   /** Offline index build: train both quantizers over the corpus at `dir`
-    * and persist the artifacts — direct-encoding PQ (codebook + codes)
+    * and commit the artifacts — direct-encoding PQ (codebook + codes)
     * AND residual-encoding PQ (respq_codebook + respq_codes) share the
-    * one coarse training. Forced — always retrains. */
-  def build(s: SparkSession, dir: String): Unit = {
-    java.nio.file.Files.deleteIfExists(marker(dir))
+    * one coarse training — then publish them in one `index` commit.
+    * Forced — always retrains. Readers of the previous index keep its
+    * versions until the next build. */
+  def build(s: SparkSession, dir: String): Unit = withBuildLock(dir) {
+    val cat = builtCatalog(s, dir)
     val base = Tables.table(s, dir, "embeddings")
     // r16 (guide §2.6 overlap independent jobs): the coarse k-means and
     // the DIRECT-encoding PQ training share no state, yet ran strictly
@@ -366,15 +372,13 @@ object AnnIndex {
     // called them sequentially). The residual training stays after the
     // join point — it consumes the coarse assignment. Results are
     // unchanged: the chains share no mutable state and each artifact
-    // path is written by exactly one thread.
+    // table is written by exactly one thread.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val coarseF = Future {
-      val assign = coarseTrainTo(base, K, ITERS, assignPath(dir))
-      val cents = materialize(coarseCentroids(base, assign),
-        centroidsPath(dir))
-      (assign, cents)
+      val assign = coarseTrainTo(base, K, ITERS, replace(cat, "coarse_assign"))
+      (assign, replace(cat, "coarse_centroids")(coarseCentroids(base, assign)))
     }
     // the subvector tables feed every training pass (init, each Lloyd
     // round's encode, the final codebook): barrier them once instead of
@@ -383,58 +387,118 @@ object AnnIndex {
     // materialization; the serving read paths never see these.
     val pqF = Future {
       val subs = graft.sources.Checkpoints.barrier(pqSubs(base, M, SUB))
-      trainPq(subs, codesPath(dir), codebookPath(dir))
+      trainPq(subs, replace(cat, "pq_codes"), replace(cat, "pq_codebook"))
     }
     val (assign, cents) = Await.result(coarseF, Duration.Inf)
     Await.result(pqF, Duration.Inf)
     val rsubs = graft.sources.Checkpoints.barrier(
       residualSubs(base, assign, cents, M, SUB))
-    trainPq(rsubs, resCodesPath(dir), resCodebookPath(dir))
-    java.nio.file.Files.writeString(marker(dir), s"$IndexVersion\n")
+    trainPq(rsubs, replace(cat, "respq_codes"), replace(cat, "respq_codebook"))
+    publishIndex(cat, builtTables)
+    retain(cat, builtTables)
   }
 
-  /** One PQ training for the offline build: iterate on `subs`, persist
+  /** One PQ training for the offline build: iterate on `subs`, commit
     * codes (ids only) and the codebook. The codebook aggregates the
     * final iteration's in-flight (svec, cid) state directly — the same
     * rows a codes⋈subs re-join would produce, minus the join. */
-  private def trainPq(subs: DataFrame, codesDest: String,
-      bookDest: String): Unit = {
+  private def trainPq(subs: DataFrame, codes: DataFrame => DataFrame,
+      book: DataFrame => DataFrame): Unit = {
     var assign = subs.withColumn("cid",
       pmod(graft.functions.HashFunctions.fingerprint64(
         col("vec_id").cast("string")), lit(KPQ.toLong)).cast("int"))
     for (_ <- 1 to ITERS)
       assign = graft.sources.Checkpoints.barrier(
         pqEncode(subs, pqCodebookOf(assign, SUB)))
-    materialize(assign.select(col("vec_id"), col("ss"), col("cid")),
-      codesDest)
-    materialize(pqCodebookOf(assign, SUB), bookDest)
+    codes(assign.select(col("vec_id"), col("ss"), col("cid")))
+    book(pqCodebookOf(assign, SUB))
   }
 
-  /** Build only if a CURRENT-layout index for `dir` doesn't exist yet:
-    * the marker must carry IndexVersion and every versioned artifact
-    * path must be present.
-    *
+  // ---- publishing through the catalog ---------------------------------
+
+  /** True when `name` has a published version. A directory in the
+    * layout before the index became catalog tables is refused (the
+    * catalog's pre-manifest check), never read. */
+  private def exists(cat: Catalog, name: String): Boolean =
+    try { cat.currentVersion(name); true }
+    catch { case _: IllegalArgumentException => false }
+
+  /** Commit `df` as the whole of table `name` and read that version back
+    * — the sink the trainings write their final state through. A `seg`
+    * column is the partition column. */
+  private def replace(cat: Catalog, name: String)(df: DataFrame): DataFrame = {
+    if (exists(cat, name)) cat.update(name, _ => df)
+    else if (df.columns.contains("seg"))
+      cat.createTablePartitionedAs(name, df, "seg")
+    else cat.createTableAs(name, df)
+    cat.table(name)
+  }
+
+  /** The one writer of `index`: a props-only commit naming the current
+    * version of each of `tables` (plus any `carried` artifact versions),
+    * the layout, and whether this is the canonical maintained state —
+    * false unless the caller says so, so no mutator can leave a stale
+    * claim behind. Nothing reads an artifact version before this commit
+    * names it: a writer that dies earlier leaves the old index whole. */
+  private def publishIndex(cat: Catalog, tables: Seq[String],
+      carried: Map[String, String] = Map.empty,
+      canonical: Boolean = false): Unit = {
+    if (!exists(cat, "index"))
+      cat.createTable("index", new org.apache.spark.sql.types.StructType())
+    cat.commitProps("index", carried ++
+      tables.map(t => t -> cat.currentVersion(t).toString) ++
+      Map("layout" -> IndexVersion, "canonical" -> canonical.toString))
+  }
+
+  /** `index`'s current props (empty before the first publish). A
+    * retention vacuum may delete the version just listed; the next
+    * listing names a newer one. */
+  private def pin(cat: Catalog): Map[String, String] =
+    if (!exists(cat, "index")) Map.empty
+    else try cat.props("index", cat.currentVersion("index"))
+    catch { case _: java.nio.file.NoSuchFileException => pin(cat) }
+
+  /** Artifact `name` at the version the pinned props `p` name. */
+  private def at(cat: Catalog, p: Map[String, String], name: String) =
+    cat.tableAsOf(name, p.getOrElse(name, throw new IllegalArgumentException(
+      s"no published index names $name")).toInt)
+
+  /** Retention: vacuum each of `tables` down to the versions that
+    * `index`'s retained versions name, then `index` down to its current
+    * version, so the next call keeps what is named from this publish
+    * on. A reader that pinned any index version since the previous call
+    * keeps its files until the next one. */
+  private def retain(cat: Catalog, tables: Seq[String]): Unit = {
+    val named = (cat.versions("index") :+ cat.currentVersion("index"))
+      .map(cat.props("index", _))
+    for (t <- tables if exists(cat, t))
+      cat.vacuumVersions(t, named.flatMap(_.get(t)).map(_.toInt).minOption
+        .fold(0)(oldest => cat.versions(t).count(_ >= oldest)))
+    cat.vacuumVersions("index", 0)
+  }
+
+  /** The published built index: each artifact at the version `index`
+    * names, pinned once for the whole read. */
+  private[operators] def built(s: SparkSession,
+      dir: String): String => DataFrame = {
+    val cat = builtCatalog(s, dir)
+    val p = pin(cat)
+    at(cat, p, _)
+  }
+
+  private def withBuildLock[T](dir: String)(f: => T): T =
+    graft.sources.TableLocks.withLock(indexDir(dir), "ann_build",
+      timeoutMs = 30 * 60 * 1000L)(f)
+
+  /** Build only if no CURRENT-layout index for `dir` is published yet.
     * The check-and-build runs under the same kernel-file-lock writer
     * lock DML uses (keyed on the index dir), so two sessions racing a
     * cold index serialize — one builds, the other re-checks and finds
-    * it fresh — instead of both writing the same artifact dirs
-    * concurrently. The marker read is fallible on purpose: a concurrent
-    * rebuild in an UNLOCKED world could delete the marker between the
-    * exists() and readString(); under the lock that can't happen, but
-    * treating any read failure as "not fresh" keeps the check correct
-    * even against out-of-band deletion (an operator rm -rf mid-check). */
-  def ensureBuilt(s: SparkSession, dir: String): Unit =
-    graft.sources.TableLocks.withLock(indexDir(dir), "ann_build",
-        timeoutMs = 30 * 60 * 1000L) {
-      val fresh =
-        (try java.nio.file.Files.exists(marker(dir)) &&
-           java.nio.file.Files.readString(marker(dir)).trim == IndexVersion
-         catch { case _: Exception => false }) &&
-          Seq(centroidsPath(dir), assignPath(dir), codebookPath(dir),
-            codesPath(dir), resCodebookPath(dir), resCodesPath(dir))
-            .forall(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
-      if (!fresh) build(s, dir)
-    }
+    * it published. */
+  def ensureBuilt(s: SparkSession, dir: String): Unit = withBuildLock(dir) {
+    if (!pin(builtCatalog(s, dir)).get("layout").contains(IndexVersion))
+      build(s, dir)
+  }
 
   /** THE probe-pruning × ADC read plan, shared by every IVF+PQ read
     * path (prebuilt index, merged/deleted composed chains, segmented
@@ -463,12 +527,11 @@ object AnnIndex {
   /** The read-side IVF+PQ query over prebuilt artifacts: probe pruning ×
     * ADC codes, no training subtree anywhere in the plan. */
   def ivfPqQuery(s: SparkSession, dir: String, nprobe: Int = NPROBE,
-      topk: Int = 3, nq: Int = 10): DataFrame =
-    ivfPqPlan(Tables.table(s, dir, "embeddings"),
-      s.read.parquet(centroidsPath(dir)),
-      s.read.parquet(assignPath(dir)),
-      s.read.parquet(codebookPath(dir)),
-      s.read.parquet(codesPath(dir)), nprobe, topk, nq)
+      topk: Int = 3, nq: Int = 10): DataFrame = {
+    val a = built(s, dir)
+    ivfPqPlan(Tables.table(s, dir, "embeddings"), a("coarse_centroids"),
+      a("coarse_assign"), a("pq_codebook"), a("pq_codes"), nprobe, topk, nq)
+  }
 
   /** Per-probe residual ADC distance table (q_id, pcid, ss, cid, dd) —
     * nprobe × m × k doubles per query, all broadcast-sized. Shared by
@@ -499,10 +562,11 @@ object AnnIndex {
   def ivfPqResidualQuery(s: SparkSession, dir: String,
       nprobe: Int = NPROBE, topk: Int = 3, nq: Int = 10): DataFrame = {
     val base = Tables.table(s, dir, "embeddings")
-    val cents = s.read.parquet(centroidsPath(dir))
-    val assign = s.read.parquet(assignPath(dir))
-    val book = s.read.parquet(resCodebookPath(dir))
-    val codes = s.read.parquet(resCodesPath(dir))
+    val a = built(s, dir)
+    val cents = a("coarse_centroids")
+    val assign = a("coarse_assign")
+    val book = a("respq_codebook")
+    val codes = a("respq_codes")
     val queries = base.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val probes = coarseProbes(queries, cents, nprobe)
@@ -527,10 +591,11 @@ object AnnIndex {
   def ivfPqQueryFiltered(s: SparkSession, dir: String, nprobe: Int = NPROBE,
       topk: Int = 3, nq: Int = 10): DataFrame = {
     val base = Tables.table(s, dir, "embeddings")
-    val cents = s.read.parquet(centroidsPath(dir))
-    val assign = s.read.parquet(assignPath(dir))
-    val codebook = s.read.parquet(codebookPath(dir))
-    val codes = s.read.parquet(codesPath(dir))
+    val a = built(s, dir)
+    val cents = a("coarse_centroids")
+    val assign = a("coarse_assign")
+    val codebook = a("pq_codebook")
+    val codes = a("pq_codes")
     val queries = base.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val probes = coarseProbes(queries, cents, nprobe)
@@ -560,8 +625,9 @@ object AnnIndex {
   def ivfExactTopK(s: SparkSession, dir: String, nprobe: Int = NPROBE,
       topk: Int = 3, nq: Int = 10): DataFrame = {
     val base = Tables.table(s, dir, "embeddings")
-    val cents = s.read.parquet(centroidsPath(dir))
-    val assign = s.read.parquet(assignPath(dir))
+    val a = built(s, dir)
+    val cents = a("coarse_centroids")
+    val assign = a("coarse_assign")
     val queries = base.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val probes = coarseProbes(queries, cents, nprobe)
@@ -615,265 +681,159 @@ object AnnIndex {
   // minus tombstones — the Lucene/FAISS-IndexShards layout every serving
   // ANN system converges on, because at 100 TB appends must be O(batch)
   // file writes and deletes O(tombstones) metadata, never a list
-  // rewrite. Three disciplines make it safe under concurrency, the same
-  // ones Catalog DML uses:
+  // rewrite. The artifacts are catalog tables under `<indexDir>/maint`:
+  // centroids, codebook, assign and codes (partitioned by `seg`) and
+  // tombstones. Three disciplines make it safe under concurrency, the
+  // same ones Catalog DML uses:
   //
-  //  * MANIFEST commit point — which segment/tombstone dirs are live is
-  //    published by atomically renaming a manifest file; readers resolve
-  //    the manifest once per query, so they can never see a
+  //  * one commit point — a mutator commits the artifact tables it
+  //    changes, then one props-only `index` commit names their versions;
+  //    readers pin `index` once per query, so they can never see a
   //    half-published append or a mid-compaction state.
   //  * writer lock — every mutator runs under the same TableLocks
-  //    kernel file lock DML uses, so two appenders' manifest
-  //    read-modify-writes serialize across JVMs.
-  //  * one-generation retention — compaction writes the new base under a
-  //    fresh generation name, publishes, and only deletes dirs that a
-  //    PREVIOUS compaction superseded; a reader that resolved the old
-  //    manifest keeps valid files until the next compaction cycle
-  //    (production sets the retention window by time instead).
-  //
-  // Re-publishing the SAME logical segment (or a new tombstone set)
-  // within one generation writes a FRESH physical dir with a bumped
-  // suffix and moves the old one to the retention list — live dirs are
-  // never overwritten in place, so a racing reader can never see
-  // partial parquet. Repeated deletes between compactions are the
-  // normal case, not an edge case.
+  //    kernel file lock DML uses, so two appenders' read-modify-writes
+  //    of `index` serialize across JVMs.
+  //  * one-generation retention — compaction vacuums each artifact down
+  //    to the versions named by the `index` versions published since the
+  //    previous compaction; a reader that pinned any of them keeps valid
+  //    files until the next compaction cycle (production sets the
+  //    retention window by time instead).
 
   private def maintRoot(dir: String): String = s"${indexDir(dir)}/maint"
-  private def maintPath(dir: String, part: String): String =
-    s"${maintRoot(dir)}/$part"
+  private def maintCatalog(s: SparkSession, dir: String) =
+    new Catalog(s, maintRoot(dir))
+  private val maintTables =
+    Seq("centroids", "codebook", "assign", "codes", "tombstones")
   private def withMaintLock[T](dir: String)(f: => T): T =
     graft.sources.TableLocks.withLock(maintRoot(dir), "ann_maint")(f)
 
-  /** The manifest: epoch (bumped per destructive rebuild) + generation
-    * counter (bumped per compaction), the live centroid/codebook dirs,
-    * live (logical → physical) segment dirs, the live tombstone dir,
-    * and superseded dirs retained until the next compaction. */
-  private case class MaintManifest(gen: Int, epoch: Int,
-      cents: String, book: String, segs: Seq[(String, String)],
-      tomb: Option[String], prev: Seq[String])
-
-  private def manifestFile(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(maintPath(dir, "MANIFEST"))
-
-  private def readManifest(dir: String): MaintManifest = {
-    val lines = java.nio.file.Files
-      .readAllLines(manifestFile(dir)).toArray(Array.empty[String])
-    def one(tag: String, dflt: String): String =
-      lines.collectFirst { case l if l.startsWith(s"$tag:") =>
-        l.drop(tag.length + 1) }.getOrElse(dflt)
-    MaintManifest(
-      gen = one("gen", "0").toInt,
-      epoch = one("epoch", "0").toInt,
-      cents = one("cents", "cents"),
-      book = one("book", "book"),
-      segs = lines.toSeq.filter(_.startsWith("seg:")).map { l =>
-        val Array(logical, physical) = l.drop(4).split(":", 2)
-        (logical, physical)
-      },
-      tomb = lines.collectFirst { case l if l.startsWith("tomb:") =>
-        l.drop(5) },
-      prev = lines.toSeq.filter(_.startsWith("prev:")).map(_.drop(5)))
-  }
-
-  /** Atomic publication: write aside, ATOMIC_MOVE over MANIFEST. Single
-    * writer (the maint lock is held), so rename-replace is safe — this
-    * is publication, not a claim. */
-  private def publishManifest(dir: String, m: MaintManifest): Unit = {
-    val body = (Seq(s"gen:${m.gen}", s"epoch:${m.epoch}",
-      s"cents:${m.cents}", s"book:${m.book}") ++
-      m.segs.map { case (l, p) => s"seg:$l:$p" } ++
-      m.tomb.map(t => s"tomb:$t").toSeq ++
-      m.prev.map(p => s"prev:$p")).mkString("", "\n", "\n")
-    val tmp = java.nio.file.Paths.get(
-      maintPath(dir, s"MANIFEST.tmp.${ProcessHandle.current().pid()}"))
-    java.nio.file.Files.createDirectories(tmp.getParent)
-    java.nio.file.Files.writeString(tmp, body)
-    java.nio.file.Files.move(tmp, manifestFile(dir),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
   /** Train the BASE segment on the non-held-out corpus (vec_id % 8 ≠ 0 —
     * the same split as the composed merge/delete chains so the DuckDB
-    * oracle replays it), persist centroids/codebook plus the base
-    * assignment/codes under a FRESH epoch prefix, publish, then wipe
-    * the previous epoch. Write-aside-then-publish like every other
-    * mutator: a crash mid-rebuild leaves the old manifest pointing at
-    * intact old-epoch dirs. The post-publish wipe is what makes a
-    * rebuild destructive (DROP + CREATE): racing readers of the OLD
-    * index lose their files — by contract, not by accident. */
+    * oracle replays it): commit centroids/codebook and the base
+    * assignment/codes as segment seg0, publish, then vacuum every table
+    * to its current version. A crash before the publish leaves the old
+    * index whole. The vacuum is what makes a rebuild destructive (DROP +
+    * CREATE): racing readers of the OLD index lose their files — by
+    * contract, not by accident. */
   def buildBaseSegment(s: SparkSession, dir: String): Unit =
     withMaintLock(dir) {
-      val epoch =
-        if (java.nio.file.Files.exists(manifestFile(dir)))
-          readManifest(dir).epoch + 1
-        else 0
-      val basePhys = s"e${epoch}_base_g0"
-      val centsPhys = s"e${epoch}_cents"
-      val bookPhys = s"e${epoch}_book"
+      val cat = maintCatalog(s, dir)
       val base = Tables.table(s, dir, "embeddings")
         .filter(pmod(col("vec_id"), lit(8)) =!= 0)
-      val assign = coarseTrainTo(base, K, ITERS,
-        maintPath(dir, s"$basePhys/assign"))
-      materialize(coarseCentroids(base, assign), maintPath(dir, centsPhys))
+      def seg0(name: String)(df: DataFrame) =
+        replace(cat, name)(df.withColumn("seg", lit("seg0"))).drop("seg")
+      val assign = coarseTrainTo(base, K, ITERS, seg0("assign"))
+      replace(cat, "centroids")(coarseCentroids(base, assign))
       val subs = graft.sources.Checkpoints.barrier(pqSubs(base, M, SUB))
-      trainPq(subs, maintPath(dir, s"$basePhys/codes"),
-        maintPath(dir, bookPhys))
-      publishManifest(dir, MaintManifest(0, epoch, centsPhys, bookPhys,
-        Seq(("seg0", basePhys)), None, Seq.empty))
-      // drop everything the fresh manifest doesn't reference
-      val keep = Set(basePhys, centsPhys, bookPhys, "MANIFEST", "_locks")
-      import scala.jdk.CollectionConverters._
-      scala.util.Using.resource(java.nio.file.Files.list(
-        java.nio.file.Paths.get(maintRoot(dir)))) { st =>
-        st.iterator().asScala.toSeq
-          .filterNot(p => keep(p.getFileName.toString))
-      }.foreach(p =>
-        graft.sources.FsUtil.deleteRecursively(p, swallowErrors = true))
+      trainPq(subs, seg0("codes"), replace(cat, "codebook"))
+      publishIndex(cat, Seq("centroids", "codebook", "assign", "codes"))
+      cat.vacuumVersions("index", 0)
+      retain(cat, maintTables)
     }
 
-  /** APPEND: frozen-encode `batch` against the persisted base
-    * centroids/codebook, write it as the named delta segment, and
-    * publish — a pure per-row map over broadcast artifacts plus an
-    * O(batch) file write and a manifest rename. Re-running with the same
-    * name republishes that delta (never double-appends); several ingest
-    * batches coexist as seg1/seg2/… until `compact` folds them. */
-  /** Bump-suffixed physical name: `<stem>_0` for the first publication,
-    * `_<k+1>` when replacing `cur` — never the same dir twice. */
-  private def freshPhys(stem: String, cur: Option[String]): String = {
-    val k = cur.map(p => p.substring(p.lastIndexOf('_') + 1).toInt + 1)
-      .getOrElse(0)
-    s"${stem}_$k"
-  }
-
+  /** APPEND: frozen-encode `batch` against the published base
+    * centroids/codebook into the named delta segment's partition of the
+    * assign and codes tables, and publish — a pure per-row map over
+    * broadcast artifacts plus an O(batch) file write. Re-running with the
+    * same name republishes that delta (its partition is dropped first,
+    * never double-appended); several ingest batches coexist as
+    * seg1/seg2/… until `compact` folds them. */
   def appendSegment(s: SparkSession, dir: String, batch: DataFrame,
       seg: String = "seg1"): Unit = withMaintLock(dir) {
     require(seg.matches("seg[1-9][0-9]*"), s"bad segment name: $seg")
-    java.nio.file.Files.deleteIfExists(maintStateMarker(dir))
-    val m = readManifest(dir)
-    val old = m.segs.find(_._1 == seg).map(_._2)
-    val phys = freshPhys(s"${seg}_g${m.gen}", old)
-    val cents = s.read.parquet(maintPath(dir, m.cents))
-    val book = s.read.parquet(maintPath(dir, m.book))
-    coarseReassign(batch, cents)
-      .write.mode("overwrite").parquet(maintPath(dir, s"$phys/assign"))
-    pqEncode(pqSubs(batch, M, SUB), book)
-      .select(col("vec_id"), col("ss"), col("cid"))
-      .write.mode("overwrite").parquet(maintPath(dir, s"$phys/codes"))
-    publishManifest(dir, m.copy(
-      segs = m.segs.filterNot(_._1 == seg) :+ (seg, phys),
-      prev = m.prev ++ old.toSeq))
+    val cat = maintCatalog(s, dir)
+    val p = pin(cat)
+    def put(name: String, df: DataFrame): Unit = {
+      cat.dropPartition(name, s"seg=$seg")
+      cat.insertIntoSelect(name, df.withColumn("seg", lit(seg)))
+    }
+    put("assign", coarseReassign(batch, at(cat, p, "centroids")))
+    put("codes", pqEncode(pqSubs(batch, M, SUB), at(cat, p, "codebook"))
+      .select(col("vec_id"), col("ss"), col("cid")))
+    publishIndex(cat, Seq("assign", "codes"), p)
   }
 
-  /** DELETE: persist the tombstone id set under a generation-stamped dir
-    * and publish it as THE live tombstone state (not an append log —
-    * the newest set wins, mirroring the composed x_ann_index_delete).
-    * O(tombstones) metadata; no list is touched until `compact`. */
+  /** DELETE: commit the tombstone id set and publish it as THE live
+    * tombstone state (not an append log — the newest set wins, mirroring
+    * the composed x_ann_index_delete). O(tombstones) metadata; no list is
+    * touched until `compact`. */
   def writeTombstones(s: SparkSession, dir: String, ids: DataFrame): Unit =
     withMaintLock(dir) {
-      java.nio.file.Files.deleteIfExists(maintStateMarker(dir))
-      val m = readManifest(dir)
-      val phys = freshPhys(s"tomb_g${m.gen}", m.tomb)
-      ids.select(col("vec_id"))
-        .write.mode("overwrite").parquet(maintPath(dir, phys))
-      publishManifest(dir, m.copy(tomb = Some(phys),
-        prev = m.prev ++ m.tomb.toSeq))
+      val cat = maintCatalog(s, dir)
+      val p = pin(cat)
+      replace(cat, "tombstones")(ids.select(col("vec_id")))
+      publishIndex(cat, Seq("tombstones"), p)
     }
 
-  /** Live posting/code lists as of one manifest resolution: the union of
-    * live segments minus tombstones. The tombstone prune anti-joins the
-    * ids-only ASSIGNMENT union (broadcast — tombstone sets are tiny next
-    * to the corpus), so a deleted id never becomes a candidate; its dead
-    * code rows cost nothing until compaction drops them, exactly like
-    * any tombstone-based store. */
-  private def liveLists(s: SparkSession, dir: String,
-      m: MaintManifest): (DataFrame, DataFrame) = {
-    var assign = m.segs
-      .map { case (_, p) => s.read.parquet(maintPath(dir, s"$p/assign")) }
-      .reduce(_ unionByName _)
-    val codes = m.segs
-      .map { case (_, p) => s.read.parquet(maintPath(dir, s"$p/codes")) }
-      .reduce(_ unionByName _)
-    for (t <- m.tomb) {
-      val tomb = s.read.parquet(maintPath(dir, t))
-      assign = assign.join(broadcast(tomb), Seq("vec_id"), "left_anti")
-    }
-    (assign, codes)
+  /** Live posting/code lists of one pinned index: every segment's rows,
+    * minus tombstones when the index names a tombstone version. The
+    * tombstone prune anti-joins the ids-only ASSIGNMENT (broadcast —
+    * tombstone sets are tiny next to the corpus), so a deleted id never
+    * becomes a candidate; its dead code rows cost nothing until
+    * compaction drops them, exactly like any tombstone-based store. */
+  private def liveLists(cat: Catalog,
+      p: Map[String, String]): (DataFrame, DataFrame) = {
+    val assign = at(cat, p, "assign").drop("seg")
+    val live = p.get("tombstones").fold(assign)(_ =>
+      assign.join(broadcast(at(cat, p, "tombstones")), Seq("vec_id"),
+        "left_anti"))
+    (live, at(cat, p, "codes").drop("seg"))
   }
 
-  /** The read-side query over the maintained index: resolve the manifest
-    * once, then the shared probe-pruning × ADC plan over the live lists
-    * — artifact reads only, no training subtree, ivfPqQuery's shape
-    * plus the tombstone anti-join. */
+  /** The read-side query over the maintained index: pin `index` once,
+    * then the shared probe-pruning × ADC plan over the live lists —
+    * artifact reads only, no training subtree, ivfPqQuery's shape plus
+    * the tombstone anti-join. */
   def maintQuery(s: SparkSession, dir: String, nprobe: Int = NPROBE,
       topk: Int = 3, nq: Int = 10): DataFrame = {
-    val m = readManifest(dir)
-    val (assign, codes) = liveLists(s, dir, m)
-    ivfPqPlan(Tables.table(s, dir, "embeddings"),
-      s.read.parquet(maintPath(dir, m.cents)),
-      assign,
-      s.read.parquet(maintPath(dir, m.book)),
-      codes, nprobe, topk, nq)
+    val cat = maintCatalog(s, dir)
+    val p = pin(cat)
+    val (assign, codes) = liveLists(cat, p)
+    ivfPqPlan(Tables.table(s, dir, "embeddings"), at(cat, p, "centroids"),
+      assign, at(cat, p, "codebook"), codes, nprobe, topk, nq)
   }
 
-  /** COMPACT: fold all delta segments and tombstones into a new base
-    * under the NEXT generation name, publish, and delete only retained
-    * dirs from OLDER generations — everything written during the
-    * current generation (including dirs a republish superseded moments
-    * ago) survives one more full cycle, so a reader that resolved ANY
-    * manifest state of this generation keeps valid files throughout the
-    * compaction that ends it. Queries before and after must return
-    * identical rows — the invariant the VectorTextSpec maintenance test
-    * pins. */
+  /** COMPACT: fold all delta segments and tombstones into a new seg0,
+    * publish an index that names no tombstones, and vacuum each artifact
+    * down to what the index versions since the previous compaction name
+    * — everything published during this generation (including versions
+    * a republish superseded moments ago) survives one more full cycle,
+    * so a reader that pinned ANY index of this generation keeps valid
+    * files throughout the compaction that ends it. Queries before and
+    * after must return identical rows — the invariant the VectorTextSpec
+    * maintenance test pins. */
   def compact(s: SparkSession, dir: String): Unit = withMaintLock(dir) {
-    java.nio.file.Files.deleteIfExists(maintStateMarker(dir))
-    val m = readManifest(dir)
-    val (assign, codes) = liveLists(s, dir, m)
+    val cat = maintCatalog(s, dir)
+    val p = pin(cat)
+    val (assign, codes) = liveLists(cat, p)
     // prune dead code rows against the broadcast TOMBSTONE set (the
     // small side — anti-joining against the full assignment would
     // broadcast the corpus id set)
-    val liveCodes = m.tomb match {
-      case Some(t) => codes.join(
-        broadcast(s.read.parquet(maintPath(dir, t))),
-        Seq("vec_id"), "left_anti")
-      case None => codes
-    }
-    val newGen = m.gen + 1
-    val newBase = s"e${m.epoch}_base_g$newGen"
-    assign.write.mode("overwrite")
-      .parquet(maintPath(dir, s"$newBase/assign"))
-    liveCodes.write.mode("overwrite")
-      .parquet(maintPath(dir, s"$newBase/codes"))
-    val genOf = (p: String) =>
-      p.split("_g")(1).split("_")(0).toInt
-    val (dropNow, carry) = m.prev.partition(p => genOf(p) < m.gen)
-    publishManifest(dir, m.copy(gen = newGen,
-      segs = Seq(("seg0", newBase)), tomb = None,
-      prev = carry ++ m.segs.map(_._2) ++ m.tomb.toSeq))
-    val root = java.nio.file.Paths.get(maintRoot(dir))
-    dropNow.foreach(p => graft.sources.FsUtil.deleteRecursively(
-      root.resolve(p), swallowErrors = true))
+    val liveCodes = p.get("tombstones").fold(codes)(_ =>
+      codes.join(broadcast(at(cat, p, "tombstones")), Seq("vec_id"),
+        "left_anti"))
+    replace(cat, "assign")(assign.withColumn("seg", lit("seg0")))
+    replace(cat, "codes")(liveCodes.withColumn("seg", lit("seg0")))
+    // the folded tombstone version stops being current, so the next
+    // compaction's vacuum can age it out
+    if (p.contains("tombstones")) cat.truncate("tombstones")
+    publishIndex(cat, Seq("assign", "codes"), p - "tombstones")
+    retain(cat, maintTables)
   }
 
   // ---- canonical maintained state -----------------------------------
   // The maintenance row and the recall gate share one lifecycle schedule
   // (base on vec_id%8≠0, delta = the held-out eighth, tombstones
   // vec_id%5=3). establishMaintained ALWAYS rebuilds it — that is what
-  // x_ann_index_maintenance times — and stamps a marker; ensureMaintained
-  // skips when the marker says the canonical state is already live, so
-  // the recall gate doesn't re-pay the base training the maintenance row
-  // just performed in the same sweep (standalone it builds). Every OTHER
-  // mutator invalidates the marker (buildBaseSegment's post-publish wipe
-  // removes it as an unreferenced file; append/tombstone/compact delete
-  // it explicitly), so the marker can never claim canonical over a
-  // diverged manifest.
-
-  private def maintStateMarker(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(maintPath(dir, "_canonical_state"))
-  private val MaintStateVersion = s"$IndexVersion-canon1"
+  // x_ann_index_maintenance times — and publishes it with `index`'s
+  // `canonical` prop true; ensureMaintained skips when the published
+  // index says so, so the recall gate doesn't re-pay the base training
+  // the maintenance row just performed in the same sweep (standalone it
+  // builds). Every other publish sets the prop false (`publishIndex`),
+  // so it can never claim canonical over a diverged index.
 
   /** Rebuild the canonical maintained state from scratch (build → append
-    * → tombstones) and stamp it. */
+    * → tombstones) and publish it as canonical. */
   def establishMaintained(s: SparkSession, dir: String): Unit =
     withMaintLock(dir) {
       val all = Tables.table(s, dir, "embeddings")
@@ -881,21 +841,18 @@ object AnnIndex {
       appendSegment(s, dir, all.filter(pmod(col("vec_id"), lit(8)) === 0))
       writeTombstones(s, dir,
         all.filter(pmod(col("vec_id"), lit(5)) === 3))
-      java.nio.file.Files.writeString(maintStateMarker(dir),
-        s"$MaintStateVersion\n")
+      val cat = maintCatalog(s, dir)
+      publishIndex(cat, Nil, pin(cat), canonical = true)
     }
 
-  /** Establish the canonical maintained state only when it isn't already
-    * the live one (same idempotence contract as ensureBuilt, same
-    * fallible-read rule: any marker read failure means rebuild). */
+  /** Establish the canonical maintained state only when the published
+    * index isn't it already (same idempotence contract as ensureBuilt). */
   def ensureMaintained(s: SparkSession, dir: String): Unit =
     withMaintLock(dir) {
-      val fresh =
-        try java.nio.file.Files.readString(maintStateMarker(dir)).trim ==
-            MaintStateVersion &&
-          java.nio.file.Files.exists(manifestFile(dir))
-        catch { case _: Exception => false }
-      if (!fresh) establishMaintained(s, dir)
+      val p = pin(maintCatalog(s, dir))
+      if (!(p.get("layout").contains(IndexVersion) &&
+          p.get("canonical").contains("true")))
+        establishMaintained(s, dir)
     }
 
   /** Artifact summary for the build gate: per coarse cluster and per PQ
@@ -905,14 +862,15 @@ object AnnIndex {
     val normR4 = (c: String) => round(expr(
       s"aggregate(transform($c, x -> double(x) * double(x)), " +
         "cast(0 as double), (acc, v) -> acc + v)"), 4)
-    val coarse = s.read.parquet(assignPath(dir))
+    val a = built(s, dir)
+    val coarse = a("coarse_assign")
       .groupBy(col("cid")).agg(count(lit(1)).as("n"))
-      .join(s.read.parquet(centroidsPath(dir)), Seq("cid"))
+      .join(a("coarse_centroids"), Seq("cid"))
       .select(lit("coarse").as("component"), col("cid").as("k1"),
         lit(-1).as("k2"), col("n"), normR4("centroid").as("norm_r4"))
-    val pq = s.read.parquet(codesPath(dir))
+    val pq = a("pq_codes")
       .groupBy(col("ss"), col("cid")).agg(count(lit(1)).as("n"))
-      .join(s.read.parquet(codebookPath(dir)), Seq("ss", "cid"))
+      .join(a("pq_codebook"), Seq("ss", "cid"))
       .select(lit("pq").as("component"), col("ss").as("k1"),
         col("cid").as("k2"), col("n"), normR4("cen").as("norm_r4"))
     coarse.unionAll(pq)

@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * test: runs `rounds` of append → tombstone → (every other round)
   * compact against the segmented index under `dir`, each mutation under
   * the maint writer lock, while the PARENT process queries `maintQuery`
-  * in a loop. The mutation sequence is a deterministic function of
-  * (corpus, round) on purpose — the parent replays it serially against
-  * a second copy of the corpus and asserts the concurrent end state
-  * equals the serial one, proving no manifest read-modify-write was
-  * lost across processes (the same guarantee the Catalog DML two-JVM
-  * test pins for table swaps).
+  * in a loop. Each mutation commits catalog tables and then one `index`
+  * commit, the index's only publish point. The mutation sequence is a
+  * deterministic function of (corpus, round) on purpose — the parent
+  * replays it serially against a second copy of the corpus and asserts
+  * the concurrent end state equals the serial one, proving no `index`
+  * read-modify-write was lost across processes (the same guarantee the
+  * Catalog DML two-JVM test pins for table commits).
   *
   * Flags for the parent: `<dir>/_mutating` exists while a mutation is
   * in flight (so the parent can count reads that truly overlapped a

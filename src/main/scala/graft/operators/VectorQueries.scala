@@ -171,7 +171,8 @@ ${LshOracleSql.cosineExpr} AS cos
   // ---- IVF / PQ / IVF+PQ — quantizer machinery lives in AnnIndex -------
   import AnnIndex.{coarseCentroids, coarseProbes, coarseReassign,
     coarseTrainTo, pqEncode, pqSubs, normalizedEmb,
-    pqCodebookOf, pqTrainCodesTo, pqDtab, adcTopK, inlineScratch, l2sqExpr}
+    pqCodebookOf, pqTrainCodesTo, pqDtab, adcTopK, inlineScratch, l2sqExpr,
+    materialize}
 
   /** IVF-style ANN: a coarse k-means quantizer (deterministic hash init +
     * 2 Lloyd iterations, centroids always broadcast — never a shuffle of
@@ -190,7 +191,7 @@ ${LshOracleSql.cosineExpr} AS cos
       val iters = 2
       val base = emb(s, dir)
       val assign = coarseTrainTo(base, k, iters,
-        inlineScratch(dir, "ivf_assign"))
+        materialize(_, inlineScratch(dir, "ivf_assign")))
       val cents = coarseCentroids(base, assign)
       val queries = base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -240,7 +241,7 @@ ${LshOracleSql.cosineExpr} AS cos
       val base = emb(s, dir)
       val subs = pqSubs(base, m, sub)
       val codes = pqTrainCodesTo(subs, sub, k, iters,
-        inlineScratch(dir, "pq_codes"))
+        materialize(_, inlineScratch(dir, "pq_codes")))
       val cents = pqCodebookOf(codes.join(subs, Seq("vec_id", "ss")), sub)
       val dtab = pqDtab(subs.filter(col("vec_id") < nq), cents)
       // PQ alone scans every corpus code per query (compression without
@@ -283,12 +284,13 @@ ${LshOracleSql.cosineExpr} AS cos
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val coarseF = Future {
-        coarseTrainTo(base, k, iters, inlineScratch(dir, "ivfpq_assign"))
+        coarseTrainTo(base, k, iters,
+          materialize(_, inlineScratch(dir, "ivfpq_assign")))
       }
       val subs = pqSubs(base, m, sub)
       val codesF = Future {
         pqTrainCodesTo(subs, sub, kpq, iters,
-          inlineScratch(dir, "ivfpq_codes"))
+          materialize(_, inlineScratch(dir, "ivfpq_codes")))
       }
       val coarse = Await.result(coarseF, Duration.Inf)
       val codes = Await.result(codesF, Duration.Inf)
@@ -362,11 +364,11 @@ ${LshOracleSql.cosineExpr} AS cos
       val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
       val batch = all.filter(pmod(col("vec_id"), lit(8)) === 0)
       val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-        inlineScratch(dir, "ingest_assign"))
+        materialize(_, inlineScratch(dir, "ingest_assign")))
       val centsB = coarseCentroids(base, assignB)
       val subsB = pqSubs(base, 16, 4)
       val codesB = pqTrainCodesTo(subsB, 4, 16, 2,
-        inlineScratch(dir, "ingest_codes"))
+        materialize(_, inlineScratch(dir, "ingest_codes")))
       val bookB = pqCodebookOf(codesB.join(subsB, Seq("vec_id", "ss")), 4)
       AnnIndex.ingestEncode(batch, centsB, bookB)
     },
@@ -388,11 +390,11 @@ ${LshOracleSql.cosineExpr} AS cos
       val all = emb(s, dir)
       val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
       val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-        inlineScratch(dir, "s_ing_assign"))
+        materialize(_, inlineScratch(dir, "s_ing_assign")))
       val centsB = coarseCentroids(base, assignB)
       val subsB = pqSubs(base, 16, 4)
       val codesB = pqTrainCodesTo(subsB, 4, 16, 2,
-        inlineScratch(dir, "s_ing_codes"))
+        materialize(_, inlineScratch(dir, "s_ing_codes")))
       val bookB = pqCodebookOf(codesB.join(subsB, Seq("vec_id", "ss")), 4)
       val tmp = DdlDmlQueries.scratch("stream_ann_ingest")
       // freeze the tiny artifacts (16 centroids, 64 codebook rows) to
@@ -475,11 +477,11 @@ ${LshOracleSql.cosineExpr} AS cos
     val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
     val batch = all.filter(pmod(col("vec_id"), lit(8)) === 0)
     val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-      inlineScratch(dir, s"${tag}_assign"))
+      materialize(_, inlineScratch(dir, s"${tag}_assign")))
     val centsB = coarseCentroids(base, assignB)
     val subsB = pqSubs(base, 16, 4)
     val codesB = pqTrainCodesTo(subsB, 4, 16, 2,
-      inlineScratch(dir, s"${tag}_codes"))
+      materialize(_, inlineScratch(dir, s"${tag}_codes")))
     val bookB = pqCodebookOf(codesB.join(subsB, Seq("vec_id", "ss")), 4)
     // frozen encodes of the batch (no retraining), then the merge:
     // plain unions of the posting/code lists
@@ -650,8 +652,9 @@ ${LshOracleSql.cosineExpr} AS cos
       AnnIndex.ensureBuilt(s, dir)
       val nq = 10; val topk = 3; val maxProbe = 8
       val base = emb(s, dir)
-      val cents = s.read.parquet(AnnIndex.centroidsPath(dir))
-      val assign = s.read.parquet(AnnIndex.assignPath(dir))
+      val built = AnnIndex.built(s, dir)
+      val cents = built("coarse_centroids")
+      val assign = built("coarse_assign")
       val queries = base.filter(col("vec_id") < nq)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val wp = Window.partitionBy(col("q_id"))
@@ -1098,7 +1101,7 @@ ${LshOracleSql.cosineExpr} AS cos
       val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
       val batch = all.filter(pmod(col("vec_id"), lit(8)) === 0)
       val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-        inlineScratch(dir, "drift_assign"))
+        materialize(_, inlineScratch(dir, "drift_assign")))
       val cents = coarseCentroids(base, assignB)
       val nb = coarseReassign(base, cents).groupBy(col("cid"))
         .agg(count(lit(1)).as("nb"))
@@ -1188,14 +1191,14 @@ ${LshOracleSql.cosineExpr} AS cos
       val iters = 2; val topk = 3; val nq = 10
       val base = emb(s, dir)
       val coarse = coarseTrainTo(base, k, iters,
-        inlineScratch(dir, "respq_assign"))
+        materialize(_, inlineScratch(dir, "respq_assign")))
       val coarseCents = coarseCentroids(base, coarse)
       // shared with the persisted-index path (AnnIndex.build /
       // ivfPqResidualQuery) — one derivation, bit-identical both ways
       val ncen = AnnIndex.normCentroids(coarseCents)
       val resSubs = AnnIndex.residualSubs(base, coarse, coarseCents, m, sub)
       val codes = pqTrainCodesTo(resSubs, sub, kpq, iters,
-        inlineScratch(dir, "respq_codes"))
+        materialize(_, inlineScratch(dir, "respq_codes")))
       val book = pqCodebookOf(codes.join(resSubs, Seq("vec_id", "ss")), sub)
       val queries = base.filter(col("vec_id") < nq)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -1313,7 +1316,7 @@ ${LshOracleSql.cosineExpr} AS cos
     (s, dir) => {
       val base = emb(s, dir)
       val assign = AnnIndex.coarseTrainTo(base, 16, 2,
-        inlineScratch(dir, "ood_assign"))
+        materialize(_, inlineScratch(dir, "ood_assign")))
       val cents = coarseCentroids(base, assign)
       val carr = cents.groupBy()
         .agg(sort_array(collect_list(struct(col("cid"), col("centroid"))))

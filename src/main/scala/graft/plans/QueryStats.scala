@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import graft.sources.{Catalog, TableLocks}
 
@@ -84,7 +85,12 @@ object QueryStats {
     def shape(p: LogicalPlan, indent: String): String =
       indent + p.nodeName + "\n" +
         p.children.map(shape(_, indent + "  ")).mkString
-    sanitizeTokens(analyzed.toString)
+    // every field: the plan text cuts a node's fields, and an expression's
+    // arguments, at `spark.sql.debug.maxToStringFields` (25), which would
+    // hide a change past the cut
+    val uncut = df.sparkSession.sessionState.conf.clone()
+    uncut.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+    sanitizeTokens(SQLConf.withExistingConf(uncut)(analyzed.toString))
       .replaceAll("#\\d+", "#")
       .replaceAll("(CTERelation(?:Def|Ref)) \\d+", "$1") +
       "== optimized operator shape ==\n" + shape(qe.optimizedPlan, "")

@@ -367,6 +367,18 @@ class Catalog(spark: SparkSession, root: String) {
   def prop(name: String, key: String): Option[String] =
     manifest(name, current(name)).props.get(key)
 
+  /** Every prop of version v. */
+  def props(name: String, v: Int): Map[String, String] =
+    manifest(name, v).props
+
+  /** The current version's number. */
+  def currentVersion(name: String): Int = current(name)
+
+  /** A props-only commit: the next version keeps the current files and
+    * carries exactly `props`, so it can also remove a key. */
+  def commitProps(name: String, props: Map[String, String]): Unit =
+    commit(name)((m, _) => m.copy(props = props))
+
   /** DELETE FROM name WHERE cond: keep !cond rows. */
   def delete(name: String, keep: DataFrame => DataFrame): Unit =
     rewrite(name, keep)

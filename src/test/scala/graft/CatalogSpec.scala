@@ -1248,6 +1248,24 @@ class CatalogSpec extends GraftSuite {
       "6-8-hex qualified tokens fold to @id (identity-hash shape)")
   }
 
+  test("planHash sees every field of a wide projection") {
+    // Spark's plan text cuts a node's fields, and an expression's
+    // arguments, at 25: two 30-column projections, and two 30-argument
+    // arrays, that differ only in the 30th expression must still hash
+    // differently
+    import org.apache.spark.sql.functions.{array, col, lit}
+    val exprs = (1 to 29).map(i => col("n_nationkey") + lit(i))
+    def planFor(last: Int) = Tables.table(spark, sf, "nation")
+      .select((exprs :+ (col("n_nationkey") + lit(last))).zipWithIndex
+        .map { case (e, i) => e.as(s"c$i") }: _*)
+    def arrayFor(last: Int) = Tables.table(spark, sf, "nation")
+      .select(array(exprs :+ (col("n_nationkey") + lit(last)): _*).as("a"))
+    for (plan <- Seq(planFor _, arrayFor _))
+      assert(graft.plans.QueryStats.planHash(plan(30)) !=
+        graft.plans.QueryStats.planHash(plan(31)),
+        "a change in the 30th expression must move the fingerprint")
+  }
+
   test("planHash is ExprId-range-independent for multi-distinct-agg plans") {
     // RewriteDistinctAggregates orders its Expand rows, columns and gid
     // filters by hashCodes that reach ExprId — a per-session counter —

@@ -140,7 +140,6 @@ class FunctionsSpec extends GraftSuite {
   }
 
   test("sql vector functions coerce double arrays and apply defaults") {
-    plans.GraftExtensions.registerAll(spark)
     val r = spark.sql("""
       SELECT cosine_sim(array(1.0, 0.0), array(1.0, 0.0)) AS c,
              lsh_bucket(array(0.5, -0.25)) AS b""").collect()(0)
@@ -222,7 +221,6 @@ class FunctionsSpec extends GraftSuite {
   }
 
   test("custom expressions work through SQL and inside lambdas") {
-    plans.GraftExtensions.registerAll(spark)
     val r = spark.sql(
       """SELECT fingerprint64('abc') AS fp,
                 hamming64(12, 10) AS hd,
@@ -238,7 +236,6 @@ class FunctionsSpec extends GraftSuite {
   }
 
   test("ci collation: equality, ordering, and the mysql_strcoll shim") {
-    plans.GraftExtensions.registerAll(spark)
     // the reference's latin1_swedish_ci analog: 'ACME' = 'acme' under ci,
     // ordering case-folds, strcoll returns the -1/0/1 sign
     val r = spark.sql(

@@ -21,8 +21,10 @@ class TemporalJoinSpec extends GraftSuite {
         col("ts").as("c_ts"))
     // the at-or-before predicate must live in the ON clause: as a post-
     // filter it would drop purchases whose user's clicks are all later
-    val naive = purchases.join(clicks,
-        purchases("user_id") === clicks("user_id") &&
+    // both sides come from one DataFrame: alias them so the key equality
+    // is not resolved as one column compared with itself
+    val naive = purchases.as("p").join(clicks.as("c"),
+        col("p.user_id") === col("c.user_id") &&
           col("c_ts") <= col("p_ts"), "left_outer")
       .groupBy(col("purchase_id"))
       .agg(max(struct(col("c_ts"), col("c_id"))).getField("c_id")

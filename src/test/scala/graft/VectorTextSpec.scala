@@ -162,6 +162,37 @@ class VectorTextSpec extends GraftSuite {
       s"expected respq artifact scans in:\n${scans.mkString("\n")}")
   }
 
+  test("a forced rebuild never disturbs a reader of the published index") {
+    // a reader pins one published index; a build racing it commits new
+    // artifact versions beside the old ones, so every read returns the
+    // baseline rows and none hits a vanished file
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_annbuild").toString
+    try {
+      Tables.table(spark, sf, "embeddings")
+        .write.parquet(s"$tmp/embeddings.parquet")
+      operators.AnnIndex.build(spark, tmp)
+      def rows(): Seq[Seq[Any]] = operators.AnnIndex.ivfPqQuery(spark, tmp)
+        .collect().map(_.toSeq).toSeq
+      val baseline = rows()
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+      val builder = new Thread(() =>
+        try operators.AnnIndex.build(spark, tmp)
+        catch { case t: Throwable => failure.set(t) })
+      builder.start()
+      var reads = 0
+      try while (builder.isAlive) {
+        assert(rows() == baseline, s"read ${reads + 1} diverged mid-rebuild")
+        reads += 1
+      } finally builder.join()
+      assert(failure.get() == null, s"the rebuild failed: ${failure.get()}")
+      assert(reads > 0, "no read overlapped the rebuild")
+      assert(rows() == baseline, "the rebuilt index answers differently")
+    } finally {
+      sources.FsUtil.deleteRecursively(Paths.get(tmp), swallowErrors = true)
+    }
+  }
+
   test("index merge serves ingested vectors; delete prunes tombstones " +
       "at the list scan and preserves survivor scores") {
     val merge = operators.VectorQueries.indexMerge.run(spark, sf).collect()
@@ -237,6 +268,9 @@ class VectorTextSpec extends GraftSuite {
       "two-delta segment layout diverged from the single-delta read")
     // compaction folds all deltas + tombstones into a new base and must
     // not change a single byte of any query result
+    val mcat = new sources.Catalog(spark,
+      s"${operators.AnnIndex.indexDir(sf)}/maint")
+    val preCompact = mcat.props("index", mcat.currentVersion("index"))
     operators.AnnIndex.compact(spark, sf)
     assert(operators.AnnIndex.maintQuery(spark, sf)
       .collect().map(_.toSeq).toSeq == rows,
@@ -247,24 +281,20 @@ class VectorTextSpec extends GraftSuite {
       .queryExecution.executedPlan.toString
     assert(!postPlan.contains("LeftAnti"),
       s"compacted read still anti-joins tombstones:\n$postPlan")
-    // one-generation retention: the dirs the pre-compact manifest
-    // referenced survive THIS compaction (a reader that resolved the old
-    // manifest keeps valid files), and only the NEXT compaction drops
-    // them
-    import java.nio.file.{Files, Paths}
-    val mroot = Paths.get(operators.AnnIndex.indexDir(sf), "maint")
-    // physical names carry a rebuild-epoch prefix; find by suffix
-    def dirWith(suffix: String): Boolean =
-      scala.util.Using.resource(Files.list(mroot)) { st =>
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .exists(_.getFileName.toString.endsWith(suffix))
-      }
-    assert(dirWith("base_g0") && dirWith("tomb_g0_0"),
-      "retention window violated: superseded dirs deleted immediately")
+    // one-generation retention: the artifact versions the pre-compaction
+    // index named survive THIS compaction (a reader that pinned the old
+    // index keeps valid files), and only the NEXT compaction drops them
+    assert(preCompact.contains("tombstones"),
+      "fixture: the pre-compaction index must name tombstones")
+    val superseded = Seq("assign", "codes", "tombstones")
+      .map(t => t -> preCompact(t).toInt)
+    def readable(t: String, v: Int): Boolean =
+      scala.util.Try(mcat.tableAsOf(t, v).count()).isSuccess
+    assert(superseded.forall { case (t, v) => readable(t, v) },
+      "retention window violated: superseded versions deleted immediately")
     operators.AnnIndex.compact(spark, sf)
-    assert(!dirWith("base_g0") && !dirWith("tomb_g0_0"),
-      "superseded dirs leaked past one generation")
+    assert(superseded.forall { case (t, v) => !readable(t, v) },
+      "superseded versions leaked past one generation")
     assert(operators.AnnIndex.maintQuery(spark, sf)
       .collect().map(_.toSeq).toSeq == rows,
       "second compaction changed query results")
@@ -407,11 +437,12 @@ class VectorTextSpec extends GraftSuite {
   }
 
   test("canonical maintained state: ensure skips, any mutator invalidates") {
-    // the recall gate reuses the maintenance row's lifecycle state via a
-    // marker; the marker must (a) make ensureMaintained a no-op while
-    // the canonical state is live, and (b) die with ANY mutation, so it
-    // can never claim canonical over a diverged manifest
-    import java.nio.file.{Files, Paths}
+    // the recall gate reuses the maintenance row's lifecycle state via
+    // the published index's `canonical` prop; it must (a) make
+    // ensureMaintained a no-op while the canonical state is live, and
+    // (b) be dropped by ANY mutation, so it can never claim canonical
+    // over a diverged index
+    import java.nio.file.Files
     val tmp = Files.createTempDirectory("graft_annstate").toString
     try {
       Tables.table(spark, sf, "embeddings")
@@ -419,22 +450,25 @@ class VectorTextSpec extends GraftSuite {
       operators.AnnIndex.establishMaintained(spark, tmp)
       val before = operators.AnnIndex.maintQuery(spark, tmp)
         .collect().map(_.toSeq).toSeq
-      def epochOf(): String = Files.readString(Paths.get(
-        operators.AnnIndex.indexDir(tmp), "maint", "MANIFEST"))
-      val m0 = epochOf()
+      val mcat = new sources.Catalog(spark,
+        s"${operators.AnnIndex.indexDir(tmp)}/maint")
+      def published(): Map[String, String] =
+        mcat.props("index", mcat.currentVersion("index"))
+      val m0 = published()
       // (a) ensure over a live canonical state must not rebuild: the
-      // manifest (epoch included) stays byte-identical
+      // published index's props stay identical
       operators.AnnIndex.ensureMaintained(spark, tmp)
-      assert(epochOf() == m0, "ensureMaintained rebuilt a live canonical " +
+      assert(published() == m0, "ensureMaintained rebuilt a live canonical " +
         "state — the recall gate would re-pay the base training")
-      // (b) a mutation (extra tombstone wave) invalidates the marker;
-      // ensure must then re-establish (epoch bumps), and the re-built
-      // state answers identically to the first canonical build
+      // (b) a mutation (extra tombstone wave) publishes a non-canonical
+      // index; ensure must then re-establish (new artifact versions), and
+      // the re-built state answers identically to the first canonical
+      // build
       operators.AnnIndex.writeTombstones(spark, tmp,
         Tables.table(spark, tmp, "embeddings")
           .filter(org.apache.spark.sql.functions.col("vec_id") === 1))
       operators.AnnIndex.ensureMaintained(spark, tmp)
-      assert(epochOf() != m0,
+      assert(published() != m0,
         "a mutated state must not pass for canonical")
       val after = operators.AnnIndex.maintQuery(spark, tmp)
         .collect().map(_.toSeq).toSeq
@@ -444,6 +478,18 @@ class VectorTextSpec extends GraftSuite {
       sources.FsUtil.deleteRecursively(java.nio.file.Paths.get(tmp),
         swallowErrors = true)
     }
+  }
+
+  test("a JVM's own ANN scratch root is deleted when it exits") {
+    val child = sources.ChildJvm.spawn("graft.AnnScratchChild", Seq(sf))
+    val exit = child.waitFor()
+    val tail = child.tail()
+    assert(exit == 0, s"child failed (exit=$exit): ${tail.takeRight(800)}")
+    val root = tail.linesIterator.collectFirst {
+      case l if l.startsWith("ROOT=") => l.stripPrefix("ROOT=") }
+    assert(root.isDefined, s"child printed no root: ${tail.takeRight(800)}")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root.get)),
+      s"${root.get} outlived the JVM that owned it")
   }
 
   test("ANN queries leave the block-manager cache empty") {
@@ -1772,5 +1818,17 @@ class VectorTextSpec extends GraftSuite {
       assert(r.getDouble(5) == tokens.toDouble / words.toDouble)
       assert(r.getDouble(6) >= 0.0 && r.getDouble(6) <= 1.0)
     }
+  }
+}
+
+/** Child main for the scratch-root exit test: creates its index
+  * directory for the corpus `args(0)`, writes a file in it, prints its
+  * scratch root and exits normally. */
+object AnnScratchChild {
+  def main(args: Array[String]): Unit = {
+    val d = java.nio.file.Paths.get(operators.AnnIndex.indexDir(args(0)))
+    java.nio.file.Files.createDirectories(d)
+    java.nio.file.Files.writeString(d.resolve("probe"), "x\n")
+    println(s"ROOT=${operators.AnnIndex.scratchRootPath}")
   }
 }
