@@ -34,13 +34,18 @@ import org.apache.spark.sql.functions._
   * artifacts to the warehouse; the query side is sub-second because its
   * only large input is nprobe/k of the code table.
   *
-  * Training hands its final state to a sink that writes it and reads it
-  * back — a catalog commit in the build, scratch parquet (`materialize`)
-  * in the composed in-line queries — instead of `persist()`:
-  * multi-consumer subtrees still run the k-means lineage once, but the
-  * Spark block-manager cache stays empty — a library caller composing
-  * many ANN queries in one session accumulates nothing (asserted in
-  * VectorTextSpec).
+  * One trainer per quantizer (`trainCoarse`, `trainPq`) and one IVF+PQ
+  * entry (`trainIvfPq`) serve the build, the maintained base segment and
+  * every composed in-line query; one plan vocabulary (`querySet`,
+  * `probeCandidates`, `exactTopK`, `ivfPqPlan`, `ivfPqResidualPlan`)
+  * serves every read. Training hands each final artifact to a `Sink`
+  * that writes it and reads it back — a catalog commit in the build, a
+  * lineage barrier (`barrierSink`) in the composed queries — instead of
+  * `persist()`: multi-consumer subtrees still run the k-means lineage
+  * once, and Spark's CacheManager stays empty, so a library caller
+  * composing many ANN queries in one session registers no cached plan
+  * (asserted in VectorTextSpec). The barriers' checkpoint blocks live in
+  * the block manager until their DataFrames are garbage-collected.
   */
 object AnnIndex {
   // fixed index parameters — shared by the composed in-line queries, the
@@ -98,25 +103,11 @@ object AnnIndex {
     * catalog tables. */
   private val IndexVersion = "v4"
 
-  /** Materialize a deterministic intermediate: write parquet, read back.
-    * Truncates lineage and shares the computation across consumers via
-    * files — never the block-manager cache. */
-  private[operators] def materialize(df: DataFrame, path: String): DataFrame = {
-    df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
-  }
-
-  /** Scratch path for the composed in-line queries' per-construction
-    * training state (forced retrain each call — their e2e timing is the
-    * train+query composition, unlike the prebuilt index path). */
-  private[operators] def inlineScratch(dir: String, tag: String): String =
-    s"${indexDir(dir)}/inline_$tag"
-
   // ---- coarse (IVF) quantizer ------------------------------------------
 
   /** Float-rounded centroids of a coarse assignment (two-phase agg — only
     * k×64 per-dim partial sums shuffle, never the vectors). */
-  private[operators] def coarseCentroids(base: DataFrame,
+  private def coarseCentroids(base: DataFrame,
       assign: DataFrame): DataFrame =
     assign.join(base, Seq("vec_id"))
       .groupBy(col("cid"))
@@ -155,30 +146,8 @@ object AnnIndex {
       .select(col("vec_id"), col("cid"))
   }
 
-  /** Deterministic-init coarse k-means (fingerprint64(vec_id) mod k — no
-    * driver-side sampling, no global sort, identical at any corpus size,
-    * and replayable by the DuckDB oracle), `iters` Lloyd rounds. The
-    * final (vec_id, cid) assignment goes through `sink`: it feeds
-    * several subtrees (final centroids, probes, candidate lists), so the
-    * k-means lineage runs once, with no block-manager cache entry. */
-  private[operators] def coarseTrainTo(base: DataFrame, k: Int, iters: Int,
-      sink: DataFrame => DataFrame): DataFrame = {
-    var assign = base.select(col("vec_id"),
-      pmod(graft.functions.HashFunctions.fingerprint64(
-        col("vec_id").cast("string")), lit(k.toLong))
-        .cast("int").as("cid"))
-    // barrier each Lloyd round's (vec_id, cid) — ids only, never
-    // vectors: without it iteration i's centroid aggregation re-executes
-    // iteration i-1's whole reassign lineage (the recursion multiplies
-    // the corpus scans per extra iteration; measured ~25% of the sf0.1
-    // index build)
-    for (_ <- 1 to iters)
-      assign = graft.sources.Checkpoints.barrier(
-        coarseReassign(base, coarseCentroids(base, assign)))
-    sink(assign)
-  }
-
-  /** Per-query top-nprobe coarse centroids (ties to smaller cid). */
+  /** Per-query top-nprobe coarse centroids (q_id, cid, prk), ties to the
+    * smaller cid; `prk` is the probe's rank. */
   private[operators] def coarseProbes(queries: DataFrame, cents: DataFrame,
       nprobe: Int): DataFrame = {
     val wp = Window.partitionBy(col("q_id"))
@@ -187,9 +156,9 @@ object AnnIndex {
       .select(col("q_id"), col("cid"),
         graft.functions.VectorFunctions.cosineSim(
           col("q_emb"), col("centroid")).as("qcos"))
-      .withColumn("rk", row_number().over(wp))
-      .filter(col("rk") <= nprobe)
-      .select(col("q_id"), col("cid"))
+      .withColumn("prk", row_number().over(wp))
+      .filter(col("prk") <= nprobe)
+      .select(col("q_id"), col("cid"), col("prk"))
   }
 
   // ---- product quantizer -----------------------------------------------
@@ -213,28 +182,30 @@ object AnnIndex {
       graft.functions.VectorFunctions.normalizeL2(col("embedding"))
         .as("nemb"))
 
+  /** `df` with its vector column `v` exploded into M subspace rows: the
+    * slice number as `ss`, its SUB dims as `as`. */
+  private def slices(df: DataFrame, v: String, as: String): DataFrame =
+    df.select(df.columns.filter(_ != v).map(col).toIndexedSeq :+
+        posexplode(array((0 until M).map(j =>
+          expr(s"slice($v, ${j * SUB + 1}, $SUB)")): _*)): _*)
+      .withColumnRenamed("pos", "ss")
+      .withColumnRenamed("col", as)
+
   /** L2-normalized subvectors (vec_id, ss, svec): on unit vectors
     * squared-L2 = 2 − 2·cos, so PQ's ADC ranking is rank-equivalent to
     * the cosine brute baseline (raw L2 would rank by norm as much as by
     * direction). */
-  private[operators] def pqSubs(base: DataFrame, m: Int,
-      sub: Int): DataFrame =
-    normalizedEmb(base)
-      .select(col("vec_id"),
-        posexplode(array((0 until m).map(j =>
-          expr(s"slice(nemb, ${j * sub + 1}, $sub)")): _*)))
-      .withColumnRenamed("pos", "ss")
-      .withColumnRenamed("col", "svec")
+  private[operators] def pqSubs(base: DataFrame): DataFrame =
+    slices(normalizedEmb(base), "nemb", "svec")
 
   /** Per-subspace float-rounded codebook (two-phase agg — the map side
     * collapses each partition to m×k per-dim partial sums). Input needs
     * (vec_id, ss, svec, cid). */
-  private[operators] def pqCodebookOf(assign: DataFrame,
-      sub: Int): DataFrame =
+  private def pqCodebookOf(assign: DataFrame): DataFrame =
     assign
       .groupBy(col("ss"), col("cid"))
       .agg(count(lit(1)).as("n"),
-        array((0 until sub).map(i =>
+        array((0 until SUB).map(i =>
           sum(col("svec").getItem(i))).toIndexedSeq: _*).as("sum_vec"))
       .select(col("ss"), col("cid"),
         expr("transform(sum_vec, v -> float(v / n))")
@@ -245,7 +216,7 @@ object AnnIndex {
     * (strict < keeps the first minimum → ties to smaller cid, the same
     * rule as min(struct(dd, cid))). The corpus subvectors never enter a
     * shuffle — at 100 TB only (vec_id, ss, cid) code tuples ever move. */
-  private[operators] def pqEncode(subs: DataFrame,
+  private def pqEncode(subs: DataFrame,
       cents: DataFrame): DataFrame = {
     val cbook = cents.groupBy(col("ss"))
       .agg(sort_array(collect_list(struct(col("cid"), col("cen"))))
@@ -259,74 +230,16 @@ object AnnIndex {
       .select(col("vec_id"), col("ss"), col("svec"), col("cid"))
   }
 
-  /** Deterministic-init per-subspace k-means; the final (vec_id, ss, cid)
-    * CODES — the 8-byte-per-vector artifact, no subvector floats —
-    * go through `sink` (they feed both the final codebook and the
-    * ADC join). */
-  private[operators] def pqTrainCodesTo(subs0: DataFrame, sub: Int, k: Int,
-      iters: Int, sink: DataFrame => DataFrame): DataFrame = {
-    // the subvector lineage (normalize + slice, or the residual
-    // centroid-subtract join) feeds the init pass and every Lloyd
-    // round's encode — run it once
-    val subs = graft.sources.Checkpoints.barrier(subs0)
-    var assign = subs.withColumn("cid",
-      pmod(graft.functions.HashFunctions.fingerprint64(
-        col("vec_id").cast("string")), lit(k.toLong)).cast("int"))
-    // same per-round barrier as coarseTrainTo, but here the iteration
-    // state keeps the sub-bytes-wide svec alongside (re-deriving it
-    // would cost a (vec_id, ss)-keyed shuffle of the same payload) —
-    // checkpointed state is (ids, `sub` floats, cid) per row, a
-    // build-job materialization the reference's writeengine does on
-    // disk for every load anyway
-    for (_ <- 1 to iters)
-      assign = graft.sources.Checkpoints.barrier(
-        pqEncode(subs, pqCodebookOf(assign, sub)))
-    sink(assign.select(col("vec_id"), col("ss"), col("cid")))
-  }
-
-  /** The query-side ADC distance table (q_id, ss, cid, dd) — m×k doubles
-    * per query, the only state the scoring join broadcasts. `querySubs`
-    * must already be restricted to the query vectors. */
-  private[operators] def pqDtab(querySubs: DataFrame,
-      cents: DataFrame): DataFrame =
-    querySubs
-      .select(col("vec_id").as("q_id"), col("ss"), col("svec").as("qsvec"))
-      .join(broadcast(cents), Seq("ss"))
-      .select(col("q_id"), col("ss"), col("cid"),
-        l2sqExpr("qsvec", "cen").as("dd"))
-
-  /** ADC scoring tail: per-(q, vec) fixed-order distance sum over the m
-    * subspaces (sum(when ss=j) each aggregates exactly one value, then
-    * d0+d1+…+d{m-1} adds in a fixed order — nothing order-sensitive),
-    * ranked ascending, top-k, exact cosine emitted alongside. */
-  private[operators] def adcTopK(scoredPairs: DataFrame, base: DataFrame,
-      m: Int, topk: Int, nq: Int): DataFrame = {
-    val perSs = (0 until m).map(j =>
-      sum(when(col("ss") === j, col("dd")).otherwise(0.0)).as(s"d$j"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_dist").asc, col("vec_id"))
-    val queries = base.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    scoredPairs
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(perSs.head, perSs.tail: _*)
-      .withColumn("approx_dist",
-        (0 until m).map(j => col(s"d$j")).reduce(_ + _))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= topk)
-      .join(base, Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .select(col("q_id"), col("rk"), col("vec_id"), col("approx_dist"),
-        graft.functions.VectorFunctions.cosineSim(
-          col("q_emb"), col("embedding")).as("cos"))
-      .orderBy(col("q_id"), col("rk"))
-  }
-
-  // ---- persisted index lifecycle ---------------------------------------
+  /** Frozen encode of a vector batch against a trained codebook: its
+    * (vec_id, ss, cid) codes, no retraining. */
+  private[operators] def frozenCodes(batch: DataFrame,
+      book: DataFrame): DataFrame =
+    pqEncode(pqSubs(batch), book)
+      .select(col("vec_id"), col("ss"), col("cid"))
 
   /** L2-normalized coarse centroids (cid, ncen) — the residual encoding's
     * subtraction table (16 rows, always broadcast). */
-  private[operators] def normCentroids(cents: DataFrame): DataFrame =
+  private def normCentroids(cents: DataFrame): DataFrame =
     cents.select(col("cid"),
       expr("transform(centroid, x -> double(x) / " +
         "sqrt(aggregate(centroid, cast(0 as double), " +
@@ -336,22 +249,245 @@ object AnnIndex {
     * cluster) — the FAISS-default IVFPQ encoding input. Per-row map
     * against the broadcast normalized-centroid table; vectors never
     * shuffle. */
-  private[operators] def residualSubs(base: DataFrame, assign: DataFrame,
-      cents: DataFrame, m: Int, sub: Int): DataFrame = {
-    val ncen = normCentroids(cents)
-    normalizedEmb(base).join(assign, Seq("vec_id"))
-      .join(broadcast(ncen), Seq("cid"))
+  private def residualSubs(base: DataFrame, assign: DataFrame,
+      cents: DataFrame): DataFrame =
+    slices(normalizedEmb(base).join(assign, Seq("vec_id"))
+      .join(broadcast(normCentroids(cents)), Seq("cid"))
       .select(col("vec_id"),
         // r16: interpreted zip_with subtract → codegen'd VEC_SUB (same
         // element order and double arithmetic; VectorKernels.vecSub)
         graft.functions.VectorFunctions.vecSub(col("nemb"), col("ncen"))
-          .as("rvec"))
-      .select(col("vec_id"),
-        posexplode(array((0 until m).map(j =>
-          expr(s"slice(rvec, ${j * sub + 1}, $sub)")): _*)))
-      .withColumnRenamed("pos", "ss")
-      .withColumnRenamed("col", "svec")
+          .as("rvec")), "rvec", "svec")
+
+  // ---- training: one trainer per quantizer, one IVF+PQ entry -------------
+
+  /** Where a training hands artifact `name`: the sink writes it and
+    * returns what to read it back from, so every consumer of a trained
+    * table shares one run of its lineage. The build commits catalog
+    * tables; the composed in-line queries pass `barrierSink`. */
+  private[operators] type Sink = String => DataFrame => DataFrame
+
+  /** The composed queries' sink: one lineage barrier per artifact (the
+    * barrier every Lloyd round already uses). Nothing lands on a shared
+    * path, so building a query again never disturbs an earlier build's
+    * DataFrame, and the CacheManager stays empty. */
+  private[operators] val barrierSink: Sink =
+    _ => graft.sources.Checkpoints.barrier(_)
+
+  /** Deterministic k-means init: fingerprint64(vec_id) mod k — no
+    * sampling, no global sort, identical at any corpus size, and
+    * replayable by the DuckDB oracle. */
+  private def initCid(k: Int) =
+    pmod(graft.functions.HashFunctions.fingerprint64(
+      col("vec_id").cast("string")), lit(k.toLong)).cast("int")
+
+  /** Coarse k-means over `base`: ITERS Lloyd rounds, then the final
+    * (vec_id, cid) assignment and its centroids go through the sink as
+    * `coarse_assign` and `coarse_centroids`. */
+  private[operators] def trainCoarse(base: DataFrame,
+      sink: Sink): (DataFrame, DataFrame) = {
+    var assign = base.select(col("vec_id"), initCid(K).as("cid"))
+    // barrier each Lloyd round's (vec_id, cid) — ids only, never
+    // vectors: without it iteration i's centroid aggregation re-executes
+    // iteration i-1's whole reassign lineage (the recursion multiplies
+    // the corpus scans per extra iteration; measured ~25% of the sf0.1
+    // index build)
+    for (_ <- 1 to ITERS)
+      assign = graft.sources.Checkpoints.barrier(
+        coarseReassign(base, coarseCentroids(base, assign)))
+    val a = sink("coarse_assign")(assign)
+    (a, sink("coarse_centroids")(coarseCentroids(base, a)))
   }
+
+  /** Per-subspace k-means over `subs0` (vec_id, ss, svec): ITERS Lloyd
+    * rounds, then the (vec_id, ss, cid) CODES — the 8-byte-per-vector
+    * artifact, no subvector floats — and the codebook go through the
+    * sink as `<name>_codes` and `<name>_codebook`. The codebook
+    * aggregates the final round's in-flight (svec, cid) state directly —
+    * the same rows a codes⋈subs re-join would produce, minus the join. */
+  private[operators] def trainPq(subs0: DataFrame, sink: Sink,
+      name: String = "pq"): (DataFrame, DataFrame) = {
+    // the subvector lineage (normalize + slice, or the residual
+    // centroid-subtract join) feeds the init pass and every Lloyd
+    // round's encode — run it once
+    val subs = graft.sources.Checkpoints.barrier(subs0)
+    var assign = subs.withColumn("cid", initCid(KPQ))
+    // same per-round barrier as trainCoarse, but here the iteration
+    // state keeps the sub-bytes-wide svec alongside (re-deriving it
+    // would cost a (vec_id, ss)-keyed shuffle of the same payload) —
+    // checkpointed state is (ids, `sub` floats, cid) per row, a
+    // build-job materialization the reference's writeengine does on
+    // disk for every load anyway
+    for (_ <- 1 to ITERS)
+      assign = graft.sources.Checkpoints.barrier(
+        pqEncode(subs, pqCodebookOf(assign)))
+    (sink(s"${name}_codes")(assign.select(col("vec_id"), col("ss"),
+      col("cid"))),
+      sink(s"${name}_codebook")(pqCodebookOf(assign)))
+  }
+
+  /** A trained IVF+PQ index, each artifact as its sink handed it back. */
+  private[operators] case class IvfPq(assign: DataFrame, cents: DataFrame,
+      codes: DataFrame, book: DataFrame)
+
+  /** THE IVF+PQ training — the offline build, the maintained base
+    * segment and every composed IVF+PQ query, each with its own sink.
+    * r16 (overlap independent jobs): the coarse k-means and the
+    * direct-encoding PQ training share no state, and both are chains of
+    * short, largely single-task jobs whose wall is scheduling latency,
+    * not cores — two threads submit them concurrently so one chain's
+    * stages back-fill the other's idle executors. Results
+    * are unchanged: the chains share no mutable state and each artifact
+    * is written by exactly one thread. */
+  private[operators] def trainIvfPq(base: DataFrame, sink: Sink): IvfPq = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val coarseF = Future(trainCoarse(base, sink))
+    val pqF = Future(trainPq(pqSubs(base), sink))
+    val (assign, cents) = Await.result(coarseF, Duration.Inf)
+    val (codes, book) = Await.result(pqF, Duration.Inf)
+    IvfPq(assign, cents, codes, book)
+  }
+
+  /** Residual-encoding PQ over a trained coarse quantizer, through the
+    * sink as `respq_codes` and `respq_codebook`. */
+  private[operators] def trainResidualPq(base: DataFrame, assign: DataFrame,
+      cents: DataFrame, sink: Sink): (DataFrame, DataFrame) =
+    trainPq(residualSubs(base, assign, cents), sink, "respq")
+
+  /** The training split of the base-segment lifecycle: vec_id % 8 ≠ 0
+    * (`heldOut` is the rest — the ingest batch). */
+  private[operators] def baseRows(all: DataFrame): DataFrame =
+    all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
+  private[operators] def heldOut(all: DataFrame): DataFrame =
+    all.filter(pmod(col("vec_id"), lit(8)) === 0)
+
+  // ---- the read-side plan vocabulary -----------------------------------
+
+  /** The query set (q_id, q_emb): the first `nq` corpus vectors. */
+  private[operators] def querySet(base: DataFrame, nq: Int = 10): DataFrame =
+    base.filter(col("vec_id") < nq)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+
+  /** Probe-pruned candidates: every vector on an inverted list its query
+    * probes, except the query itself — (pcid, vec_id, q_id, prk), `pcid`
+    * being the probed list (the residual ADC table's key). */
+  private[operators] def probeCandidates(assign: DataFrame,
+      probes: DataFrame): DataFrame =
+    assign.join(broadcast(probes), Seq("cid"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumnRenamed("cid", "pcid")
+
+  /** The distinct (q_id, vec_id) pairs of `probeCandidates`. */
+  private[operators] def candidateIds(assign: DataFrame,
+      probes: DataFrame): DataFrame =
+    probeCandidates(assign, probes).select(col("q_id"), col("vec_id"))
+      .distinct()
+
+  /** THE exact-cosine top-k: each query's `topk` highest-cosine vectors
+    * (ties to the smaller vec_id) among `cands` (q_id, vec_id, plus any
+    * `by` sweep keys) — or, with no candidate set, among every corpus
+    * vector but the query (one corpus scan × the broadcast query set).
+    * Returns (by…, q_id, rk, vec_id, cos). */
+  private[operators] def exactTopK(base: DataFrame, queries: DataFrame,
+      topk: Int, cands: Option[DataFrame] = None,
+      by: Seq[String] = Nil): DataFrame = {
+    val pairs = cands.fold(base.crossJoin(broadcast(queries))
+      .filter(col("vec_id") =!= col("q_id")))(
+      _.join(base, Seq("vec_id")).join(broadcast(queries), Seq("q_id")))
+    val keys = (by :+ "q_id").map(col)
+    val w = Window.partitionBy(keys: _*)
+      .orderBy(col("cos").desc, col("vec_id"))
+    pairs.select(keys ++ Seq(col("vec_id"),
+        graft.functions.VectorFunctions.cosineSim(
+          col("q_emb"), col("embedding")).as("cos")): _*)
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= topk)
+      .select(keys ++ Seq(col("rk"), col("vec_id"), col("cos")): _*)
+  }
+
+  /** The query-side ADC distance table (q_id, ss, cid, dd) for the first
+    * `nq` vectors — m×k doubles per query, the only state the scoring
+    * join broadcasts. */
+  private[operators] def queryDtab(base: DataFrame, book: DataFrame,
+      nq: Int): DataFrame =
+    pqSubs(base.filter(col("vec_id") < nq))
+      .select(col("vec_id").as("q_id"), col("ss"), col("svec").as("qsvec"))
+      .join(broadcast(book), Seq("ss"))
+      .select(col("q_id"), col("ss"), col("cid"),
+        l2sqExpr("qsvec", "cen").as("dd"))
+
+  /** ADC scoring tail: per-(q, vec) fixed-order distance sum over the m
+    * subspaces (sum(when ss=j) each aggregates exactly one value, then
+    * d0+d1+…+d{m-1} adds in a fixed order — nothing order-sensitive),
+    * ranked ascending, top-k, exact cosine emitted alongside. */
+  private[operators] def adcTopK(scoredPairs: DataFrame, base: DataFrame,
+      topk: Int, nq: Int): DataFrame = {
+    val perSs = (0 until M).map(j =>
+      sum(when(col("ss") === j, col("dd")).otherwise(0.0)).as(s"d$j"))
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("approx_dist").asc, col("vec_id"))
+    scoredPairs
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(perSs.head, perSs.tail: _*)
+      .withColumn("approx_dist",
+        (0 until M).map(j => col(s"d$j")).reduce(_ + _))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= topk)
+      .join(base, Seq("vec_id"))
+      .join(broadcast(querySet(base, nq)), Seq("q_id"))
+      .select(col("q_id"), col("rk"), col("vec_id"), col("approx_dist"),
+        graft.functions.VectorFunctions.cosineSim(
+          col("q_emb"), col("embedding")).as("cos"))
+      .orderBy(col("q_id"), col("rk"))
+  }
+
+  /** THE probe-pruning × ADC read plan, shared by every IVF+PQ read
+    * path (prebuilt index, label-filtered search, merged/deleted
+    * composed chains, segmented maintenance, the composed query): probe
+    * the broadcast centroids, draw candidates from the assignment lists
+    * (narrowed by `restrict`, the label prefilter's hook), score against
+    * the broadcast per-query distance table, heap the top-k. One copy —
+    * a scoring or plan fix lands everywhere the plan-pinning tests
+    * guard. */
+  private[operators] def ivfPqPlan(base: DataFrame, cents: DataFrame,
+      assign: DataFrame, book: DataFrame, codes: DataFrame,
+      nprobe: Int, topk: Int, nq: Int,
+      restrict: DataFrame => DataFrame = identity): DataFrame = {
+    val probes = coarseProbes(querySet(base, nq), cents, nprobe)
+    val pairs = restrict(candidateIds(assign, probes))
+      .join(codes, Seq("vec_id"))
+      .join(broadcast(queryDtab(base, book, nq)), Seq("q_id", "ss", "cid"))
+    adcTopK(pairs, base, topk, nq)
+  }
+
+  /** The RESIDUAL twin of `ivfPqPlan`, shared by the composed
+    * x_ann_pq_residual_topk and the indexed query: per-probe residual ADC
+    * tables (q_id, pcid, ss, cid, dd) — nprobe × m × k doubles per query,
+    * all broadcast-sized — scored against each candidate's codes under
+    * the list it was drawn from. */
+  private[operators] def ivfPqResidualPlan(base: DataFrame, cents: DataFrame,
+      assign: DataFrame, book: DataFrame, codes: DataFrame,
+      nprobe: Int, topk: Int, nq: Int): DataFrame = {
+    val probes = coarseProbes(querySet(base, nq), cents, nprobe)
+    val rq = normalizedEmb(base.filter(col("vec_id") < nq))
+      .select(col("vec_id").as("q_id"), col("nemb"))
+      .join(broadcast(probes), Seq("q_id"))
+      .join(broadcast(normCentroids(cents)), Seq("cid"))
+      .select(col("q_id"), col("cid").as("pcid"),
+        graft.functions.VectorFunctions.vecSub(col("nemb"), col("ncen"))
+          .as("rq"))
+    val rdtab = slices(rq, "rq", "qsvec")
+      .join(broadcast(book), Seq("ss"))
+      .select(col("q_id"), col("pcid"), col("ss"), col("cid"),
+        l2sqExpr("qsvec", "cen").as("dd"))
+    val pairs = probeCandidates(assign, probes).join(codes, Seq("vec_id"))
+      .join(broadcast(rdtab), Seq("q_id", "pcid", "ss", "cid"))
+    adcTopK(pairs, base, topk, nq)
+  }
+
+  // ---- persisted index lifecycle ---------------------------------------
 
   /** Offline index build: train both quantizers over the corpus at `dir`
     * and commit the artifacts — direct-encoding PQ (codebook + codes)
@@ -362,56 +498,11 @@ object AnnIndex {
   def build(s: SparkSession, dir: String): Unit = withBuildLock(dir) {
     val cat = builtCatalog(s, dir)
     val base = Tables.table(s, dir, "embeddings")
-    // r16 (guide §2.6 overlap independent jobs): the coarse k-means and
-    // the DIRECT-encoding PQ training share no state, yet ran strictly
-    // sequentially — and both are chains of short, largely single-task
-    // jobs whose wall is scheduler/driver latency, not cores. Two
-    // driver threads submit them concurrently so one chain's stages
-    // back-fill the other's idle executors (Spark schedules concurrent
-    // jobs natively; actions were only sequential because this code
-    // called them sequentially). The residual training stays after the
-    // join point — it consumes the coarse assignment. Results are
-    // unchanged: the chains share no mutable state and each artifact
-    // table is written by exactly one thread.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val coarseF = Future {
-      val assign = coarseTrainTo(base, K, ITERS, replace(cat, "coarse_assign"))
-      (assign, replace(cat, "coarse_centroids")(coarseCentroids(base, assign)))
-    }
-    // the subvector tables feed every training pass (init, each Lloyd
-    // round's encode, the final codebook): barrier them once instead of
-    // re-running the normalize+slice (and, for residuals, the
-    // centroid-subtract join) lineage per pass. Build-job-only
-    // materialization; the serving read paths never see these.
-    val pqF = Future {
-      val subs = graft.sources.Checkpoints.barrier(pqSubs(base, M, SUB))
-      trainPq(subs, replace(cat, "pq_codes"), replace(cat, "pq_codebook"))
-    }
-    val (assign, cents) = Await.result(coarseF, Duration.Inf)
-    Await.result(pqF, Duration.Inf)
-    val rsubs = graft.sources.Checkpoints.barrier(
-      residualSubs(base, assign, cents, M, SUB))
-    trainPq(rsubs, replace(cat, "respq_codes"), replace(cat, "respq_codebook"))
+    val sink: Sink = replace(cat, _)
+    val t = trainIvfPq(base, sink)
+    trainResidualPq(base, t.assign, t.cents, sink)
     publishIndex(cat, builtTables)
     retain(cat, builtTables)
-  }
-
-  /** One PQ training for the offline build: iterate on `subs`, commit
-    * codes (ids only) and the codebook. The codebook aggregates the
-    * final iteration's in-flight (svec, cid) state directly — the same
-    * rows a codes⋈subs re-join would produce, minus the join. */
-  private def trainPq(subs: DataFrame, codes: DataFrame => DataFrame,
-      book: DataFrame => DataFrame): Unit = {
-    var assign = subs.withColumn("cid",
-      pmod(graft.functions.HashFunctions.fingerprint64(
-        col("vec_id").cast("string")), lit(KPQ.toLong)).cast("int"))
-    for (_ <- 1 to ITERS)
-      assign = graft.sources.Checkpoints.barrier(
-        pqEncode(subs, pqCodebookOf(assign, SUB)))
-    codes(assign.select(col("vec_id"), col("ss"), col("cid")))
-    book(pqCodebookOf(assign, SUB))
   }
 
   // ---- publishing through the catalog ---------------------------------
@@ -500,60 +591,17 @@ object AnnIndex {
       build(s, dir)
   }
 
-  /** THE probe-pruning × ADC read plan, shared by every IVF+PQ read
-    * path (prebuilt index, merged/deleted composed chains, segmented
-    * maintenance): probe the broadcast centroids, draw candidates from
-    * the assignment lists, score against the broadcast per-query
-    * distance table, heap the top-k. One copy — a scoring or plan fix
-    * lands everywhere the plan-pinning tests guard. */
-  private[operators] def ivfPqPlan(base: DataFrame, cents: DataFrame,
-      assign: DataFrame, book: DataFrame, codes: DataFrame,
-      nprobe: Int, topk: Int, nq: Int): DataFrame = {
-    val queries = base.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = coarseProbes(queries, cents, nprobe)
-    val cands = assign.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"))
-      .distinct()
-    val dtab = pqDtab(pqSubs(base.filter(col("vec_id") < nq), M, SUB),
-      book)
-    val pairs = cands
-      .join(codes, Seq("vec_id"))
-      .join(broadcast(dtab), Seq("q_id", "ss", "cid"))
-    adcTopK(pairs, base, M, topk, nq)
-  }
-
   /** The read-side IVF+PQ query over prebuilt artifacts: probe pruning ×
-    * ADC codes, no training subtree anywhere in the plan. */
+    * ADC codes, no training subtree anywhere in the plan. `restrict`
+    * narrows the candidate pairs before scoring (`ivfPqPlan`). */
   def ivfPqQuery(s: SparkSession, dir: String, nprobe: Int = NPROBE,
-      topk: Int = 3, nq: Int = 10): DataFrame = {
+      topk: Int = 3, nq: Int = 10,
+      restrict: DataFrame => DataFrame = identity): DataFrame = {
     val a = built(s, dir)
     ivfPqPlan(Tables.table(s, dir, "embeddings"), a("coarse_centroids"),
-      a("coarse_assign"), a("pq_codebook"), a("pq_codes"), nprobe, topk, nq)
+      a("coarse_assign"), a("pq_codebook"), a("pq_codes"), nprobe, topk, nq,
+      restrict)
   }
-
-  /** Per-probe residual ADC distance table (q_id, pcid, ss, cid, dd) —
-    * nprobe × m × k doubles per query, all broadcast-sized. Shared by
-    * the composed x_ann_pq_residual_topk and the indexed query. */
-  private[operators] def residualDtab(base: DataFrame, probes: DataFrame,
-      ncen: DataFrame, book: DataFrame, m: Int, sub: Int,
-      nq: Int): DataFrame =
-    normalizedEmb(base.filter(col("vec_id") < nq))
-      .select(col("vec_id").as("q_id"), col("nemb"))
-      .join(broadcast(probes), Seq("q_id"))
-      .join(broadcast(ncen), Seq("cid"))
-      .select(col("q_id"), col("cid").as("pcid"),
-        graft.functions.VectorFunctions.vecSub(col("nemb"), col("ncen"))
-          .as("rq"))
-      .select(col("q_id"), col("pcid"),
-        posexplode(array((0 until m).map(j =>
-          expr(s"slice(rq, ${j * sub + 1}, $sub)")): _*)))
-      .withColumnRenamed("pos", "ss")
-      .withColumnRenamed("col", "qsvec")
-      .join(broadcast(book), Seq("ss"))
-      .select(col("q_id"), col("pcid"), col("ss"), col("cid"),
-        l2sqExpr("qsvec", "cen").as("dd"))
 
   /** The read-side RESIDUAL IVF+PQ query over prebuilt artifacts
     * (respq_codebook/respq_codes + the shared coarse artifacts): per-probe
@@ -561,23 +609,10 @@ object AnnIndex {
     * indexed twin of the composed x_ann_pq_residual_topk. */
   def ivfPqResidualQuery(s: SparkSession, dir: String,
       nprobe: Int = NPROBE, topk: Int = 3, nq: Int = 10): DataFrame = {
-    val base = Tables.table(s, dir, "embeddings")
     val a = built(s, dir)
-    val cents = a("coarse_centroids")
-    val assign = a("coarse_assign")
-    val book = a("respq_codebook")
-    val codes = a("respq_codes")
-    val queries = base.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = coarseProbes(queries, cents, nprobe)
-    val rdtab = residualDtab(base, probes, normCentroids(cents), book,
-      M, SUB, nq)
-    val cands = assign.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), col("cid").as("pcid"))
-    val pairs = cands.join(codes, Seq("vec_id"))
-      .join(broadcast(rdtab), Seq("q_id", "pcid", "ss", "cid"))
-    adcTopK(pairs, base, M, topk, nq)
+    ivfPqResidualPlan(Tables.table(s, dir, "embeddings"),
+      a("coarse_centroids"), a("coarse_assign"), a("respq_codebook"),
+      a("respq_codes"), nprobe, topk, nq)
   }
 
   /** METADATA-FILTERED IVF+PQ search over prebuilt artifacts — the
@@ -591,31 +626,14 @@ object AnnIndex {
   def ivfPqQueryFiltered(s: SparkSession, dir: String, nprobe: Int = NPROBE,
       topk: Int = 3, nq: Int = 10): DataFrame = {
     val base = Tables.table(s, dir, "embeddings")
-    val a = built(s, dir)
-    val cents = a("coarse_centroids")
-    val assign = a("coarse_assign")
-    val codebook = a("pq_codebook")
-    val codes = a("pq_codes")
-    val queries = base.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = coarseProbes(queries, cents, nprobe)
     val labels = base.select(col("vec_id"), col("label"))
     val qLabels = base.filter(col("vec_id") < nq)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"))
-    val cands = assign.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"))
-      .distinct()
+    ivfPqQuery(s, dir, nprobe, topk, nq, cands => cands
       .join(labels, Seq("vec_id"))
       .join(broadcast(qLabels), Seq("q_id"))
       .filter(col("label") === col("q_label"))
-      .select(col("q_id"), col("vec_id"))
-    val dtab = pqDtab(pqSubs(base.filter(col("vec_id") < nq), M, SUB),
-      codebook)
-    val pairs = cands
-      .join(codes, Seq("vec_id"))
-      .join(broadcast(dtab), Seq("q_id", "ss", "cid"))
-    adcTopK(pairs, base, M, topk, nq)
+      .select(col("q_id"), col("vec_id")))
   }
 
   /** Exact-cosine IVF search over prebuilt artifacts: probe pruning from
@@ -626,51 +644,37 @@ object AnnIndex {
       topk: Int = 3, nq: Int = 10): DataFrame = {
     val base = Tables.table(s, dir, "embeddings")
     val a = built(s, dir)
-    val cents = a("coarse_centroids")
-    val assign = a("coarse_assign")
-    val queries = base.filter(col("vec_id") < nq)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val probes = coarseProbes(queries, cents, nprobe)
-    val cands = assign.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"))
-      .distinct()
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    cands.join(base, Seq("vec_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        graft.functions.VectorFunctions.cosineSim(
-          col("q_emb"), col("embedding")).as("cos"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= topk)
+    val queries = querySet(base, nq)
+    val probes = coarseProbes(queries, a("coarse_centroids"), nprobe)
+    exactTopK(base, queries, topk,
+      Some(candidateIds(a("coarse_assign"), probes)))
       .select(col("q_id"), col("vec_id"))
   }
+
+  /** Ingest rows (vec_id, cid, codes_csv) of an assignment and its codes.
+    * Codes are emitted comma-joined rather than as a LIST column: the
+    * oracle compare (pandas) sorts every output column, and object
+    * arrays are unhashable there — a scalar string carries the same
+    * bit-exact content. */
+  private[operators] def ingestRows(assign: DataFrame,
+      codes: DataFrame): DataFrame =
+    assign.join(codes.groupBy(col("vec_id"))
+        .agg(expr(
+          "array_join(transform(sort_array(collect_list(struct(ss, cid))), " +
+            "x -> cast(x.cid as string)), ',')").as("codes_csv")),
+        Seq("vec_id"))
+      .select(col("vec_id"), col("cid"), col("codes_csv"))
+      .orderBy(col("vec_id"))
 
   /** Frozen-index INGEST: encode a new vector batch against prebuilt
     * artifacts — NO retraining, the per-ingest cost is a pure per-row
     * map against the broadcast centroid/codebook tables (the ANN analog
     * of x_dedup_incremental's precomputed band index). At 100 TB a
     * nightly ingest appends (vec_id, cid) + 8-byte codes for the new
-    * batch only; the quantizers refresh on their own schedule. Returns
-    * (vec_id, cid, codes[m ordered by subspace]). */
+    * batch only; the quantizers refresh on their own schedule. */
   def ingestEncode(batch: DataFrame, cents: DataFrame,
-      codebook: DataFrame): DataFrame = {
-    val bAssign = coarseReassign(batch, cents)
-    // codes are emitted comma-joined rather than as a LIST column: the
-    // driver's pandas-side compare sorts every output column, and object
-    // arrays are unhashable there — a scalar string carries the same
-    // bit-exact content
-    val bCodes = pqEncode(pqSubs(batch, M, SUB), codebook)
-      .groupBy(col("vec_id"))
-      .agg(expr(
-        "array_join(transform(sort_array(collect_list(struct(ss, cid))), " +
-          "x -> cast(x.cid as string)), ',')")
-        .as("codes_csv"))
-    bAssign.join(bCodes, Seq("vec_id"))
-      .select(col("vec_id"), col("cid"), col("codes_csv"))
-      .orderBy(col("vec_id"))
-  }
+      codebook: DataFrame): DataFrame =
+    ingestRows(coarseReassign(batch, cents), frozenCodes(batch, codebook))
 
   // ---- segmented index maintenance (append / delete, no retraining) ----
   //
@@ -718,14 +722,14 @@ object AnnIndex {
   def buildBaseSegment(s: SparkSession, dir: String): Unit =
     withMaintLock(dir) {
       val cat = maintCatalog(s, dir)
-      val base = Tables.table(s, dir, "embeddings")
-        .filter(pmod(col("vec_id"), lit(8)) =!= 0)
       def seg0(name: String)(df: DataFrame) =
         replace(cat, name)(df.withColumn("seg", lit("seg0"))).drop("seg")
-      val assign = coarseTrainTo(base, K, ITERS, seg0("assign"))
-      replace(cat, "centroids")(coarseCentroids(base, assign))
-      val subs = graft.sources.Checkpoints.barrier(pqSubs(base, M, SUB))
-      trainPq(subs, seg0("codes"), replace(cat, "codebook"))
+      trainIvfPq(baseRows(Tables.table(s, dir, "embeddings")), {
+        case "coarse_assign" => seg0("assign")
+        case "coarse_centroids" => replace(cat, "centroids")
+        case "pq_codes" => seg0("codes")
+        case "pq_codebook" => replace(cat, "codebook")
+      })
       publishIndex(cat, Seq("centroids", "codebook", "assign", "codes"))
       cat.vacuumVersions("index", 0)
       retain(cat, maintTables)
@@ -748,8 +752,7 @@ object AnnIndex {
       cat.insertIntoSelect(name, df.withColumn("seg", lit(seg)))
     }
     put("assign", coarseReassign(batch, at(cat, p, "centroids")))
-    put("codes", pqEncode(pqSubs(batch, M, SUB), at(cat, p, "codebook"))
-      .select(col("vec_id"), col("ss"), col("cid")))
+    put("codes", frozenCodes(batch, at(cat, p, "codebook")))
     publishIndex(cat, Seq("assign", "codes"), p)
   }
 
@@ -838,7 +841,7 @@ object AnnIndex {
     withMaintLock(dir) {
       val all = Tables.table(s, dir, "embeddings")
       buildBaseSegment(s, dir)
-      appendSegment(s, dir, all.filter(pmod(col("vec_id"), lit(8)) === 0))
+      appendSegment(s, dir, heldOut(all))
       writeTombstones(s, dir,
         all.filter(pmod(col("vec_id"), lit(5)) === 3))
       val cat = maintCatalog(s, dir)

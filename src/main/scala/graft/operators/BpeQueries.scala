@@ -24,8 +24,9 @@ import org.apache.spark.sql.functions._
   * + two-phase count + a bounded top-1 (TakeOrdered) — the only driver
   * state is the N-row merge table (the model artifact, like the ANN
   * centroids). Application is a pure per-row chain of N codegen'd
-  * replaces; document text never shuffles. Words materialize once to
-  * scratch parquet (no persist, no cache entries).
+  * replaces; document text never shuffles. The word table passes one
+  * lineage barrier (`Checkpoints.barrier`, no persist), so the
+  * CacheManager stays empty.
   */
 object BpeQueries {
   private val S = "\u0001" // symbol start (= chr(1))
@@ -81,13 +82,13 @@ object BpeQueries {
     * merge produces, same (cnt DESC, a, b) tie rule — and the driver
     * state stays the N-row merge table (the vocabulary itself never
     * collects). */
-  private[graft] def trainMerges(s: SparkSession, d: DataFrame, n: Int,
-      scratchPath: String): Seq[(String, String)] = {
+  private[graft] def trainMerges(d: DataFrame,
+      n: Int): Seq[(String, String)] = {
     val words = d
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(expr(encWordSql("word")).as("wstr"), col("freq"))
-    var vocab = AnnIndex.materialize(words, scratchPath)
+    var vocab = graft.sources.Checkpoints.barrier(words)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
     while (merges.size < n && !exhausted) {
@@ -142,8 +143,7 @@ object BpeQueries {
   val tokensBpe: QueryDef = QueryDef(
     "x_text_tokens_bpe",
     (s, dir) => {
-      val merges = trainMerges(s, docs(s, dir), N_MERGES,
-        AnnIndex.inlineScratch(dir, "bpe_words"))
+      val merges = trainMerges(docs(s, dir), N_MERGES)
       // r15: establish the doc_id output order BELOW the merge
       // application instead of a trailing orderBy. The trailing sort's
       // range-sampling pass re-executed its child — i.e. the 8-replace
@@ -184,8 +184,7 @@ object BpeQueries {
   val tokenizerCoverage: QueryDef = QueryDef(
     "x_pipeline_tokenizer_coverage",
     (s, dir) => {
-      val merges = trainMerges(s, docs(s, dir), N_MERGES,
-        AnnIndex.inlineScratch(dir, "bpe_cov_words"))
+      val merges = trainMerges(docs(s, dir), N_MERGES)
       // r15: spread below the application — the 8-replace chain over
       // every document is the report's dominant per-row compute and ran
       // on the single bench scan split's one core (the ~0.6 MB text

@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   *    query set broadcasts, and the bucket join replaces the cross join.
   */
 object VectorQueries {
+  import AnnIndex.{NPROBE, adcTopK, barrierSink, baseRows, candidateIds,
+    coarseProbes, coarseReassign, exactTopK, frozenCodes, heldOut,
+    ingestRows, ivfPqPlan, ivfPqResidualPlan, l2sqExpr, normalizedEmb,
+    probeCandidates, pqSubs, queryDtab, querySet, trainCoarse, trainIvfPq,
+    trainPq, trainResidualPq}
 
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.table(s, dir, "embeddings")
@@ -26,18 +31,7 @@ object VectorQueries {
     "x_ann_brute_topk",
     (s, dir) => {
       val corpus = emb(s, dir)
-      val queries = corpus.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      corpus.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 5)
-        .select(col("q_id"), col("rk"), col("vec_id"), col("cos"))
-        .orderBy(col("q_id"), col("rk"))
+      exactTopK(corpus, querySet(corpus), 5).orderBy(col("q_id"), col("rk"))
     },
     oracle = Some("""
       WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
@@ -108,8 +102,6 @@ object VectorQueries {
             lshBucket(col("embedding"), planes, 42L + t)): _*)))
         .withColumnRenamed("pos", "tbl")
         .withColumnRenamed("col", "bucket")
-      val queryEmb = base.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       // probe list per query: per table, the exact bucket + one-bit flips
       val probes = base.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"),
@@ -128,16 +120,7 @@ object VectorQueries {
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"))
         .distinct()
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      candIds
-        .join(base, Seq("vec_id"))
-        .join(broadcast(queryEmb), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("q_id"), col("rk"), col("vec_id"), col("cos"))
+      exactTopK(base, querySet(base), 3, Some(candIds))
         .orderBy(col("q_id"), col("rk"))
     },
     // DuckDB rebuilds the multiprobe search bit-exactly: hyperplane weights
@@ -169,10 +152,6 @@ ${LshOracleSql.cosineExpr} AS cos
   )
 
   // ---- IVF / PQ / IVF+PQ — quantizer machinery lives in AnnIndex -------
-  import AnnIndex.{coarseCentroids, coarseProbes, coarseReassign,
-    coarseTrainTo, pqEncode, pqSubs, normalizedEmb,
-    pqCodebookOf, pqTrainCodesTo, pqDtab, adcTopK, inlineScratch, l2sqExpr,
-    materialize}
 
   /** IVF-style ANN: a coarse k-means quantizer (deterministic hash init +
     * 2 Lloyd iterations, centroids always broadcast — never a shuffle of
@@ -186,29 +165,11 @@ ${LshOracleSql.cosineExpr} AS cos
   val ivfTopK: QueryDef = QueryDef(
     "x_ann_ivf_topk",
     (s, dir) => {
-      val k = 16
-      val nprobe = 4
-      val iters = 2
       val base = emb(s, dir)
-      val assign = coarseTrainTo(base, k, iters,
-        materialize(_, inlineScratch(dir, "ivf_assign")))
-      val cents = coarseCentroids(base, assign)
-      val queries = base.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val probes = coarseProbes(queries, cents, nprobe)
-      val cands = assign.join(broadcast(probes), Seq("cid"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"))
-        .distinct()
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      cands.join(base, Seq("vec_id"))
-        .join(broadcast(queries), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
-        .select(col("q_id"), col("rk"), col("vec_id"), col("cos"))
+      val (assign, cents) = trainCoarse(base, barrierSink)
+      val queries = querySet(base)
+      val probes = coarseProbes(queries, cents, NPROBE)
+      exactTopK(base, queries, 3, Some(candidateIds(assign, probes)))
         .orderBy(col("q_id"), col("rk"))
     },
     // DuckDB replays the whole quantizer: fingerprint init, two Lloyd
@@ -236,21 +197,17 @@ ${LshOracleSql.cosineExpr} AS cos
   val pqTopK: QueryDef = QueryDef(
     "x_ann_pq_topk",
     (s, dir) => {
-      val m = 16; val sub = 4; val k = 16; val iters = 2
-      val topk = 3; val nq = 10
+      val nq = 10
       val base = emb(s, dir)
-      val subs = pqSubs(base, m, sub)
-      val codes = pqTrainCodesTo(subs, sub, k, iters,
-        materialize(_, inlineScratch(dir, "pq_codes")))
-      val cents = pqCodebookOf(codes.join(subs, Seq("vec_id", "ss")), sub)
-      val dtab = pqDtab(subs.filter(col("vec_id") < nq), cents)
+      val (codes, book) = trainPq(pqSubs(base), barrierSink)
+      val dtab = queryDtab(base, book, nq)
       // PQ alone scans every corpus code per query (compression without
       // pruning); the join key (ss, cid) matches each vector's code to
       // its distance-table entry
       val pairs = codes
         .join(broadcast(dtab), Seq("ss", "cid"))
         .filter(col("vec_id") =!= col("q_id"))
-      adcTopK(pairs, base, m, topk, nq)
+      adcTopK(pairs, base, 3, nq)
     },
     // DuckDB replays the whole product quantizer: per-subspace k-means
     // with float-rounded codebooks, argmin/tie rules, the ADC distance
@@ -273,41 +230,10 @@ ${LshOracleSql.cosineExpr} AS cos
   val ivfpqTopK: QueryDef = QueryDef(
     "x_ann_ivfpq_topk",
     (s, dir) => {
-      val k = 16; val nprobe = 4
-      val m = 16; val sub = 4; val kpq = 16
-      val iters = 2; val topk = 3; val nq = 10
       val base = emb(s, dir)
-      // r16 (guide §2.6): the coarse and PQ trainings are independent
-      // chains of short jobs — overlap them on two driver threads (same
-      // rationale and safety argument as AnnIndex.build)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val coarseF = Future {
-        coarseTrainTo(base, k, iters,
-          materialize(_, inlineScratch(dir, "ivfpq_assign")))
-      }
-      val subs = pqSubs(base, m, sub)
-      val codesF = Future {
-        pqTrainCodesTo(subs, sub, kpq, iters,
-          materialize(_, inlineScratch(dir, "ivfpq_codes")))
-      }
-      val coarse = Await.result(coarseF, Duration.Inf)
-      val codes = Await.result(codesF, Duration.Inf)
-      val coarseCents = coarseCentroids(base, coarse)
-      val queries = base.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val probes = coarseProbes(queries, coarseCents, nprobe)
-      val cands = coarse.join(broadcast(probes), Seq("cid"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"))
-        .distinct()
-      val cents = pqCodebookOf(codes.join(subs, Seq("vec_id", "ss")), sub)
-      val dtab = pqDtab(subs.filter(col("vec_id") < nq), cents)
-      val pairs = cands
-        .join(codes, Seq("vec_id"))
-        .join(broadcast(dtab), Seq("q_id", "ss", "cid"))
-      adcTopK(pairs, base, m, topk, nq)
+      val t = trainIvfPq(base, barrierSink)
+      ivfPqPlan(base, t.cents, t.assign, t.book, t.codes,
+        nprobe = NPROBE, topk = 3, nq = 10)
     },
     // DuckDB replays the composed index: the coarse chain's candidate
     // pairs feed the PQ chain's ADC tail (see IvfPqOracleSql)
@@ -361,16 +287,8 @@ ${LshOracleSql.cosineExpr} AS cos
     "x_ann_index_ingest",
     (s, dir) => {
       val all = emb(s, dir)
-      val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
-      val batch = all.filter(pmod(col("vec_id"), lit(8)) === 0)
-      val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-        materialize(_, inlineScratch(dir, "ingest_assign")))
-      val centsB = coarseCentroids(base, assignB)
-      val subsB = pqSubs(base, 16, 4)
-      val codesB = pqTrainCodesTo(subsB, 4, 16, 2,
-        materialize(_, inlineScratch(dir, "ingest_codes")))
-      val bookB = pqCodebookOf(codesB.join(subsB, Seq("vec_id", "ss")), 4)
-      AnnIndex.ingestEncode(batch, centsB, bookB)
+      val t = trainIvfPq(baseRows(all), barrierSink)
+      AnnIndex.ingestEncode(heldOut(all), t.cents, t.book)
     },
     oracle = Some(IvfPqOracleSql.ingestSql(k = 16, m = 16, sub = 4,
       kpq = 16, iters = 2))
@@ -388,28 +306,15 @@ ${LshOracleSql.cosineExpr} AS cos
     "x_stream_ann_ingest",
     (s, dir) => {
       val all = emb(s, dir)
-      val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
-      val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-        materialize(_, inlineScratch(dir, "s_ing_assign")))
-      val centsB = coarseCentroids(base, assignB)
-      val subsB = pqSubs(base, 16, 4)
-      val codesB = pqTrainCodesTo(subsB, 4, 16, 2,
-        materialize(_, inlineScratch(dir, "s_ing_codes")))
-      val bookB = pqCodebookOf(codesB.join(subsB, Seq("vec_id", "ss")), 4)
+      // the tiny artifacts (16 centroids, 64 codebook rows) come back
+      // from their sink frozen: the stream encodes against materialized
+      // artifacts, as the production arrival path does against what a
+      // build job persisted — a stream whose broadcast side is a live
+      // training AGGREGATION would re-evaluate it per micro-batch
+      val t = trainIvfPq(baseRows(all), barrierSink)
       val tmp = DdlDmlQueries.scratch("stream_ann_ingest")
-      // freeze the tiny artifacts (16 centroids, 64 codebook rows) to
-      // parquet ONCE and stream against the persisted copies: the
-      // production arrival path encodes against artifacts a build job
-      // persisted, not against live training lineage — and a stream
-      // whose broadcast side is a training AGGREGATION re-evaluates it
-      // per micro-batch (this query carried two such re-evaluations,
-      // the bulk of its sweep-tail cost)
-      centsB.write.mode("overwrite").parquet(s"$tmp/cents")
-      bookB.write.mode("overwrite").parquet(s"$tmp/book")
-      val centsF = s.read.parquet(s"$tmp/cents")
-      val bookF = s.read.parquet(s"$tmp/book")
-      all.filter(pmod(col("vec_id"), lit(8)) === 0)
-        .repartition(4).write.mode("overwrite").parquet(s"$tmp/src")
+      heldOut(all).repartition(4).write.mode("overwrite")
+        .parquet(s"$tmp/src")
       val schema = all.schema
       def startStream(out: String)(f: DataFrame => DataFrame) =
         f(s.readStream.schema(schema).parquet(s"$tmp/src"))
@@ -422,10 +327,8 @@ ${LshOracleSql.cosineExpr} AS cos
       // arrival stream (separate checkpoints, stateless maps) — run
       // them CONCURRENTLY, as a deployment would; serially they were
       // the bulk of this entry's sweep-tail cost
-      val q1 = startStream("coarse")(st => coarseReassign(st, centsF))
-      val q2 = startStream("codes")(st =>
-        pqEncode(pqSubs(st, 16, 4), bookF)
-          .select(col("vec_id"), col("ss"), col("cid")))
+      val q1 = startStream("coarse")(st => coarseReassign(st, t.cents))
+      val q2 = startStream("codes")(frozenCodes(_, t.book))
       // a failure in either await must not LEAK the other query: an
       // orphaned active stream keeps writing under a scratch dir the
       // next rep wipes, and persists in the shared session
@@ -436,15 +339,8 @@ ${LshOracleSql.cosineExpr} AS cos
         if (q1.isActive) q1.stop()
         if (q2.isActive) q2.stop()
       }
-      val codes = s.read.parquet(s"$tmp/codes")
-        .groupBy(col("vec_id"))
-        .agg(expr(
-          "array_join(transform(sort_array(collect_list(struct(ss, cid))), "
-            + "x -> cast(x.cid as string)), ',')").as("codes_csv"))
-      s.read.parquet(s"$tmp/coarse")
-        .join(codes, Seq("vec_id"))
-        .select(col("vec_id"), col("cid"), col("codes_csv"))
-        .orderBy(col("vec_id"))
+      ingestRows(s.read.parquet(s"$tmp/coarse"),
+        s.read.parquet(s"$tmp/codes"))
     },
     oracle = Some(IvfPqOracleSql.ingestSql(k = 16, m = 16, sub = 4,
       kpq = 16, iters = 2))
@@ -471,25 +367,15 @@ ${LshOracleSql.cosineExpr} AS cos
     * posting-list scan via a broadcast anti-join on the ids-only
     * assignment table, never as a post-filter on scored results), then
     * runs the standard probe-pruning × ADC top-k over what remains. */
-  private def mergedIndexTopK(s: SparkSession, dir: String, tag: String,
+  private def mergedIndexTopK(s: SparkSession, dir: String,
       tomb: Option[org.apache.spark.sql.Column]): DataFrame = {
     val all = emb(s, dir)
-    val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
-    val batch = all.filter(pmod(col("vec_id"), lit(8)) === 0)
-    val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-      materialize(_, inlineScratch(dir, s"${tag}_assign")))
-    val centsB = coarseCentroids(base, assignB)
-    val subsB = pqSubs(base, 16, 4)
-    val codesB = pqTrainCodesTo(subsB, 4, 16, 2,
-      materialize(_, inlineScratch(dir, s"${tag}_codes")))
-    val bookB = pqCodebookOf(codesB.join(subsB, Seq("vec_id", "ss")), 4)
+    val batch = heldOut(all)
+    val t = trainIvfPq(baseRows(all), barrierSink)
     // frozen encodes of the batch (no retraining), then the merge:
     // plain unions of the posting/code lists
-    val masg0 = assignB.select(col("vec_id"), col("cid"))
-      .unionByName(coarseReassign(batch, centsB))
-    val mcode0 = codesB.select(col("vec_id"), col("ss"), col("cid"))
-      .unionByName(pqEncode(pqSubs(batch, 16, 4), bookB)
-        .select(col("vec_id"), col("ss"), col("cid")))
+    val masg0 = t.assign.unionByName(coarseReassign(batch, t.cents))
+    val mcode0 = t.codes.unionByName(frozenCodes(batch, t.book))
     val (masg, mcode) = tomb match {
       case Some(pred) =>
         val ids = all.filter(pred).select(col("vec_id"))
@@ -497,13 +383,13 @@ ${LshOracleSql.cosineExpr} AS cos
           mcode0.join(broadcast(ids), Seq("vec_id"), "left_anti"))
       case None => (masg0, mcode0)
     }
-    AnnIndex.ivfPqPlan(all, centsB, masg, bookB, mcode,
-      nprobe = 4, topk = 3, nq = 10)
+    ivfPqPlan(all, t.cents, masg, t.book, mcode,
+      nprobe = NPROBE, topk = 3, nq = 10)
   }
 
   val indexMerge: QueryDef = QueryDef(
     "x_ann_index_merge",
-    (s, dir) => mergedIndexTopK(s, dir, "merge", None),
+    (s, dir) => mergedIndexTopK(s, dir, None),
     oracle = Some(IvfPqOracleSql.mergedSql(k = 16, nprobe = 4, m = 16,
       sub = 4, kpq = 16, iters = 2, topk = 3, nq = 10))
   )
@@ -522,7 +408,7 @@ ${LshOracleSql.cosineExpr} AS cos
     * the merged chains minus the tombstones bit-exactly. */
   val indexDelete: QueryDef = QueryDef(
     "x_ann_index_delete",
-    (s, dir) => mergedIndexTopK(s, dir, "del",
+    (s, dir) => mergedIndexTopK(s, dir,
       Some(pmod(col("vec_id"), lit(5)) === 3)),
     oracle = Some(IvfPqOracleSql.mergedSql(k = 16, nprobe = 4, m = 16,
       sub = 4, kpq = 16, iters = 2, topk = 3, nq = 10,
@@ -573,29 +459,9 @@ ${LshOracleSql.cosineExpr} AS cos
       // already live (the sweep runs the maintenance row first), else
       // builds it — either way the measured recall is identical
       AnnIndex.ensureMaintained(s, dir)
-      val nq = 10; val topk = 3
-      val queries = all.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val live = all.filter(pmod(col("vec_id"), lit(5)) =!= 3)
-      val wB = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val brute = live.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(wB))
-        .filter(col("rk") <= topk)
-        .select(col("q_id"), col("vec_id"))
-      val approx = AnnIndex.maintQuery(s, dir, topk = topk, nq = nq)
-        .select(col("q_id"), col("vec_id"))
-        .withColumn("hit", lit(1L))
-      brute.join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("hit"), lit(0L))).as("hits"))
-        .withColumn("recall_at_3",
-          col("hits").cast("double") / col("n_true").cast("double"))
-        .orderBy(col("q_id"))
+      recallAt3(exactTopK(live, querySet(all), 3),
+        AnnIndex.maintQuery(s, dir, topk = 3, nq = 10), "q_id")
     },
     oracle = Some(IvfPqOracleSql.maintainedRecallSql(k = 16, nprobe = 4,
       m = 16, sub = 4, kpq = 16, iters = 2, topk = 3, nq = 10,
@@ -613,28 +479,9 @@ ${LshOracleSql.cosineExpr} AS cos
     "x_ann_recall_ivf",
     (s, dir) => {
       AnnIndex.ensureBuilt(s, dir)
-      val nq = 10; val topk = 3
       val base = emb(s, dir)
-      val queries = base.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wB = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val brute = base.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(wB))
-        .filter(col("rk") <= topk)
-        .select(col("q_id"), col("vec_id"))
-      val ivf = AnnIndex.ivfExactTopK(s, dir, topk = topk, nq = nq)
-        .withColumn("hit", lit(1L))
-      brute.join(ivf, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("hit"), lit(0L))).as("hits"))
-        .withColumn("recall_at_3",
-          col("hits").cast("double") / col("n_true").cast("double"))
-        .orderBy(col("q_id"))
+      recallAt3(exactTopK(base, querySet(base), 3),
+        AnnIndex.ivfExactTopK(s, dir, topk = 3, nq = 10), "q_id")
     },
     oracle = Some(IvfOracleSql.recallSql(k = 16, nprobe = 4, iters = 2,
       topk = 3, nq = 10))
@@ -650,47 +497,19 @@ ${LshOracleSql.cosineExpr} AS cos
     "x_ann_nprobe_sweep",
     (s, dir) => {
       AnnIndex.ensureBuilt(s, dir)
-      val nq = 10; val topk = 3; val maxProbe = 8
       val base = emb(s, dir)
       val built = AnnIndex.built(s, dir)
-      val cents = built("coarse_centroids")
-      val assign = built("coarse_assign")
-      val queries = base.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("qcos").desc, col("cid"))
-      val probesRanked = queries.crossJoin(broadcast(cents))
-        .select(col("q_id"), col("cid"),
-          cosineSim(col("q_emb"), col("centroid")).as("qcos"))
-        .withColumn("prk", row_number().over(wp))
-        .filter(col("prk") <= maxProbe)
-        .select(col("q_id"), col("cid"), col("prk"))
-      val cands = assign.join(broadcast(probesRanked), Seq("cid"))
-        .filter(col("vec_id") =!= col("q_id"))
+      val queries = querySet(base)
+      val probes = coarseProbes(queries, built("coarse_centroids"), 8)
+      val cands = probeCandidates(built("coarse_assign"), probes)
         .withColumn("np", explode(expr("array(1, 2, 4, 8)")))
         .filter(col("prk") <= col("np"))
         .select(col("np"), col("q_id"), col("vec_id"))
         .distinct()
-      val wR = Window.partitionBy(col("np"), col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val ivf = cands.join(base, Seq("vec_id"))
-        .join(broadcast(queries), Seq("q_id"))
-        .select(col("np"), col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(wR))
-        .filter(col("rk") <= topk)
+      val ivf = exactTopK(base, queries, 3, Some(cands), by = Seq("np"))
         .select(col("np"), col("q_id"), col("vec_id"))
         .withColumn("hit", lit(1L))
-      val wB = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val brute = base.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(wB))
-        .filter(col("rk") <= topk)
-        .select(col("q_id"), col("vec_id"))
-      brute
+      exactTopK(base, queries, 3).select(col("q_id"), col("vec_id"))
         .withColumn("np", explode(expr("array(1, 2, 4, 8)")))
         .join(ivf, Seq("np", "q_id", "vec_id"), "left")
         .groupBy(col("np"))
@@ -912,9 +731,7 @@ ${LshOracleSql.cosineExpr} AS cos
     "x_ann_range_search",
     (s, dir) => {
       val base = emb(s, dir)
-      val queries = base.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      base.crossJoin(broadcast(queries))
+      base.crossJoin(broadcast(querySet(base)))
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("vec_id"),
           cosineSim(col("q_emb"), col("embedding")).as("cos"))
@@ -1013,19 +830,9 @@ ${LshOracleSql.cosineExpr} AS cos
   val mrlTruncate: QueryDef = QueryDef(
     "x_ann_mrl_truncate",
     (s, dir) => {
-      val nq = 10; val topk = 3
+      val topk = 3
       val base = emb(s, dir)
-      val queries = base.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wB = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val truth = base.crossJoin(broadcast(queries))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(wB))
-        .filter(col("rk") <= topk)
-        .select(col("q_id"), col("vec_id"))
+      val queries = querySet(base)
       val wT = Window.partitionBy(col("dims"), col("q_id"))
         .orderBy(col("cos").desc, col("vec_id"))
       val trunc = base.crossJoin(broadcast(queries))
@@ -1036,17 +843,10 @@ ${LshOracleSql.cosineExpr} AS cos
             slice(col("embedding"), lit(1), col("dims"))).as("cos"))
         .withColumn("rk", row_number().over(wT))
         .filter(col("rk") <= topk)
-        .select(col("dims"), col("q_id"), col("vec_id"),
-          lit(1L).as("hit"))
-      truth
-        .withColumn("dims", explode(array(lit(8), lit(16), lit(32))))
-        .join(trunc, Seq("dims", "q_id", "vec_id"), "left")
-        .groupBy(col("dims"))
-        .agg(count(lit(1)).as("n_true"),
-          sum(coalesce(col("hit"), lit(0L))).as("hits"))
-        .withColumn("recall_at_3",
-          col("hits").cast("double") / col("n_true").cast("double"))
-        .orderBy(col("dims"))
+        .select(col("dims"), col("q_id"), col("vec_id"))
+      recallAt3(exactTopK(base, queries, topk)
+        .withColumn("dims", explode(array(lit(8), lit(16), lit(32)))),
+        trunc, "dims")
     },
     oracle = Some("""
       WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
@@ -1098,14 +898,11 @@ ${LshOracleSql.cosineExpr} AS cos
     "x_ann_centroid_drift",
     (s, dir) => {
       val all = emb(s, dir)
-      val base = all.filter(pmod(col("vec_id"), lit(8)) =!= 0)
-      val batch = all.filter(pmod(col("vec_id"), lit(8)) === 0)
-      val assignB = AnnIndex.coarseTrainTo(base, 16, 2,
-        materialize(_, inlineScratch(dir, "drift_assign")))
-      val cents = coarseCentroids(base, assignB)
+      val base = baseRows(all)
+      val (_, cents) = trainCoarse(base, barrierSink)
       val nb = coarseReassign(base, cents).groupBy(col("cid"))
         .agg(count(lit(1)).as("nb"))
-      val nn = coarseReassign(batch, cents).groupBy(col("cid"))
+      val nn = coarseReassign(heldOut(all), cents).groupBy(col("cid"))
         .agg(count(lit(1)).as("nn"))
       val spine = s.range(16).select(col("id").as("cid"))
       // occupancy totals are plain aggs broadcast back over the 16-row
@@ -1186,31 +983,13 @@ ${LshOracleSql.cosineExpr} AS cos
   val pqResidualTopK: QueryDef = QueryDef(
     "x_ann_pq_residual_topk",
     (s, dir) => {
-      val k = 16; val nprobe = 4
-      val m = 16; val sub = 4; val kpq = 16
-      val iters = 2; val topk = 3; val nq = 10
       val base = emb(s, dir)
-      val coarse = coarseTrainTo(base, k, iters,
-        materialize(_, inlineScratch(dir, "respq_assign")))
-      val coarseCents = coarseCentroids(base, coarse)
-      // shared with the persisted-index path (AnnIndex.build /
+      // the build's trainers and the indexed query's plan (AnnIndex.build /
       // ivfPqResidualQuery) — one derivation, bit-identical both ways
-      val ncen = AnnIndex.normCentroids(coarseCents)
-      val resSubs = AnnIndex.residualSubs(base, coarse, coarseCents, m, sub)
-      val codes = pqTrainCodesTo(resSubs, sub, kpq, iters,
-        materialize(_, inlineScratch(dir, "respq_codes")))
-      val book = pqCodebookOf(codes.join(resSubs, Seq("vec_id", "ss")), sub)
-      val queries = base.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val probes = coarseProbes(queries, coarseCents, nprobe)
-      val rdtab = AnnIndex.residualDtab(base, probes, ncen, book,
-        m, sub, nq)
-      val cands = coarse.join(broadcast(probes), Seq("cid"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), col("cid").as("pcid"))
-      val pairs = cands.join(codes, Seq("vec_id"))
-        .join(broadcast(rdtab), Seq("q_id", "pcid", "ss", "cid"))
-      adcTopK(pairs, base, m, topk, nq)
+      val (assign, cents) = trainCoarse(base, barrierSink)
+      val (codes, book) = trainResidualPq(base, assign, cents, barrierSink)
+      ivfPqResidualPlan(base, cents, assign, book, codes,
+        nprobe = NPROBE, topk = 3, nq = 10)
     },
     oracle = Some(ResidualPqOracleSql.sql(k = 16, nprobe = 4, m = 16,
       sub = 4, kpq = 16, iters = 2, topk = 3, nq = 10))
@@ -1249,10 +1028,9 @@ ${LshOracleSql.cosineExpr} AS cos
   val mrlRerank: QueryDef = QueryDef(
     "x_ann_mrl_rerank",
     (s, dir) => {
-      val nq = 10; val shortlist = 10; val topk = 3; val d = 8
+      val shortlist = 10; val topk = 3; val d = 8
       val base = emb(s, dir)
-      val queries = base.filter(col("vec_id") < nq)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val queries = querySet(base)
       val wS = Window.partitionBy(col("q_id"))
         .orderBy(col("dcos").desc, col("vec_id"))
       val short = base.crossJoin(broadcast(queries))
@@ -1263,15 +1041,7 @@ ${LshOracleSql.cosineExpr} AS cos
         .withColumn("srk", row_number().over(wS))
         .filter(col("srk") <= shortlist)
         .select(col("q_id"), col("vec_id"))
-      val wR = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      short.join(base, Seq("vec_id"))
-        .join(broadcast(queries), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          cosineSim(col("q_emb"), col("embedding")).as("cos"))
-        .withColumn("rk", row_number().over(wR))
-        .filter(col("rk") <= topk)
-        .select(col("q_id"), col("rk"), col("vec_id"), col("cos"))
+      exactTopK(base, queries, topk, Some(short))
         .orderBy(col("q_id"), col("rk"))
     },
     oracle = Some("""
@@ -1315,9 +1085,7 @@ ${LshOracleSql.cosineExpr} AS cos
     "x_ann_ood_detection",
     (s, dir) => {
       val base = emb(s, dir)
-      val assign = AnnIndex.coarseTrainTo(base, 16, 2,
-        materialize(_, inlineScratch(dir, "ood_assign")))
-      val cents = coarseCentroids(base, assign)
+      val (_, cents) = trainCoarse(base, barrierSink)
       val carr = cents.groupBy()
         .agg(sort_array(collect_list(struct(col("cid"), col("centroid"))))
           .as("carr"))
@@ -1349,6 +1117,22 @@ ${LshOracleSql.cosineExpr} AS cos
       FROM best WHERE round(ccos, 6) < 0.25
       ORDER BY vec_id""")
   )
+
+  /** recall@3 per `group` value: how many of `truth`'s pairs (its q_id,
+    * vec_id and any sweep key) `found` also returns, out of how many. */
+  private def recallAt3(truth: DataFrame, found: DataFrame,
+      group: String): DataFrame = {
+    val keys = Seq("q_id", "vec_id") ++ Some(group).filter(_ != "q_id")
+    truth.select(keys.map(col): _*)
+      .join(found.select(keys.map(col): _*).withColumn("hit", lit(1L)),
+        keys, "left")
+      .groupBy(col(group))
+      .agg(count(lit(1)).as("n_true"),
+        sum(coalesce(col("hit"), lit(0L))).as("hits"))
+      .withColumn("recall_at_3",
+        col("hits").cast("double") / col("n_true").cast("double"))
+      .orderBy(col(group))
+  }
 
   def defs: Seq[QueryDef] = Seq(bruteTopK, distanceBattery, lshTopK, ivfTopK,
     pqTopK, ivfpqTopK, indexBuild, ivfpqIndexed, indexIngest, streamIngest,

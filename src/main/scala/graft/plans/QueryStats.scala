@@ -135,15 +135,13 @@ object QueryStats {
     if (entries.isEmpty) return
     val cat = new Catalog(spark, root)
     TableLocks.withLock(root, tableName) {
-      // attach INSIDE the lock: an attach taken before it would carry a
-      // pre-lock table listing, letting two recorders racing a fresh
-      // history root both pass the missing check — the loser's
-      // createTable (SaveMode.Overwrite) would clobber the winner's
-      // just-inserted batch. Scoped to THIS table only (attachOne): a
-      // full attach() acquires OTHER tables' locks for crash recovery,
-      // which is a cross-process lock-order inversion with any writer
-      // that holds a data-table lock and then records history —
-      // surfacing as spurious 60 s lock timeouts on shared roots.
+      // check-and-create INSIDE the lock: a check taken before it would
+      // let two recorders racing a fresh history root both find no
+      // table, and the loser's createTable would throw "table ... already
+      // exists" (create refuses an existing table under the same lock).
+      // Scoped to THIS table (attachOne): a full attach() would also
+      // register every other table and view under the root, which one
+      // recorded batch has no use for.
       if (!cat.attachOne(tableName))
         cat.createTable(tableName, schema)
       val rows = entries.map(e =>

@@ -492,10 +492,24 @@ class VectorTextSpec extends GraftSuite {
       s"${root.get} outlived the JVM that owned it")
   }
 
+  test("a composed ANN query built twice leaves the first build readable") {
+    // each construction trains into its own barriers: building the query
+    // again must not overwrite the training state the first DataFrame
+    // reads
+    for (q <- Seq(operators.VectorQueries.ivfTopK,
+        operators.VectorQueries.pqResidualTopK)) {
+      val first = q.run(spark, sf)
+      val second = q.run(spark, sf)
+      assert(first.collect().map(_.toSeq).toSeq ==
+        second.collect().map(_.toSeq).toSeq,
+        s"${q.name}: the first build diverged from the second")
+    }
+  }
+
   test("ANN queries leave the block-manager cache empty") {
     // two trainings back-to-back in one session: a library caller must
-    // not accumulate cached assignment blocks (materialization goes
-    // through scratch parquet, never persist())
+    // not accumulate cached plans (training state goes through lineage
+    // barriers, never persist())
     for (q <- Seq(operators.VectorQueries.ivfTopK,
         operators.VectorQueries.pqTopK)) {
       q.run(spark, sf).collect()
@@ -530,9 +544,7 @@ class VectorTextSpec extends GraftSuite {
     //                                       → merge (a,b)
     //   round 3: (aa,ab)=3 > (aa,b)=2       → merge (aa,ab)
     val d = Seq((1L, "aaab aaab aaab aab aab")).toDF("doc_id", "text")
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_bpe").toString
-    val merges = operators.BpeQueries.trainMerges(spark, d, 3, s"$scratch/w")
+    val merges = operators.BpeQueries.trainMerges(d, 3)
     assert(merges == Seq(("a", "a"), ("a", "b"), ("aa", "ab")), merges)
   }
 
